@@ -90,13 +90,17 @@ object Engine {
     if (limit > 0) joined.limit(limit) else joined
   }
 
+  /** One mapper for every parse: an `ObjectMapper` is thread-safe once
+    * configured, and this one is never reconfigured.
+    */
+  private val JsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** Minimal JSON parser for the reference's query format using Jackson
     * (already on the Spark classpath). Accepts `[{"subj":…,"pred":…,
     * "obj":…,"lang":…,"author":…}, …]`; unknown keys rejected.
     */
   def parseJsonQuery(json: String): ArrayOp = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(json)
+    val root = JsonMapper.readTree(json)
     require(root.isArray, s"query must be a JSON array of partial triples")
     val allowed = Set("subj", "pred", "obj", "lang", "author")
     val patterns = (0 until root.size()).map { i =>

@@ -2,8 +2,9 @@ package graft.store
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import org.apache.spark.util.sketch.BloomFilter
 
 import graft.expr.PatternCompiler
@@ -26,6 +27,29 @@ import graft.model.{ArrayOp, Keyspace, Triple}
   *  - Inserts dedup via a left-anti join on (subj,pred,obj) — the
   *    unique-index semantics of triplestore.go:134-148 — shuffled on the
   *    identity key, never collected to the driver.
+  *  - The parquet relation (file index plus the fixed [[StoreSchema]]) is
+  *    resolved once and reused by every read — the reference opens its
+  *    SQLite shard once (triplestore.go:35-44) and runs each query on the
+  *    open handle. Resolving lists the store's directories (a Spark job
+  *    past 32 bucket directories); reusing the relation means a read
+  *    builds its DataFrame with no listing and no job, and a rooted
+  *    query's `bucket IN (…)` still prunes in the resolved file index.
+  *    The relation is shared by every instance on the same qualified path
+  *    in the process, so two instances see each other's writes.
+  *
+  * Relation-reuse contract, like Spark's `REFRESH TABLE`:
+  *  - every write through a store (`insert` and everything built on it:
+  *    `insertSigned`, `syncFrom`, `syncFromSliced`, `sync`, streaming
+  *    ingest) drops the relation once its files are written; `compact`
+  *    drops it before and after its rename swap. The next read resolves
+  *    the files anew.
+  *  - a writer outside this process, or one writing to the path without
+  *    going through a store, must be followed by [[refresh]]; until then
+  *    reads see the files as of the last resolve.
+  *  - a DataFrame keeps the files it was built on. One built before an
+  *    insert reads the store without the insert's rows; one built before
+  *    a `compact` still points at the pre-compaction files, which the
+  *    swap removes, so executing it afterwards fails.
   */
 final class TripleStore(
     val spark: SparkSession,
@@ -41,15 +65,33 @@ final class TripleStore(
     fs.exists(p) && fs.listStatus(p).nonEmpty
   }
 
-  /** All triples, logical schema only (bucket column dropped). */
-  def all: DataFrame =
-    if (exists) spark.read.parquet(path).select(Triple.columns.map(col): _*)
-    else emptyTriples(spark)
+  /** Cache key of this store's relation: the fully qualified path, so
+    * spellings of one directory share an entry.
+    */
+  private val qualifiedPath: String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString
+  }
 
-  /** Raw read including the `bucket` partition column. */
+  /** All triples, logical schema only (bucket column dropped). */
+  def all: DataFrame = raw.select(Triple.columns.map(col): _*)
+
+  /** Raw read including the `bucket` partition column: the resolved
+    * relation, shared until the next write or [[refresh]].
+    */
   def raw: DataFrame =
-    if (exists) spark.read.parquet(path)
-    else emptyTriples(spark).withColumn("bucket", bucketCol)
+    relations(spark, qualifiedPath) {
+      if (exists) spark.read.schema(StoreSchema).parquet(path)
+      else emptyTriples(spark).withColumn("bucket", bucketCol)
+    }
+
+  /** Drop the resolved relation, so the next read lists the store's files
+    * again — Spark's `REFRESH TABLE` for this path. Call it after files
+    * under the path changed without going through a store in this
+    * process (another process, or a plain `df.write`). Every store on the
+    * path, in every session, sees the refreshed files.
+    */
+  def refresh(): Unit = relations.drop(qualifiedPath)
 
   /** Insert with (subj,pred,obj) dedup; returns the number actually
     * inserted (reference: triplestore/triplestore.go:134-148 — unique
@@ -82,12 +124,15 @@ final class TripleStore(
   }
 
   // One shuffle: co-partition by bucket so each task writes one
-  // directory; sort within partitions for row-group stat pruning.
+  // directory; sort within partitions for row-group stat pruning. The
+  // relation is dropped even when the write fails part-way, since some
+  // files may have landed.
   private def writeBuckets(toWrite: DataFrame): Unit =
-    toWrite
+    try toWrite
       .repartition(numBuckets, col("bucket"))
       .sortWithinPartitions("subj", "pred", "obj")
       .write.mode("append").partitionBy("bucket").parquet(path)
+    finally refresh()
 
   /** Pattern/ArrayOp query with optional limit (reference:
     * triplestore/triplestore.go:49-77). `limit <= 0` = unlimited.
@@ -98,13 +143,13 @@ final class TripleStore(
   def query(op: ArrayOp, limit: Int = -1): DataFrame = {
     val pred = PatternCompiler.compile(op)
     val base = PatternCompiler.prunedBuckets(op, numBuckets) match {
-      case Some(buckets) if exists =>
+      case Some(buckets) =>
         // Rooted query: prune to the owning buckets (replaces the
         // reference's keyspace peer routing, core/query.go:78-106).
-        spark.read.parquet(path)
+        raw
           .filter(col("bucket").isin(buckets.toSeq: _*))
           .select(Triple.columns.map(col): _*)
-      case _ => all
+      case None => all
     }
     val filtered = base.filter(pred)
     if (limit > 0) filtered.limit(limit) else filtered
@@ -294,7 +339,6 @@ final class TripleStore(
     */
   private def sliceBlooms(slices: Seq[graft.model.Keyspace],
       fpp: Double = TripleStore.ReferenceFpp): Array[BloomFilter] = {
-    import org.apache.spark.sql.Encoders
     val total = metadataRowCount
     val caps = slices.map { ks =>
       val magU = (ks.mag >>> 1).toDouble * 2.0 + (ks.mag & 1L).toDouble
@@ -377,12 +421,17 @@ final class TripleStore(
       .option("parquet.block.size", 8L << 20)
       .partitionBy("bucket").parquet(t.toString)
     // swap via two renames, never a delete-then-rename window: a crash
-    // between them leaves the data at .precompact, recoverable — not gone
-    fs.rename(p, old)
-    if (!fs.rename(t, p)) {
-      fs.rename(old, p) // roll back
-      throw new java.io.IOException(s"compact: rename $t -> $p failed; rolled back")
-    }
+    // between them leaves the data at .precompact, recoverable — not gone.
+    // The relation is dropped on both sides of the swap: a read resolved
+    // mid-swap may have listed a missing or half-moved store.
+    refresh()
+    try {
+      fs.rename(p, old)
+      if (!fs.rename(t, p)) {
+        fs.rename(old, p) // roll back
+        throw new java.io.IOException(s"compact: rename $t -> $p failed; rolled back")
+      }
+    } finally refresh()
     fs.delete(old, true)
   }
 
@@ -415,6 +464,48 @@ object TripleStore {
     */
   val SyncBroadcastCeiling: Long = 256L << 20
 
+  /** The store's on-disk schema: the [[Triple]] columns, then the `bucket`
+    * partition column — what parquet schema inference yields for a
+    * written store (file-source columns are always nullable). Reading
+    * with it skips inference, which reads parquet footers in a Spark job.
+    */
+  private[graft] val StoreSchema: StructType = StructType(
+    Encoders.product[Triple].schema.fields.map(_.copy(nullable = true)) :+
+      StructField("bucket", IntegerType))
+
+  /** Resolved store relations, one per (session, qualified path), shared
+    * by every store in the process. A hit is a map lookup; a miss
+    * resolves outside the lock, so a slow listing blocks no other read.
+    */
+  private object relations {
+    private val byKey = scala.collection.mutable.HashMap.empty[(SparkSession, String), DataFrame]
+    // bumped by every drop: a resolve that overlapped a drop may have
+    // listed a half-written store, so it serves its caller but is not kept
+    private var generation = 0L
+
+    def apply(spark: SparkSession, path: String)(resolve: => DataFrame): DataFrame = {
+      val key = (spark, path)
+      val (hit, seen) = synchronized((byKey.get(key), generation))
+      hit.getOrElse {
+        val df = resolve
+        synchronized {
+          if (generation != seen) df
+          else {
+            // a process that stops and starts sessions must not keep
+            // the dead sessions' relations alive
+            byKey.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
+            byKey.getOrElseUpdate(key, df)
+          }
+        }
+      }
+    }
+
+    def drop(path: String): Unit = synchronized {
+      generation += 1
+      byKey.filterInPlace((k, _) => k._2 != path)
+    }
+  }
+
   /** Predicted bloom size for `n` keys at `fpp` — the optimal-bits
     * formula (`−n·ln fpp / ln²2`, what `BloomFilter.create(n, fpp)`
     * allocates), in bytes. Driver-side arithmetic only.
@@ -440,7 +531,6 @@ object TripleStore {
     */
   private[graft] def bloomOnePass(keyed: DataFrame, bound: Long,
       fpp: Double): BloomFilter = {
-    import org.apache.spark.sql.Encoders
     val keys = keyed.na.drop().as[String](Encoders.STRING).rdd
     val cap = math.max(bound, MinBloomItems)
     val (n, bf) = keys.treeAggregate((0L, BloomFilter.create(cap, fpp)))(

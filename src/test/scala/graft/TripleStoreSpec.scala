@@ -1,5 +1,13 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.lit
+
 import graft.engine.Engine
 import graft.model.{ArrayOp, Triple, TriplePattern}
 import graft.store.TripleStore
@@ -358,5 +366,153 @@ class TripleStoreSpec extends SparkSpecBase {
       .queryExecution.executedPlan.toString
     // the scan must carry a partition filter on bucket
     assert(plan.contains("PartitionFilters") || plan.contains("bucket"))
+  }
+
+  // ---- relation reuse: freshness, coherence, concurrency, zero jobs ----
+
+  /** Spark jobs that `body` starts on this thread. A marker job in its own
+    * group runs afterwards: listener events arrive in order, so once the
+    * marker's start is seen every job of `body` has been counted.
+    */
+  def jobsRunBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID}"
+    val marker = s"$group-marker"
+    val counted = new AtomicInteger
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => counted.incrementAndGet()
+          case `marker` => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job never reached the listener")
+      counted.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("the fixed store schema equals the schema parquet infers for a written store") {
+    val st = loaded()
+    assert(TripleStore.StoreSchema == spark.read.parquet(st.path).schema)
+    assert(st.raw.schema == TripleStore.StoreSchema)
+  }
+
+  test("insert after a read: query and count see the new rows") {
+    import spark.implicits._
+    val st = loaded()
+    val root = ArrayOp.of(TriplePattern(subj = Some("/m/0new")))
+    assert(st.count() == 4 && st.query(root).count() == 0)
+    assert(st.insert(Seq(Triple("/m/0new", "/type/object/name", "New")).toDF()) == 1)
+    assert(st.count() == 5)
+    assert(spo(st.query(root)) == Set(("/m/0new", "/type/object/name", "New")))
+    assert(st.query(ArrayOp.of(TriplePattern(pred = Some("/type/object/name")))).count() == 3)
+  }
+
+  test("compact after a read: all returns the same triples from the new files") {
+    import spark.implicits._
+    val st = freshStore(buckets = 4)
+    (0 until 2).foreach { b =>
+      st.insert((0 until 10).map(i => Triple(s"s${b}_$i", "p", s"o$i")).toDF())
+    }
+    val before = st.all.collect().map(_.toString).toSet
+    st.compact()
+    // a stale relation would list the moved-away append files
+    assert(st.all.collect().map(_.toString).toSet == before)
+    assert(st.query(ArrayOp.of(TriplePattern(subj = Some("s1_3")))).count() == 1)
+  }
+
+  test("a write through one store is visible to a second store on the same path") {
+    import spark.implicits._
+    val a = loaded()
+    // another spelling of the same directory shares the relation
+    val b = new TripleStore(spark, "file:" + a.path, 8)
+    assert(b.count() == 4)
+    assert(a.insert(Seq(Triple("/m/0new", "p", "o")).toDF()) == 1)
+    assert(b.count() == 5)
+    assert(b.query(ArrayOp.of(TriplePattern(subj = Some("/m/0new")))).count() == 1)
+  }
+
+  test("refresh picks up files written to the path without a store") {
+    import spark.implicits._
+    val st = loaded()
+    assert(st.count() == 4)
+    Seq(Triple("/m/0new", "p", "o")).toDF()
+      .withColumn("bucket", lit(TripleStore.bucketOf("/m/0new", 8)))
+      .write.mode("append").partitionBy("bucket").parquet(st.path)
+    // reads keep the resolved relation until told otherwise
+    assert(st.count() == 4)
+    st.refresh()
+    assert(st.count() == 5)
+    assert(st.query(ArrayOp.of(TriplePattern(subj = Some("/m/0new")))).count() == 1)
+  }
+
+  test("readers racing an insert see the old or the new triples and never fail") {
+    import spark.implicits._
+    val st = freshStore()
+    val old = (0 until 40).map(i => Triple(s"s$i", "p", s"o$i"))
+    val added = (0 until 40).map(i => Triple(s"t$i", "p", s"o$i"))
+    st.insert(old.toDF())
+    val oldSet = old.map(t => (t.subj, t.pred, t.obj)).toSet
+    val newSet = oldSet ++ added.map(t => (t.subj, t.pred, t.obj))
+    val inserted = new AtomicBoolean(false)
+    val seen = new ConcurrentLinkedQueue[Set[(String, String, String)]]()
+    val errors = new ConcurrentLinkedQueue[Throwable]()
+    val readers = (0 until 2).map { _ =>
+      val t = new Thread(() =>
+        try {
+          while (!inserted.get) seen.add(spo(st.all))
+          seen.add(spo(st.all)) // one read after the insert returned
+        } catch { case e: Throwable => errors.add(e) })
+      t.start()
+      t
+    }
+    try assert(st.insert(added.toDF()) == 40)
+    finally {
+      inserted.set(true)
+      readers.foreach(_.join())
+    }
+    assert(errors.isEmpty, errors.asScala.headOption.map(_.toString).getOrElse(""))
+    val sets = seen.asScala.toSeq
+    assert(sets.size >= 2)
+    assert(sets.forall(s => s == oldSet || s == newSet),
+      sets.map(_.size).distinct.mkString("set sizes seen: ", ",", ""))
+    assert(spo(st.all) == newSet)
+  }
+
+  test("building queries on a warmed store and asking for their plans runs no Spark job") {
+    import spark.implicits._
+    // 64 buckets with data in most of them: past Spark's 32-path
+    // threshold, listing the store is itself a Spark job
+    val st = freshStore(buckets = 64)
+    st.insert((0 until 400).map(i => Triple(s"n$i", "next", s"n${(i + 1) % 400}")).toDF())
+    val eng = new Engine(st)
+    def plans(): Unit = {
+      Seq(
+        st.query(ArrayOp.of(TriplePattern(subj = Some("n7")))),
+        st.query(ArrayOp.of(TriplePattern(pred = Some("next"), obj = Some("n9")))),
+        eng.executeQuery(Seq(
+          ArrayOp.of(TriplePattern(subj = Some("n1"))),
+          ArrayOp.of(TriplePattern(pred = Some("next"))),
+          ArrayOp.of(TriplePattern(pred = Some("next"))))),
+        eng.queryJson("""[{"subj":"n3"},{"subj":"n4"}]""")
+      ).foreach(_.queryExecution.executedPlan)
+    }
+    // the counter sees the listing job of a cold resolve
+    st.refresh()
+    assert(jobsRunBy(plans()) >= 1)
+    assert(jobsRunBy(plans()) == 0)
+    // and the answers still come from the store
+    assert(spo(eng.executeQuery(Seq(
+      ArrayOp.of(TriplePattern(subj = Some("n1"))),
+      ArrayOp.of(TriplePattern(pred = Some("next"))),
+      ArrayOp.of(TriplePattern(pred = Some("next")))))) == Set(("n3", "next", "n4")))
   }
 }
