@@ -106,25 +106,22 @@ private[api] object QueriesParity {
       Some(withCte(
         "SELECT subj, pred, obj FROM triples ORDER BY subj, pred, obj LIMIT 100"))),
 
-    // Operators #18/#19 (bloom build + bloom semi-join). The bloom is
-    // FP-1e-9 over ~hundreds of keys, so it matches the exact semi-join
-    // oracle; the codegen'd probe expression mirrors
-    // triplestore/bloom.go:39-73.
+    // Operators #18/#19 (bloom build + bloom semi-join) on the store's
+    // one builder and probe (TripleStore.buildBlooms/bloomProbe, one
+    // slice). The bloom is FP-1e-9 over ~hundreds of keys, so it matches
+    // the exact semi-join oracle (triplestore/bloom.go:39-73).
     "bloom_semijoin" -> Q(
       (s, d) => {
+        val ts = graft.store.TripleStore
         val triples = Tables.starTriples(s, d)
         val wanted = triples.filter(col("pred") === "nation" && col("subj").startsWith("supp:"))
-          .select(col("obj").as("k"))
-        // one-pass build: count folded into the filter aggregate, sized
-        // at the MinBloomItems floor (one-nation-per-supplier keys stay
-        // dimension-scale; a corpus exceeding the floor triggers
-        // bloomOnePass's exact rebuild — the old two-job shape, never
-        // worse)
-        val bf = graft.store.TripleStore.bloomOnePass(
-          wanted, graft.store.TripleStore.MinBloomItems, 1e-9)
-        val bc = s.sparkContext.broadcast(bf)
+          .select(col("obj").as("k"), lit(0).as("s"))
+        // one-nation-per-supplier keys stay dimension-scale, so the cap
+        // is the MinBloomItems floor; a corpus exceeding it costs the
+        // builder's exact re-pass, never a wrong answer
+        val bf = ts.buildBlooms(wanted, Seq(ts.MinBloomItems))
         triples.filter(col("pred") === "name" &&
-          graft.functions.GraftFunctions.bloomProbe(col("subj"), bc))
+          ts.bloomProbe(s, col("subj"), lit(0), bf))
           .select("subj", "pred", "obj").orderBy("subj")
       },
       Some(withCte(

@@ -27,39 +27,15 @@ case class Murmur64Expr(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Codegen'd bloom probe over a broadcast filter — replaces the Scala
-  * UDF in the replication-diff scan path: the probe runs once per row of
-  * a full table scan, and a UDF there boxes every key and fences
-  * whole-stage codegen. Only the broadcast HANDLE is embedded in the
-  * plan (tasks fetch the filter from the block manager), so filter size
-  * doesn't bloat task binaries.
-  */
-case class BloomProbeExpr(
-    child: Expression,
-    bf: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter])
-  extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-  override def prettyName: String = "graft_bloom_probe"
-
-  override protected def nullSafeEval(v: Any): Any =
-    bf.value.mightContainString(v.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomBc", bf,
-      "org.apache.spark.broadcast.Broadcast")
-    defineCodeGen(ctx, ev, c =>
-      s"((org.apache.spark.util.sketch.BloomFilter) $ref.value()).mightContainString($c.toString())")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BloomProbeExpr =
-    copy(child = newChild)
-}
-
-/** [[BloomProbeExpr]] over an ARRAY of broadcast filters, selected per
-  * row by a slice-index column — what lets the K-slice reconciliation
-  * diff ([[graft.store.TripleStore.syncFromSliced]]) probe every slice
-  * in ONE scan of the peer instead of K filtered re-scans. Same probe
-  * semantics per slice as the single-filter expression.
+/** Codegen'd bloom probe over an ARRAY of broadcast filters, one per
+  * ring slice, selected per row by a slice-index column — the probe of
+  * every bloom path ([[graft.store.TripleStore.bloomProbe]]; a single
+  * filter is the one-element array). It replaces a Scala UDF in the
+  * replication-diff scan: the probe runs once per row of a full table
+  * scan, and a UDF there boxes every key and fences whole-stage codegen.
+  * Only the broadcast HANDLE is embedded in the plan (tasks fetch the
+  * filters from the block manager), so filter size doesn't bloat task
+  * binaries.
   */
 case class BloomProbeIndexedExpr(
     left: Expression,
@@ -136,23 +112,6 @@ object GraftFunctions {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(new org.apache.spark.sql.catalyst.expressions.IntegralDivide(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
-  }
-
-  /** Codegen'd membership probe of a broadcast bloom filter. */
-  def bloomProbe(c: Column,
-      bf: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter]): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(BloomProbeExpr(ColumnBridge.expression(c.cast("string")), bf))
-  }
-
-  /** Codegen'd per-row probe of `bfs(idx)` — see [[BloomProbeIndexedExpr]]. */
-  def bloomProbeIndexed(c: Column, idx: Column,
-      bfs: org.apache.spark.broadcast.Broadcast[
-        Array[org.apache.spark.util.sketch.BloomFilter]]): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(BloomProbeIndexedExpr(
-      ColumnBridge.expression(c.cast("string")),
-      ColumnBridge.expression(idx.cast("int")), bfs))
   }
 
   /** Canonical binary encoding of a triple's logical content — our

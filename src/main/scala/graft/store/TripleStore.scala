@@ -2,13 +2,15 @@ package graft.store
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import org.apache.spark.util.sketch.BloomFilter
 
 import graft.expr.PatternCompiler
-import graft.functions.{GraftFunctions, Murmur3x64, TripleCrypto}
+import graft.functions.{BloomProbeIndexedExpr, GraftFunctions, Murmur3x64, TripleCrypto}
 import graft.model.{ArrayOp, Keyspace, Triple}
 
 /** Parquet-backed triple store — the Spark-native replacement for the
@@ -37,9 +39,25 @@ import graft.model.{ArrayOp, Keyspace, Triple}
   *    The relation is shared by every instance on the same qualified path
   *    in the process, so two instances see each other's writes.
   *
+  * Bloom reconciliation (reference: triplestore/bloom.go:13-73, FP 1e-9
+  * at triplestore.go:18-22) has one builder, one probe and one diff, in
+  * the companion ([[TripleStore.buildBlooms]], [[TripleStore.bloomProbe]],
+  * [[TripleStore.bloomDiff]]), behind `bloom`, `triples(Not)MatchingBloom`,
+  * `syncFromSliced`, `sync` and the registry's bloom queries. The builder
+  * fills K slice filters in one scan of the local side; the probe tests
+  * each row of the other side against its slice's filter in one scan.
+  * The whole ring is the K = 1 case — slice index the constant 0, cap the
+  * exact row count from the parquet footers — and K ≥ 2 slices are equal
+  * arcs of the murmur3(subj) ring, each capped at its ring fraction
+  * ×1.25. A key's membership only needs its own slice's filter, so every
+  * K ships the same diff up to bloom false positives (~1e-9 per triple).
+  * `sync` takes the fewest slices that keep every filter under
+  * [[TripleStore.SyncBroadcastCeiling]], the broadcast unit the
+  * reference's keyspace-sharded peers reconcile by.
+  *
   * Relation-reuse contract, like Spark's `REFRESH TABLE`:
   *  - every write through a store (`insert` and everything built on it:
-  *    `insertSigned`, `syncFrom`, `syncFromSliced`, `sync`, streaming
+  *    `insertSigned`, `syncFromSliced`, `sync`, streaming
   *    ingest) drops the relation once its files are written; `compact`
   *    drops it before and after its rename swap. The next read resolves
   *    the files anew.
@@ -184,188 +202,76 @@ final class TripleStore(
 
   /** Bloom filter over canonical triple keys, optionally restricted to a
     * keyspace slice by `murmur3_64(subj)` (reference:
-    * triplestore/bloom.go:13-37; FP 1e-9 constant triplestore.go:18-22).
-    * Distributed build via `stat.bloomFilter` (BloomFilterAggregate) —
-    * no driver-side row materialization.
+    * triplestore/bloom.go:13-37; FP 1e-9 constant triplestore.go:18-22):
+    * the one-slice case of [[TripleStore.buildBlooms]].
     */
   def bloom(keyspace: Option[Keyspace] = None, fpp: Double = ReferenceFpp): BloomFilter = {
-    val slice = keyspace match {
-      case Some(ks) => all.filter(keyspaceIncludes(ks, GraftFunctions.murmur64(col("subj"))))
-      case None     => all
+    val (rows, fraction) = keyspace match {
+      case Some(ks) =>
+        (all.filter(keyspaceIncludes(ks, GraftFunctions.murmur64(col("subj")))), ringFraction(ks))
+      case None => (all, 1.0)
     }
-    val keyed = slice.select(GraftFunctions.canonicalKey().as("k"))
-    // Capacity bound from parquet footers — a driver-side metadata read,
-    // NOT a Spark job (the old shape paid a count() action before the
-    // build). Exact for the unsliced store; for a keyspace slice the
-    // bound is scaled by the slice's ring fraction (murmur3 subject
-    // hashes are uniform on the ring, so a slice holds ~mag/2⁶⁴ of the
-    // rows; 1.25× headroom absorbs sampling variance). Without the
-    // scaling a NARROW slice got a filter — and a treeAggregate zero
-    // value serialized to every partition — sized for the whole store.
-    // A bound miss is safe either way: bloomOnePass counts as it builds
-    // and falls back to an exact-size rebuild if the bound is exceeded.
-    val bound = keyspace match {
-      case Some(ks) if !ks.maxed =>
-        val magU = (ks.mag >>> 1).toDouble * 2.0 + (ks.mag & 1L).toDouble
-        math.ceil(metadataRowCount * (magU / math.pow(2.0, 64)) * 1.25).toLong
-      case _ => metadataRowCount
-    }
-    TripleStore.bloomOnePass(keyed, bound, fpp)
+    buildBlooms(rows.select(GraftFunctions.canonicalKey().as("k"), lit(0).as("s")),
+      Seq(sliceCap(metadataRowCount, fraction)), fpp).head
   }
 
   /** Exact store row count summed from parquet footers on the driver —
-    * metadata IO only, no executor job, no column data read.
+    * metadata IO only, no executor job, no column data read. Like Spark's
+    * file listing it skips every path whose name starts with `_` or `.`
+    * (the `_temporary/…` files of an in-flight or killed append), so it
+    * counts exactly the rows a read of the store sees.
     */
   private def metadataRowCount: Long = {
     if (!exists) return 0L
-    val p = new org.apache.hadoop.fs.Path(path)
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = p.getFileSystem(conf)
-    val it = fs.listFiles(p, true)
-    var n = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-        try n += r.getRecordCount finally r.close()
-      }
-    }
-    n
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(conf)
+    val visible: org.apache.hadoop.fs.PathFilter =
+      p => !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    def rows(dir: org.apache.hadoop.fs.Path): Long =
+      fs.listStatus(dir, visible).iterator.map { f =>
+        if (f.isDirectory) rows(f.getPath)
+        else if (!f.getPath.getName.endsWith(".parquet")) 0L
+        else {
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+          try r.getRecordCount finally r.close()
+        }
+      }.sum
+    rows(root)
   }
 
   /** Triples whose canonical key tests positive in `filter` — the
     * replication-diff probe (reference: triplestore/bloom.go:39-73).
-    * The filter is broadcast; the probe is a map-side scan, no shuffle.
     */
-  def triplesMatchingBloom(filter: BloomFilter): DataFrame = {
-    val bcast = spark.sparkContext.broadcast(filter)
-    all.filter(GraftFunctions.bloomProbe(GraftFunctions.canonicalKey(), bcast))
-  }
+  def triplesMatchingBloom(filter: BloomFilter): DataFrame =
+    all.filter(bloomProbe(spark, GraftFunctions.canonicalKey(), lit(0), Array(filter)))
 
   /** Replication diff: triples whose canonical key does NOT test
     * positive in the peer's filter — what the peer is missing. The
     * reference declares the positive probe but never ships the diff
-    * (replication is a TODO there); this is the missing half. A bloom
-    * false positive silently skips a triple, which at the reference's
-    * 1e-9 fpp is ~one triple per 10⁹ — `sync` composes this with the
-    * exact anti-join insert, so even that residue converges on the next
-    * round. Broadcast filter, map-side probe, no shuffle.
+    * (replication is a TODO there); this is the missing half.
     */
-  def triplesNotMatchingBloom(filter: BloomFilter): DataFrame = {
-    val bcast = spark.sparkContext.broadcast(filter)
-    all.filter(!GraftFunctions.bloomProbe(GraftFunctions.canonicalKey(), bcast))
-  }
+  def triplesNotMatchingBloom(filter: BloomFilter): DataFrame =
+    all.filter(!bloomProbe(spark, GraftFunctions.canonicalKey(), lit(0), Array(filter)))
 
-  /** One replication round INTO this store from `peer`: ship the triples
-    * the peer computes as missing from our bloom, land them through the
-    * dedup insert. Returns the number actually inserted. The wire cost
-    * is |diff| triples + one ~53 KB filter — the reference's intended
-    * bloom-reconciliation economics (triplestore/triplestore.go:18-22).
+  /** One replication round INTO this store from `peer`, in the fewest
+    * ring slices that keep every slice's filter under
+    * [[TripleStore.SyncBroadcastCeiling]] ([[TripleStore.syncSliceCount]]
+    * off the parquet footers: one slice up to ~5·10⁷ triples, 6 at 2·10⁸).
+    * Returns the number actually inserted.
     */
-  def syncFrom(peer: TripleStore): Long =
-    insert(peer.triplesNotMatchingBloom(bloom()))
+  def sync(peer: TripleStore): Long = syncFromSliced(peer, syncSliceCount(metadataRowCount))
 
-  /** Store-size-aware sync: [[syncFrom]] while the predicted full-ring
-    * filter fits under `broadcastCeiling`, [[syncFromSliced]] with just
-    * enough slices past it — the same scheduled-escalation discipline as
-    * [[graft.ops.Dedup.embeddingNearDupsAuto]] (LSH→PQ past the
-    * occupancy knee) and the Lloyd trainer's driver→frame switch. The
-    * size model is the textbook optimal-bits formula Spark's own
-    * `BloomFilter.create` uses (−n·ln fpp / ln²2 bits), so the schedule
-    * is a driver-side arithmetic decision off the parquet footers — no
-    * scan, no filter built to be measured. At the reference's 1e-9
-    * constant that is ~5.39 B/key: the default 256 MB ceiling flips to
-    * sliced at ~4.7·10⁷ triples and schedules k ≈ bytes/ceiling slices
-    * (40 at 10⁹ triples — each slice's filter back under the ceiling,
-    * which is the broadcast/wire unit the reference's keyspace-sharded
-    * peers reconcile by). Both branches ship the identical diff row set
-    * (TripleStoreSpec gates them against the same exact set difference,
-    * and `tp_sync_diff_sliced` hash-matches `tp_sync_diff`'s oracle), so
-    * the switch is a cost decision, never a semantics one.
+  /** One replication round INTO this store from `peer` in `k` ring
+    * slices ([[TripleStore.ringSlices]]; `k = 1` is the whole ring): the
+    * peer's triples that miss this store's filter for their slice, landed
+    * through the dedup insert. Returns the number actually inserted.
     */
-  def sync(peer: TripleStore,
-      broadcastCeiling: Long = TripleStore.SyncBroadcastCeiling): Long = {
-    val n = math.max(metadataRowCount, TripleStore.MinBloomItems)
-    val bytes = TripleStore.predictedBloomBytes(n, TripleStore.ReferenceFpp)
-    val k = ((bytes + broadcastCeiling - 1) / broadcastCeiling).toInt
-    if (k <= 1) syncFrom(peer) else syncFromSliced(peer, math.max(2, k))
-  }
-
-  /** [[syncFrom]] in K ring slices — the past-broadcast-ceiling form:
-    * the full-ring 1e-9-FPP filter is ~5.14 MB per 10⁶ triples (the
-    * reference's constant, triplestore/triplestore.go:18-22), i.e. a
-    * multi-GB broadcast at 10⁹+; slicing the ring gives each slice its
-    * own 1/K-fraction-sized filter ([[bloom]] already sizes by ring
-    * fraction), so no single broadcast exceeds fullBloom/K and slices
-    * can ship/reconcile independently (the reference's keyspace-sharded
-    * peers do exactly this per node). A triple's membership probe only
-    * ever needs the filter of the slice its subject hashes into, so the
-    * union of slice diffs EQUALS the full-ring diff row-for-row up to
-    * bloom false positives (~1e-9, and those converge on the next
-    * round, as in [[syncFrom]]); gated by the same exact set-difference
-    * oracle in TripleStoreSpec and, on the md5 ring, by
-    * `tp_sync_diff_sliced` against `tp_sync_diff`'s oracle.
-    */
-  def syncFromSliced(peer: TripleStore, k: Int = 8): Long = {
-    // two explicit half-ring intervals, not Keyspace.maxed: the maxed
-    // encoding (end = start−1) excludes the single position start−1
-    // from membership, so its slices would silently skip a subject
-    // hashing exactly there; the two halves tile ALL 2⁶⁴ positions
-    val halves = Seq(graft.model.Keyspace(0L, Long.MinValue),
-      graft.model.Keyspace(Long.MinValue, 0L))
-    val slices = halves.flatMap(_.slices(math.max(1, k / 2)))
-    // ONE pass each side (measured at 100×: the per-slice form re-scanned
-    // BOTH stores K times — 27.9 s vs the full-ring diff's 13.3 s): all
-    // K filters aggregate in one scan of this store, and one scan of the
-    // peer routes every row to its slice's filter by index. No broadcast
-    // exceeds fullBloom/K, which was the whole point of slicing.
-    val bc = spark.sparkContext.broadcast(sliceBlooms(slices))
-    val missing = peer.all
-      .withColumn("__h", GraftFunctions.murmur64(col("subj")))
-      .withColumn("__s", TripleStore.sliceIdCol(slices, col("__h")))
-      .filter(!GraftFunctions.bloomProbeIndexed(
-        GraftFunctions.canonicalKey(), col("__s"), bc))
-      .drop("__h", "__s")
-    insert(missing)
-  }
-
-  /** All K slice filters in ONE scan of the store: the keyed scan
-    * treeAggregates an ARRAY of per-slice blooms (element-wise merge) —
-    * same total filter bytes as the full-ring build, 1/K of the scan
-    * cost of building each slice separately. Each slice's filter uses
-    * the SAME ring-fraction cap, fpp, and exact-size-rebuild-on-bound-
-    * miss semantics as `bloom(Some(slice))`.
-    */
-  private def sliceBlooms(slices: Seq[graft.model.Keyspace],
-      fpp: Double = TripleStore.ReferenceFpp): Array[BloomFilter] = {
-    val total = metadataRowCount
-    val caps = slices.map { ks =>
-      val magU = (ks.mag >>> 1).toDouble * 2.0 + (ks.mag & 1L).toDouble
-      math.max(
-        math.ceil(total * (magU / math.pow(2.0, 64)) * 1.25).toLong,
-        TripleStore.MinBloomItems)
-    }.toArray
-    val keyed = all.select(GraftFunctions.canonicalKey().as("k"),
-      TripleStore.sliceIdCol(slices,
-        GraftFunctions.murmur64(col("subj"))).as("s"))
-      .na.drop()
-      .as[(String, Int)](Encoders.tuple(Encoders.STRING, Encoders.scalaInt))
-      .rdd
-    val n = slices.size
-    val (counts, bfs) = keyed.treeAggregate(
-      (new Array[Long](n), caps.map(BloomFilter.create(_, fpp))))(
-      { case ((cnt, arr), (key, s)) => arr(s).putString(key); cnt(s) += 1; (cnt, arr) },
-      { case ((ca, a), (cb, b)) =>
-        var i = 0
-        while (i < n) { a(i).mergeInPlace(b(i)); ca(i) += cb(i); i += 1 }
-        (ca, a) })
-    slices.indices.map { i =>
-      // bound miss (possible only under extreme subject-hash skew):
-      // rebuild THAT slice exactly, via the per-slice path
-      if (counts(i) <= caps(i)) bfs(i) else bloom(Some(slices(i)), fpp)
-    }.toArray
-  }
+  def syncFromSliced(peer: TripleStore, k: Int = 8): Long =
+    insert(bloomDiff(all, peer.all, GraftFunctions.canonicalKey(),
+      sliceIdCol(ringSlices(k), GraftFunctions.murmur64(col("subj"))),
+      ringCaps(metadataRowCount, k)))
 
   /** Sign + stamp + insert pipeline (reference: core/http.go:62-92):
     * sets `author`, `sig` (ECDSA over the SHA-1 fingerprint), one
@@ -460,7 +366,7 @@ object TripleStore {
   /** Largest single bloom broadcast [[TripleStore.sync]] will schedule
     * before slicing the ring — a wire/broadcast unit, not a heap bound
     * (executors hold one readonly copy; torrent broadcast distributes
-    * it). 256 MB ≈ 4.7·10⁷ triples at [[ReferenceFpp]].
+    * it). 256 MiB holds one filter of ~5·10⁷ keys at [[ReferenceFpp]].
     */
   val SyncBroadcastCeiling: Long = 256L << 20
 
@@ -513,34 +419,99 @@ object TripleStore {
   private[graft] def predictedBloomBytes(n: Long, fpp: Double): Long =
     math.ceil(-n.toDouble * math.log(fpp) / (math.log(2) * math.log(2)) / 8.0).toLong
 
-  /** One-pass bloom build: the filter is sized at `max(bound,
-    * MinBloomItems)` and the SAME treeAggregate counts the items as it
-    * inserts them; only if the count exceeds the capacity (the bound was
-    * wrong) does an exact-size rebuild run. So the common path — any
-    * bound that holds, including the default floor for dimension-scale
-    * key sets — is ONE job where size-then-build always paid two, and
-    * the worst case equals the old shape. Partial filters are built per
-    * partition and merged pairwise on executors; one small filter
-    * reaches the driver.
-    *
-    * The MinBloomItems floor is the degeneracy guard: a few-hundred-bit
-    * filter collapses — Spark's double-hashing probes
-    * (h1 + i·h2 mod numBits) hit one bit whenever h2 ≡ 0 mod numBits,
-    * likely at tiny numBits, making the real FP rate orders of magnitude
-    * worse than fpp. 10k items ⇒ ~53 KB at 1e-9 — negligible.
+  /** The one bloom builder: one filter per slice of `keyed` (columns `k`,
+    * the string key, and `s`, its slice index in `caps`; a single filter
+    * is the one-slice case, `s` the constant 0). One treeAggregate builds
+    * every slice's filter at its cap and counts its keys as it inserts
+    * them, merging partial filters pairwise on executors, so one scan
+    * covers all K slices. A slice whose count exceeds its cap (a bound
+    * miss, which only extreme subject-hash skew causes for [[sliceCap]]'s
+    * headroom) is rebuilt at its exact count, with all such slices
+    * together in one second pass. Null keys are not inserted.
     */
-  private[graft] def bloomOnePass(keyed: DataFrame, bound: Long,
-      fpp: Double): BloomFilter = {
-    val keys = keyed.na.drop().as[String](Encoders.STRING).rdd
-    val cap = math.max(bound, MinBloomItems)
-    val (n, bf) = keys.treeAggregate((0L, BloomFilter.create(cap, fpp)))(
-      { case ((c, f), s) => f.putString(s); (c + 1, f) },
-      { case ((ca, a), (cb, b)) => a.mergeInPlace(b); (ca + cb, a) })
-    if (n <= cap) bf
-    else keys.treeAggregate(BloomFilter.create(n, fpp))(
-      (f, s) => { f.putString(s); f },
-      (a, b) => { a.mergeInPlace(b); a })
+  private[graft] def buildBlooms(keyed: DataFrame, caps: Seq[Long],
+      fpp: Double = ReferenceFpp): Array[BloomFilter] = {
+    val keys = keyed.select(col("k").cast("string"), col("s").cast("int")).na.drop()
+      .as[(String, Int)](Encoders.tuple(Encoders.STRING, Encoders.scalaInt)).rdd
+    def fill(rows: RDD[(String, Int)], sizes: Array[Long]): (Array[Long], Array[BloomFilter]) =
+      rows.treeAggregate((new Array[Long](sizes.length), sizes.map(BloomFilter.create(_, fpp))))(
+        { case ((n, f), (key, s)) => f(s).putString(key); n(s) += 1; (n, f) },
+        { case ((na, a), (nb, b)) =>
+          var i = 0
+          while (i < a.length) { a(i).mergeInPlace(b(i)); na(i) += nb(i); i += 1 }
+          (na, a) })
+    val (counts, filters) = fill(keys, caps.toArray)
+    val over = caps.indices.filter(i => counts(i) > caps(i)).toArray
+    if (over.nonEmpty) {
+      val at = over.zipWithIndex.toMap // slice -> its index in the re-pass
+      val (_, exact) = fill(keys.flatMap { case (key, s) => at.get(s).map(key -> _) },
+        over.map(counts))
+      over.indices.foreach(j => filters(over(j)) = exact(j))
+    }
+    filters
   }
+
+  /** The one bloom probe: `key` tests positive in the filter of its
+    * slice, `filters(slice)` (a single filter: one element, slice
+    * `lit(0)`). A codegen'd Catalyst expression over the broadcast
+    * filters — only the broadcast handle is embedded in the plan.
+    */
+  private[graft] def bloomProbe(spark: SparkSession, key: Column, slice: Column,
+      filters: Array[BloomFilter]): Column =
+    ColumnBridge.column(BloomProbeIndexedExpr(
+      ColumnBridge.expression(key.cast("string")),
+      ColumnBridge.expression(slice.cast("int")),
+      spark.sparkContext.broadcast(filters)))
+
+  /** The one bloom diff: the rows of `remote` whose `key` misses the
+    * filter of its `slice` built over `local`'s keys — one scan of each
+    * side whatever the slice count. `key` and `slice` must resolve on
+    * both frames.
+    */
+  private[graft] def bloomDiff(local: DataFrame, remote: DataFrame, key: Column,
+      slice: Column, caps: Seq[Long]): DataFrame = {
+    val filters = buildBlooms(local.select(key.as("k"), slice.as("s")), caps)
+    remote.filter(!bloomProbe(remote.sparkSession, key, slice, filters))
+  }
+
+  /** Filter capacity of a slice holding `fraction` of `rows` keys: exact
+    * for the whole ring, ×1.25 headroom for an arc (murmur3 subject
+    * hashes are uniform on the ring, so an arc holds about its fraction
+    * of the keys). Floored at [[MinBloomItems]], the degeneracy guard: a
+    * few-hundred-bit filter collapses — Spark's double-hashing probes
+    * (h1 + i·h2 mod numBits) hit one bit whenever h2 ≡ 0 mod numBits,
+    * likely at tiny numBits — while 10k items cost ~53 KB at 1e-9.
+    */
+  private[graft] def sliceCap(rows: Long, fraction: Double): Long =
+    math.max(MinBloomItems,
+      if (fraction >= 1.0) rows else math.ceil(rows * fraction * 1.25).toLong)
+
+  /** Fraction of the uint64 ring `ks` covers (1 for the maxed ring). */
+  private[graft] def ringFraction(ks: Keyspace): Double =
+    if (ks.maxed) 1.0
+    else ((ks.mag >>> 1).toDouble * 2.0 + (ks.mag & 1L).toDouble) / math.pow(2.0, 64)
+
+  /** `k` equal arcs tiling the whole uint64 ring; `k = 1` is the maxed
+    * ring itself. [[Keyspace.slices]] of the maxed ring leaves out its
+    * excluded position 2⁶⁴−1; ending the last arc at 0 takes it back in,
+    * so every subject hash falls in exactly one arc.
+    */
+  private[graft] def ringSlices(k: Int): Seq[Keyspace] = {
+    val arcs = Keyspace.maxed().slices(k)
+    if (k == 1) arcs else arcs.init :+ arcs.last.copy(end = 0L)
+  }
+
+  /** Filter caps of [[ringSlices]]`(k)` over a store of `rows` triples. */
+  private[graft] def ringCaps(rows: Long, k: Int): Seq[Long] =
+    ringSlices(k).map(ks => sliceCap(rows, ringFraction(ks)))
+
+  /** The slice count [[TripleStore.sync]] uses for a store of `rows`
+    * triples: the fewest ring slices whose every filter, headroom
+    * included, fits [[SyncBroadcastCeiling]].
+    */
+  private[graft] def syncSliceCount(rows: Long): Int =
+    Iterator.from(1).find(k => ringCaps(rows, k)
+      .forall(predictedBloomBytes(_, ReferenceFpp) <= SyncBroadcastCeiling)).get
 
   final case class StoreInfo(triples: Long, diskBytes: Long, freeDiskBytes: Long)
 
@@ -573,14 +544,9 @@ object TripleStore {
     spark.emptyDataset[Triple].toDF()
   }
 
-  /** Keyspace membership as a Column predicate over a hash column —
-    * unsigned ring-interval test (reference: protocol/keyspace.go:4-12).
-    * Expressed with XOR(min-long) to map unsigned order onto signed order
-    * so the whole predicate stays codegen-able (no UDF).
-    */
   /** Index of the slice (in `slices` order) a hash belongs to, as a
-    * codegen-able when-chain. Caller guarantees the slices TILE the
-    * ring (syncFromSliced's halves do), so the last slice is the
+    * codegen-able when-chain. Caller guarantees the slices TILE the hashes
+    * it passes ([[ringSlices]] tile the ring), so the last slice is the
     * fallthrough — every hash resolves to a valid index.
     */
   private[graft] def sliceIdCol(slices: Seq[Keyspace], hash: Column): Column =
@@ -588,6 +554,11 @@ object TripleStore {
       case ((ks, i), acc) => when(keyspaceIncludes(ks, hash), lit(i)).otherwise(acc)
     }
 
+  /** Keyspace membership as a Column predicate over a hash column —
+    * unsigned ring-interval test (reference: protocol/keyspace.go:4-12).
+    * Expressed with XOR(min-long) to map unsigned order onto signed order
+    * so the whole predicate stays codegen-able (no UDF).
+    */
   def keyspaceIncludes(ks: Keyspace, hash: Column): Column = {
     val Min = Long.MinValue
     val a = hash.bitwiseXOR(Min)

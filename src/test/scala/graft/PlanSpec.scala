@@ -296,6 +296,20 @@ class PlanSpec extends SparkSpecBase {
       s"probe path shuffles the corpus:\n${p.take(2500)}")
   }
 
+  test("sliced sync diff is one scan: no union, one codegen'd slice-indexed probe") {
+    // the four slice filters are built in one pass and probed by slice
+    // index in one scan of the peer — not four filtered re-scans unioned
+    val p = plan("tp_sync_diff_sliced").split("== Initial Plan ==")(0)
+    // the cached triples view is itself a union of its sources; only
+    // the plan above that cache is the diff's
+    val diff = p.linesIterator.takeWhile(!_.contains("InMemoryRelation")).mkString("\n")
+    assert(!diff.contains("Union"), s"per-slice union in the diff plan:\n${diff.take(2500)}")
+    val probeLines = p.linesIterator.filter(_.contains("graft_bloom_probe")).toSeq
+    assert(probeLines.nonEmpty, s"bloom probe missing:\n${p.take(1500)}")
+    assert(probeLines.exists(_.matches(""".*\*\(\d+\).*""")),
+      s"bloom probe fell out of codegen:\n${probeLines.mkString("\n")}")
+  }
+
   test("waiting-supplier decorrelates to keyed semi+anti joins, dim broadcast") {
     // the Q21 shape: EXISTS and NOT EXISTS against the same lineitem
     // self-join must become keyed LeftSemi/LeftAnti shuffles on

@@ -202,32 +202,33 @@ class TripleStoreSpec extends SparkSpecBase {
     // the diff is exactly A's surplus (bloom fpp 1e-9 over 250 keys —
     // a false positive here would be a real bug, not bad luck)
     assert(a.triplesNotMatchingBloom(b.bloom()).count() == 50)
-    assert(b.syncFrom(a) == 50)
+    assert(b.syncFromSliced(a, k = 1) == 50)
     assert(b.count() == a.count())
     // second round is a no-op
-    assert(b.syncFrom(a) == 0)
+    assert(b.syncFromSliced(a, k = 1) == 0)
   }
 
   test("sliced bloom sync ships exactly the full-ring diff (the past-broadcast-ceiling form)") {
     import spark.implicits._
     val a = freshStore()
-    val b = freshStore()
     val shared = (0 until 200).map(i => Triple(s"s:$i", "p", s"o$i"))
     val extra = (0 until 50).map(i => Triple(s"extra:$i", "p", s"e$i"))
     a.insert((shared ++ extra).toDF())
-    b.insert(shared.toDF())
-    // the same exact set-difference oracle as syncFrom's test: the
-    // slice union must ship A's surplus exactly — no triple lost to a
+    // the same exact set-difference oracle as the one-slice test: the
+    // slice filters must ship A's surplus exactly — no triple lost to a
     // slice boundary (murmur hashes land all over the ring, so 8
-    // slices exercise many boundaries). Slice DISJOINTNESS is pinned
-    // structurally in KeyspaceSpec ("slices: disjoint…"); the dedup
-    // insert would absorb a double-ship, so this gate is about
+    // slices exercise many boundaries; odd k splits the ring into arcs
+    // that are not halves). Slice DISJOINTNESS is pinned structurally
+    // in KeyspaceSpec ("slices: disjoint…") and below for ringSlices;
+    // the dedup insert would absorb a double-ship, so this gate is about
     // completeness and convergence
-    assert(b.syncFromSliced(a, k = 8) == 50)
-    assert(b.count() == a.count())
-    assert(b.syncFromSliced(a, k = 8) == 0)
-    // odd/small k degrade gracefully (k/2 floor, min 1 per half)
-    assert(b.syncFromSliced(a, k = 1) == 0)
+    for (k <- Seq(1, 2, 3, 5, 8)) {
+      val b = freshStore()
+      b.insert(shared.toDF())
+      assert(b.syncFromSliced(a, k) == 50, s"k = $k")
+      assert(b.count() == a.count(), s"k = $k")
+      assert(b.syncFromSliced(a, k) == 0, s"k = $k")
+    }
   }
 
   test("sync schedules full-ring vs sliced by predicted filter bytes") {
@@ -236,15 +237,16 @@ class TripleStoreSpec extends SparkSpecBase {
     // says ~5.14 — same formula, their doc rounds the per-key bits)
     val mb = TripleStore.predictedBloomBytes(1000000L, 1e-9).toDouble / (1L << 20)
     assert(mb > 5.0 && mb < 5.5)
-    // schedule arithmetic: k = ceil(bytes / ceiling), floor 2 once sliced
     assert(TripleStore.predictedBloomBytes(47000000L, 1e-9) <=
       TripleStore.SyncBroadcastCeiling) // ~4.7e7 triples still fit
+    assert(TripleStore.syncSliceCount(47000000L) == 1)
     assert(TripleStore.predictedBloomBytes(1000000000L, 1e-9) /
       TripleStore.SyncBroadcastCeiling >= 19) // 10⁹ → ~20+ slices
-    // both branches ship the identical diff on the same fixture: tiny
-    // store + default ceiling rides the full-ring branch; a 16 KB
-    // ceiling forces the sliced branch (the MinBloomItems-floor filter
-    // is ~54 KB → k = 4) — same 50 rows, same convergence
+    assert(TripleStore.syncSliceCount(1000000000L) >= 20)
+    assert(TripleStore.syncSliceCount(250L) == 1)
+    // every slice count ships the identical diff on the same fixture:
+    // the scheduled one (k = 1 here) and an explicit k = 4 — same 50
+    // rows, same convergence
     import spark.implicits._
     val a = freshStore()
     val b = freshStore()
@@ -256,9 +258,71 @@ class TripleStoreSpec extends SparkSpecBase {
     c.insert(shared.toDF())
     assert(b.sync(a) == 50)
     assert(b.count() == a.count())
-    assert(c.sync(a, broadcastCeiling = 16L << 10) == 50)
+    assert(c.syncFromSliced(a, k = 4) == 50)
     assert(c.count() == a.count())
-    assert(c.sync(a, broadcastCeiling = 16L << 10) == 0)
+    assert(c.syncFromSliced(a, k = 4) == 0)
+  }
+
+  test("sync schedules exactly k slices, each filter under the broadcast ceiling") {
+    val ceiling = TripleStore.SyncBroadcastCeiling
+    // rows whose whole-ring filter is `x` ceilings: k = 1 needs x ≤ 1,
+    // k ≥ 2 needs 1.25·x/k ≤ 1 for the largest (headroomed) slice
+    val perKey = TripleStore.predictedBloomBytes(1000000000L, 1e-9) / 1e9
+    def rows(x: Double): Long = (x * ceiling / perKey).toLong
+    for ((x, k) <- Seq(1.5 -> 2, 2.0 -> 3, 3.5 -> 5)) {
+      val n = rows(x)
+      assert(TripleStore.syncSliceCount(n) == k, s"$n rows")
+      val slices = TripleStore.ringSlices(k)
+      assert(slices.size == k)
+      TripleStore.ringCaps(n, k).foreach(cap =>
+        assert(TripleStore.predictedBloomBytes(cap, 1e-9) <= ceiling, s"k = $k, cap $cap"))
+      // the arcs tile the whole ring: contiguous, sizes summing to 2⁶⁴
+      slices.zip(slices.tail :+ slices.head).foreach { case (s1, s2) => assert(s1.end == s2.start) }
+      assert(slices.map(ks => BigInt(java.lang.Long.toUnsignedString(ks.mag))).sum == BigInt(1) << 64)
+    }
+  }
+
+  test("bloom builder re-passes a slice whose cap the keys exceeded") {
+    import org.apache.spark.sql.functions.{col, concat}
+    import org.apache.spark.util.sketch.BloomFilter
+    val keys = spark.range(1000).select(concat(lit("key:"), col("id")).as("k"))
+    def probeAll(keyed: org.apache.spark.sql.DataFrame, bfs: Array[BloomFilter]): Long =
+      keyed.filter(TripleStore.bloomProbe(spark, col("k"), col("s"), bfs)).count()
+    val exactBits = BloomFilter.create(1000, 1e-9).bitSize
+    // one slice, cap 100 < 1000 keys
+    val one = keys.withColumn("s", lit(0))
+    val bf1 = TripleStore.buildBlooms(one, Seq(100L))
+    assert(bf1.head.bitSize == exactBits)
+    assert(probeAll(one, bf1) == 1000)
+    // four slices, every key in slice 2: only that slice is rebuilt
+    val skewed = keys.withColumn("s", lit(2))
+    val bf4 = TripleStore.buildBlooms(skewed, Seq.fill(4)(100L))
+    assert(bf4.map(_.bitSize).toSeq ==
+      Seq(0, 1, 2, 3).map(i => if (i == 2) exactBits else BloomFilter.create(100, 1e-9).bitSize))
+    assert(probeAll(skewed, bf4) == 1000)
+  }
+
+  test("bloom sizing skips files under _temporary, like Spark's file listing") {
+    import spark.implicits._
+    val st = freshStore()
+    st.insert((0 until 12000).map(i => Triple(s"s:$i", "p", s"o$i")).toDF())
+    val before = st.bloom().bitSize
+    // past the MinBloomItems floor the cap is the exact row count
+    assert(before == org.apache.spark.util.sketch.BloomFilter.create(12000, 1e-9).bitSize)
+    // a data file copied where an in-flight or killed append leaves its
+    // task output; Spark's reader never lists it
+    val root = new org.apache.hadoop.fs.Path(st.path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val data = fs.listFiles(root, true)
+    var file = data.next().getPath
+    while (!file.getName.endsWith(".parquet")) file = data.next().getPath
+    val planted = new org.apache.hadoop.fs.Path(root,
+      s"_temporary/0/_temporary/attempt_0/${file.getParent.getName}/${file.getName}")
+    org.apache.hadoop.fs.FileUtil.copy(fs, file, fs, planted, false, spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(planted))
+    st.refresh()
+    assert(st.count() == 12000)
+    assert(st.bloom().bitSize == before)
   }
 
   test("empty JSON query ([]) matches everything — never prunes to zero buckets") {
