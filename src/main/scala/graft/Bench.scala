@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.CodegenCounters
 
 /** Benchmark main (driver contract): times every declared query at
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line.
@@ -163,15 +164,24 @@ object Bench {
       try spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
         if (!before.contains(id)) rdd.unpersist(blocking = false)
       } catch { case _: Throwable => () }
+    // Per-query generated-code stamp: Janino compiles and compile ms of
+    // each sweep run ([[CodegenCounters]], process-wide). A query whose
+    // second run still compiles generates code that changes from run to
+    // run, and on a long-lived session it keeps refilling the codegen
+    // cache; min-of-2 timing alone never shows that cost.
+    val codegenRuns = scala.collection.mutable.LinkedHashMap.empty[String, Seq[(Long, Double)]]
     def timeQuery(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Seq[Double] = {
       val before = spark.sparkContext.getPersistentRDDs.keySet
       var runIdx = 0
+      val codegen = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
       def once(): Double = {
         // label run 1 with the bare query name (shape stamp); later runs
         // and reprobes carry a '#' suffix, which the listener ignores
         spark.sparkContext.setJobDescription(
           if (runIdx == 0) name else name + "#w" + runIdx)
         runIdx += 1
+        val c0 = CodegenCounters.compiles
+        val ms0 = CodegenCounters.compileMs
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).queryExecution.toRdd.count()
           (System.nanoTime() - t0) / 1e9 }
@@ -180,10 +190,14 @@ object Bench {
             Option(e.getMessage).getOrElse("")).take(300)
           if (!errors.contains(name)) errors(name) = msg
           System.err.println(s"[bench] $name FAILED: $msg"); -1.0 }
-        finally spark.sparkContext.setJobDescription(null)
+        finally {
+          spark.sparkContext.setJobDescription(null)
+          codegen += ((CodegenCounters.compiles - c0, CodegenCounters.compileMs - ms0))
+        }
       }
       val rs = Iterator.continually(once())
         .take(runsPerQuery).takeWhile(_ >= 0).toSeq
+      codegenRuns(name) = codegen.toSeq
       releaseNewRdds(before)
       if (rs.size == runsPerQuery) rs else Seq(-1.0)
     }
@@ -519,6 +533,11 @@ object Bench {
         }
       }.mkString("{", ",", "}")
     }
+    // per query, one [compiles, compile_ms] pair per sweep run (first
+    // run, second run, ...)
+    val codegenJson = codegenRuns.map { case (k, rs) =>
+      jstr(k) + rs.map { case (n, ms) => s"[$n,${r3(ms)}]" }.mkString(":[", ",", "]")
+    }.mkString("{", ",", "}")
     val priorJson = prior.map(p => jstr(p._1)).getOrElse("null")
     val crossSfJson = crossSf.map(p => jstr(p._1)).getOrElse("null")
     val crossSfSmallJson = crossSfSmall.map(p => jstr(p._1)).getOrElse("null")
@@ -538,7 +557,7 @@ object Bench {
       s""","runs":$runsJson,"errors":$errorsJson,"control_series":$controlJson,""" +
       s""""storage_series":$storageJson,"reprobes":$reprobesJson,""" +
       s""""reprobe_triggers":$triggersJson,"probe_counts":$probeCountsJson,""" +
-      s""""task_shape":$taskShapeJson,""" +
+      s""""task_shape":$taskShapeJson,"codegen":$codegenJson,""" +
       s""""prior_artifact":$priorJson,""" +
       s""""cross_sf_artifact":$crossSfJson,""" +
       s""""cross_sf_small_artifact":$crossSfSmallJson$seedJson}"""

@@ -208,13 +208,14 @@ private[api] object QueriesGraphX {
     val gf = graft.functions.GraftFunctions
     val triples = Tables.starTriples(s, d)
     val rows = triples.count() // prunes to row counts at the sources
-    val peer = triples.withColumn("h", gf.md5Hash60(col("subj")))
-      .filter(ts.keyspaceIncludes(syncHalf, col("h")))
     val caps = slices.map(ks =>
       ts.sliceCap(rows, math.floorMod(ks.end - ks.start, 1L << 60) / math.pow(2.0, 60)))
-    ts.bloomDiff(peer.filter(col("pred") =!= "nation"), peer,
+    // a triple outside the half has no slice, so it is neither built nor
+    // probed: the slice index is the peer's membership test, and the
+    // probe filter evaluates the subject hash once per row
+    ts.bloomDiff(triples.filter(col("pred") =!= "nation"), triples,
         gf.canonicalKey(col("subj"), col("pred"), col("obj"), lit("")),
-        ts.sliceIdCol(slices, col("h")), caps)
+        ts.sliceIdCol(slices, gf.md5Hash60(col("subj"))), caps)
       .select("subj", "pred", "obj")
       .orderBy("subj", "pred", "obj")
   }

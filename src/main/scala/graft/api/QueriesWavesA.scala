@@ -1315,9 +1315,11 @@ private[api] object QueriesWavesA {
           .filter(col("cnt") >= 2)
           .select(col("event_type"),
             expr("cnt * (cnt - 1) div 2").cast("long").as("n_pairs"),
-            round(graft.functions.TheilSenMedianExpr(
-              expr("transform(ser, e -> e.t)"),
-              expr("transform(ser, e -> e.n)")), 6).as("theilsen_slope"))
+            // field extraction, not a transform lambda: a lambda is a
+            // CodegenFallback and would keep this projection out of
+            // whole-stage codegen
+            round(graft.functions.TheilSenMedianExpr(col("ser.t"), col("ser.n")), 6)
+              .as("theilsen_slope"))
           .orderBy("event_type")
       },
       Some(

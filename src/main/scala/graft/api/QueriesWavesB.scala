@@ -1239,8 +1239,9 @@ private[api] object QueriesWavesB {
               col("rev_c").as("x")))).as("ser"))
           .filter(col("n_days") >= 2)
           .select(col("o_orderpriority"), col("n_days"),
-            graft.functions.MannKendallSExpr(expr("transform(ser, e -> e.x)"))
-              .as("s_stat"))
+            // `ser.x` extracts the field array in codegen; a transform
+            // lambda would keep this projection out of whole-stage codegen
+            graft.functions.MannKendallSExpr(col("ser.x")).as("s_stat"))
           // tau = S / C(n,2); computed as 2·S·1e6 div (n(n−1)) — the
           // doubled form keeps every operand integral (no decimal
           // division scale), mathematically identical since n(n−1) is

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -61,6 +62,69 @@ case class BloomProbeIndexedExpr(
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): BloomProbeIndexedExpr =
     copy(left = newLeft, right = newRight)
+}
+
+/** Index of the first ring slice holding a 64-bit hash, or null when
+  * none does (codegen helper — outside the expression companion for the
+  * static-forwarder reason documented on [[DeflateUtil]]). Membership is
+  * [[graft.model.Keyspace.includes]] (start-inclusive, end-exclusive,
+  * unsigned, wrap-aware), except that a maxed keyspace is the whole
+  * ring: as a slice list it is the one-slice tiling.
+  */
+object RingSliceUtil {
+  def index(hash: Long, starts: Array[Long], ends: Array[Long]): Int = {
+    var i = 0
+    while (i < starts.length) {
+      val s = starts(i)
+      val e = ends(i)
+      if (e == s - 1 || graft.model.Keyspace(s, e).includes(hash)) return i
+      i += 1
+    }
+    -1
+  }
+}
+
+/** The slice index of a hash over a fixed list of ring slices, the hash
+  * evaluated once per row (a when-chain of membership tests repeats the
+  * hash in every branch: Spark's `FilterExec` eliminates no common
+  * subexpressions). The bounds travel in the generated class's
+  * references, so every slice list shares one class.
+  */
+case class RingSliceExpr(child: Expression, starts: Seq[Long], ends: Seq[Long])
+    extends UnaryExpression {
+  require(starts.size == ends.size && starts.nonEmpty, "one start and end per slice")
+  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
+  override def nullable: Boolean = true
+  override def prettyName: String = "graft_ring_slice"
+
+  @transient private lazy val startArr = starts.toArray
+  @transient private lazy val endArr = ends.toArray
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val h = child.eval(input)
+    if (h == null) null
+    else {
+      val i = RingSliceUtil.index(h.asInstanceOf[Long], startArr, endArr)
+      if (i < 0) null else i
+    }
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val s = ctx.addReferenceObj("sliceStarts", startArr, "long[]")
+    val e = ctx.addReferenceObj("sliceEnds", endArr, "long[]")
+    val h = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${h.code}
+      boolean ${ev.isNull} = true;
+      int ${ev.value} = -1;
+      if (!${h.isNull}) {
+        ${ev.value} = graft.functions.RingSliceUtil.index(${h.value}, $s, $e);
+        ${ev.isNull} = ${ev.value} < 0;
+      }""")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): RingSliceExpr =
+    copy(child = newChild)
 }
 
 /** Column-level function surface of the engine. SQL names are registered

@@ -28,6 +28,22 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * the unchanged pair-join DuckDB oracles.
   */
 object PairTrendUtil {
+  /** The elements of an array<bigint> argument; a null element fails
+    * with an error naming the function and the index (read as a long it
+    * would silently be 0 and corrupt the statistic).
+    */
+  private def longs(a: ArrayData, fn: String, arg: String): Array[Long] = {
+    val out = new Array[Long](a.numElements())
+    var i = 0
+    while (i < out.length) {
+      if (a.isNullAt(i))
+        throw new IllegalArgumentException(s"$fn: null element at index $i of the $arg array")
+      out(i) = a.getLong(i)
+      i += 1
+    }
+    out
+  }
+
   /** Mann–Kendall S = Σ_{i<j} sign(x_j − x_i) over the series in array
     * order (callers order by date). Counted in O(n log n) with a
     * Fenwick tree over rank-compressed values: processing left to
@@ -36,11 +52,10 @@ object PairTrendUtil {
     * .otherwise(0)`.
     */
   def mannKendallS(xsArr: ArrayData): Long = {
-    val n = xsArr.numElements()
+    val xs = longs(xsArr, "graft_mann_kendall_s", "series")
+    val n = xs.length
     if (n < 2) return 0L
-    val xs = new Array[Long](n)
     var i = 0
-    while (i < n) { xs(i) = xsArr.getLong(i); i += 1 }
     // rank-compress to 1..r
     val sorted = xs.clone()
     java.util.Arrays.sort(sorted)
@@ -79,15 +94,16 @@ object PairTrendUtil {
     * by (t_i, t_j) — byte-for-byte the pair-join form's
     * `row_number() over (order by slope, t1, t2) = (cnt+1) div 2`:
     * callers pass the series sorted by strictly-increasing t, so
-    * (slope, t1, t2) order ≡ (slope, i, j) order, and a STABLE sort by
-    * slope alone over pairs generated in (i, j) lexicographic order
-    * preserves exactly that tie-break. Slopes are the same one IEEE
+    * (slope, t1, t2) order ≡ (slope, i, j) order; that tie-break only
+    * orders equal slopes, so the median VALUE is the order statistic of
+    * the slopes alone. Slopes are the same one IEEE
     * double division per pair (exactly rounded, engine-invariant);
     * NaN/−0.0 cannot arise (t strictly increasing ⇒ denominator > 0;
     * long-cast numerators yield +0.0). The pair count m = C(n,2) is
     * guarded to the multi-million range the consumers' calendar bound
     * implies — past it the pair-join form this replaces would itself
-    * be span²-pathological, and a loud error beats silent cost.
+    * be span²-pathological, and a loud error beats silent cost. A null
+    * element of either array fails loudly, naming the function.
     */
   def theilSenLowerMedian(tsArr: ArrayData, nsArr: ArrayData): Double = {
     val n = tsArr.numElements()
@@ -96,14 +112,12 @@ object PairTrendUtil {
     require(n <= 8192,
       s"theilsen: series of $n buckets implies ${n.toLong * (n - 1) / 2} " +
         "pair slopes; pre-bucket the series (calendar-bounded by contract)")
-    val ts = new Array[Long](n)
-    val ns = new Array[Long](n)
-    var i = 0
-    while (i < n) { ts(i) = tsArr.getLong(i); ns(i) = nsArr.getLong(i); i += 1 }
+    val ts = longs(tsArr, "graft_theilsen_median", "t")
+    val ns = longs(nsArr, "graft_theilsen_median", "n")
     val m = n * (n - 1) / 2
     val slopes = new Array[Double](m)
     var k = 0
-    i = 0
+    var i = 0
     while (i < n) {
       var j = i + 1
       while (j < n) {
@@ -113,13 +127,13 @@ object PairTrendUtil {
       }
       i += 1
     }
-    val idx = new Array[Integer](m)
-    i = 0
-    while (i < m) { idx(i) = Integer.valueOf(i); i += 1 }
-    // TimSort is stable: equal slopes keep (i, j) generation order
-    java.util.Arrays.sort(idx, (a: Integer, b: Integer) =>
-      java.lang.Double.compare(slopes(a.intValue()), slopes(b.intValue())))
-    slopes(idx((m + 1) / 2 - 1).intValue())
+    // The (slope, i, j) tie-break orders only EQUAL slopes, and equal
+    // slopes are one value, so the value at the median rank is the same
+    // in any order among them: a primitive sort of the slopes themselves
+    // (Double.compare's total order, as before) needs no pair index and
+    // no boxing.
+    java.util.Arrays.sort(slopes)
+    slopes((m + 1) / 2 - 1)
   }
 }
 

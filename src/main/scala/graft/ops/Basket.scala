@@ -240,40 +240,43 @@ object Basket {
     * asserts the corpus fixpoint lands within them), and the same
     * per-round localCheckpoint lineage truncation.
     *
-    * Scale shape: each round is one keyed join of the frontier-bearing
-    * distance frame against the (reusable) edge frame plus a min-agg —
-    * the whole-graph iteration cost that IS the answer for
-    * Bellman-Ford; no step materializes anything wider than
-    * |nodes| + |edges|.
+    * Scale shape: the edge frame (both orientations, one aggregate) is
+    * checkpointed once; each round broadcasts the distance frame
+    * (≤ |nodes| rows, never edge-sized), streams the edge checkpoint
+    * through one broadcast hash join with no exchange on the edge side,
+    * and min-aggregates — nothing wider than |nodes| + |edges|. The
+    * broadcast is a hint, not an AQE decision, so every round plans the
+    * same join with the same build side and compiles the same
+    * generated classes (round 1 included: the seed frame has the round
+    * output's schema); the per-round checkpoint restarts codegen stage
+    * numbering, so rounds 2..n compile nothing.
     */
   def ssspWeighted(lineitem: DataFrame, rounds: Int = 5,
       minSupport: Int = 2, k: Int = 20): DataFrame = {
-    val e0 = coOrderEdges(lineitem, minSupport)
-    // hash-partition AND sort the edge frame on the per-round join key
-    // BEFORE its one-time checkpoint: localCheckpoint preserves
-    // outputPartitioning/outputOrdering (LogicalRDD), so every round's
-    // sort-merge join reads the checkpoint layout instead of
-    // re-exchanging and re-sorting 2·|edges| rows per round. Measured
-    // at 100× (same session, min-of-2): declared loop 78.6 s vs 24.1 s
-    // with the pre-layout — at the edge-build floor (edges alone
-    // 25.3 s); the five rounds' marginal cost drops to ~zero.
-    // Bit-identical arithmetic, same unrolled-SQL oracle.
-    val e = e0.select(col("pa").as("src"), col("pb").as("dst"),
-        expr("1000000L div n_both").as("w"))
-      .unionByName(e0.select(col("pb").as("src"), col("pa").as("dst"),
-        expr("1000000L div n_both").as("w")))
-      .repartition(col("src"))
-      .sortWithinPartitions("src")
+    val w = expr("1000000L div n_both")
+    val e = coOrderEdges(lineitem, minSupport)
+      .select(explode(array(
+        struct(col("pa").as("src"), col("pb").as("dst"), w.as("w")),
+        struct(col("pb").as("src"), col("pa").as("dst"), w.as("w")))).as("e"))
+      .select("e.src", "e.dst", "e.w")
       .localCheckpoint(true)
     var d = e.groupBy("src").agg(count(lit(1)).as("deg"))
       .orderBy(desc("deg"), asc("src")).limit(1)
       .select(col("src").as("node"), lit(0L).as("dist"))
       .localCheckpoint(true)
     for (_ <- 1 to rounds) {
-      val relax = d.join(e, d("node") === e("src"))
-        .select(e("dst").as("node"), (d("dist") + e("w")).as("dist"))
-      d = d.unionByName(relax)
-        .groupBy("node").agg(min("dist").as("dist"))
+      // each joined edge offers its dst the relaxed distance and re-offers
+      // its src the current one: every node of `d` is the src of an edge
+      // (the frame holds both orientations), so this keeps `d` without a
+      // union of the two frames, and the partial min folds the repeats
+      d = broadcast(d).join(e, d("node") === e("src"))
+        .select(explode(array(
+          struct(e("dst").as("node"), (d("dist") + e("w")).as("dist")),
+          struct(e("src").as("node"), d("dist").as("dist")))).as("r"))
+        .groupBy(col("r.node").as("node"))
+        // min over a non-empty group of non-null distances is never
+        // null; the coalesce keeps `dist` non-nullable like the seed's
+        .agg(coalesce(min("r.dist"), lit(0L)).as("dist"))
         .localCheckpoint(true)
     }
     d.orderBy("dist", "node").limit(k)
@@ -351,11 +354,10 @@ object Basket {
       minSupport: Int = 2, k: Int = 20): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val e0 = coOrderEdges(lineitem, minSupport)
-    // same per-round-join pre-layout as [[ssspWeighted]]: partition and
-    // sort the both-orientation edge frame on the round join key once,
-    // before the checkpoint, so the per-round SMJ never re-exchanges or
-    // re-sorts 2·|edges| rows (ssspWeighted's 100× A/B: 78.6 → 24.1 s
-    // with the rounds' marginal cost at ~zero; same join shape here).
+    // partition and sort the both-orientation edge frame on the round
+    // join key once, before the checkpoint, so a per-round SMJ need not
+    // re-exchange or re-sort 2·|edges| rows (the same pre-layout took
+    // weighted SSSP's declared loop from 78.6 to 24.1 s at 100×)
     val e = e0.select(col("pa").as("src"), col("pb").as("dst"))
       .unionByName(e0.select(col("pb").as("src"), col("pa").as("dst")))
       .repartition(col("src"))

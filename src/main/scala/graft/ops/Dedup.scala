@@ -86,9 +86,10 @@ object Dedup {
   }
 
   /** Frequent-band guard: drop (band, key) groups larger than `cap`
-    * before any band self-join. A boilerplate band (navigation chrome, a
-    * shared header, an empty doc) otherwise degenerates the join to
-    * O(hot²) candidate pairs — THE known skew cliff of banded LSH at
+    * before a band join (the batch-vs-corpus paths; pairs within one
+    * frame come from [[bandPairs]]). A boilerplate band (navigation
+    * chrome, a shared header, an empty doc) otherwise degenerates the
+    * join to O(hot²) candidate pairs — THE known skew cliff of banded LSH at
     * 100 TB. Implemented as a count-over-window filter (the SQL
     * `QUALIFY count(*) OVER (PARTITION BY band, key) <= cap`, which is
     * literally how TextSql's oracles mirror it): the banded frame is
@@ -105,6 +106,27 @@ object Dedup {
       .withColumn("band_freq", count(lit(1)).over(Window.partitionBy("band", "key")))
       .filter(col("band_freq") <= cap)
       .drop("band_freq")
+
+  /** Candidate pairs of a banded frame (`band`, `key`, `doc_id` plus
+    * `payload` columns): every two docs sharing a (band, key) group of
+    * at most `cap` members, as `l`/`r` structs of `doc_id` and the
+    * payload with `l.doc_id < r.doc_id` — the [[dropHotBands]] guard
+    * and the band self-join in one pass. Each group is collected once
+    * and paired in-row, so the group frequency is computed once rather
+    * than on both sides of a self-join, and a hot group is dropped by
+    * its size before any pair exists. A doc holds one key per band, so
+    * a group's doc ids are distinct and the pairs are exactly the
+    * self-join's.
+    */
+  private def bandPairs(banded: DataFrame, cap: Int, payload: String*): DataFrame = {
+    val members = banded.groupBy("band", "key")
+      .agg(collect_list(struct((col("doc_id") +: payload.map(col)): _*)).as("ids"))
+    val n = size(col("ids"))
+    members.filter(if (cap <= 0) n >= 2 else n >= 2 && n <= cap)
+      .select(explode(col("ids")).as("l"), col("ids"))
+      .select(col("l"), explode(col("ids")).as("r"))
+      .filter(col("l.doc_id") < col("r.doc_id"))
+  }
 
   /** Default frequent-band cap, shared by every banded path and its
     * oracle SQL (TextSql.bandCap quotes this constant into the QUALIFY
@@ -164,37 +186,10 @@ object Dedup {
     sigs.select(col("doc_id"), posexplode(array(keys: _*)).as(Seq("band", "key")))
   }
 
-  /** The pre-self-join banded-frame checkpoint and its schedule: the
-    * candidate self-joins reference `banded` twice, and without a
-    * materialization the whole signature pipeline runs once PER SIDE
-    * (the non-deterministic fused digest blocks ReuseExchange's
-    * sameResult dedup). localCheckpoint'ing the docs×bands frame
-    * (≈ 50 B/row — the §8 "decide with small rows" shape) makes it run
-    * ONCE — intra-query materialization, the graph_hits_parts
-    * checkpoint discipline, never cross-run — but the EAGER
-    * materialization job is a fixed ~0.3-1 s that outweighs the saved
-    * re-evaluation on small corpora (measured at sf0.1:
-    * dedup_jaccard_histogram +0.9 s with an unconditional checkpoint).
-    * Scheduled on Catalyst's size estimate of the input frame — a
-    * driver-side stat derived from file sizes, no job (measured:
-    * 0.8 MB at sf0.1, 8.3 MB at 10×, 88.7 MB at 100×).
-    */
-  private[graft] val BandedCheckpointMinBytes: Long = 4L << 20
-  private def checkpointIfBig(banded: DataFrame, sizeHint: DataFrame): DataFrame =
-    if (sizeHint.queryExecution.optimizedPlan.stats.sizeInBytes
-        >= BigInt(BandedCheckpointMinBytes))
-      banded.localCheckpoint(true)
-    else banded
-
   private[graft] def minhashPairsFromShingles(sh: DataFrame, k: Int, bands: Int,
       maxBandFreq: Int): DataFrame = {
-    val banded = checkpointIfBig(
-      dropHotBands(bandKeys(sigsFromShingles(sh, k), k, bands), maxBandFreq), sh)
-    val l = banded.select(col("band"), col("key"), col("doc_id").as("a"))
-    val rt = banded.select(col("band"), col("key"), col("doc_id").as("b"))
-    l.join(rt, Seq("band", "key"))
-      .filter(col("a") < col("b"))
-      .select("a", "b").distinct()
+    bandPairs(bandKeys(sigsFromShingles(sh, k), k, bands), maxBandFreq)
+      .select(col("l.doc_id").as("a"), col("r.doc_id").as("b")).distinct()
   }
 
   /** Fast-path MinHash signature via the custom 64-bit murmur3
@@ -210,22 +205,15 @@ object Dedup {
     val aggs = (0 until k).map(i =>
       min(GraftFunctions.murmur64(concat(lit(s"$i#"), col("sh")))).as(s"m$i"))
     val sigs = shingleRows(docs, 3).groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-    // same single-subtree posexplode + pre-self-join checkpoint as
-    // [[bandKeys]]/[[minhashPairsFromShingles]] — the unionAll form
-    // re-ran the murmur signature pipeline bands× and the self-join
-    // doubled it
+    // one posexplode over one sigs subtree, as in [[bandKeys]]: a
+    // bands-way unionAll would re-run the signature pipeline per band
     val keys = (0 until bands).map { b =>
       GraftFunctions.murmur64(concat_ws("|",
         (b * r until (b + 1) * r).map(i => col(s"m$i").cast("string")): _*))
     }
-    val banded = checkpointIfBig(dropHotBands(
-      sigs.select(col("doc_id"), posexplode(array(keys: _*)).as(Seq("band", "key"))),
-      maxBandFreq), docs)
-    val l = banded.select(col("band"), col("key"), col("doc_id").as("a"))
-    val rt = banded.select(col("band"), col("key"), col("doc_id").as("b"))
-    l.join(rt, Seq("band", "key"))
-      .filter(col("a") < col("b"))
-      .select("a", "b").distinct()
+    bandPairs(sigs.select(col("doc_id"), posexplode(array(keys: _*)).as(Seq("band", "key"))),
+        maxBandFreq)
+      .select(col("l.doc_id").as("a"), col("r.doc_id").as("b")).distinct()
   }
 
   /** 64-bit SimHash over weighted token hashes via the single-pass
@@ -265,24 +253,15 @@ object Dedup {
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
       portable: Boolean = false, maxBandFreq: Int = DefaultBandCap): DataFrame = {
     val sh = simhash(docs, portable)
-    // single-subtree posexplode + pre-self-join checkpoint, the
-    // [[bandKeys]] discipline: the 4-way unionAll re-ran the simhash
-    // pipeline (token explode + two aggs) once per band, and the
-    // self-join doubled it
+    // one posexplode over one simhash subtree, as in [[bandKeys]]: a
+    // 4-way unionAll would re-run the token explode and both aggregates
+    // per band
     val keys = (0 until 4).map(b =>
       shiftright(col("simhash"), b * 16).bitwiseAND(0xffffL))
-    val banded = checkpointIfBig(dropHotBands(
-      sh.select(col("doc_id"), col("simhash"),
-        posexplode(array(keys: _*)).as(Seq("band", "key"))),
-      maxBandFreq), docs)
-    val l = banded.select(col("band"), col("key"),
-      col("doc_id").as("a"), col("simhash").as("sha"))
-    val r = banded.select(col("band"), col("key"),
-      col("doc_id").as("b"), col("simhash").as("shb"))
-    l.join(r, Seq("band", "key"))
-      .filter(col("a") < col("b"))
-      .filter(bit_count(col("sha").bitwiseXOR(col("shb"))) <= maxHamming)
-      .select("a", "b").distinct()
+    bandPairs(sh.select(col("doc_id"), col("simhash"),
+        posexplode(array(keys: _*)).as(Seq("band", "key"))), maxBandFreq, "simhash")
+      .filter(bit_count(col("l.simhash").bitwiseXOR(col("r.simhash"))) <= maxHamming)
+      .select(col("l.doc_id").as("a"), col("r.doc_id").as("b")).distinct()
   }
 
   /** Word n-gram shingles per doc, distinct: (doc_id, source, sh).
@@ -294,13 +273,7 @@ object Dedup {
   def shingleRows(docs: DataFrame, n: Int): DataFrame =
     docs.select(col("doc_id"),
         (if (docs.columns.contains("source")) col("source") else lit("")).as("source"),
-        TextOps.tokens(col("text")).as("toks"))
-      .withColumn("sh", explode(array_distinct(
-        when(size(col("toks")) >= n,
-          transform(sequence(lit(0), size(col("toks")) - n),
-            i => concat_ws(" ", (0 until n).map(j => element_at(col("toks"), i + j + 1)): _*)))
-          .otherwise(array()))))
-      .select("doc_id", "source", "sh")
+        explode(graft.functions.ShinglesExpr(col("text"), n)).as("sh"))
 
   /** Exact n-gram Jaccard near-dup pairs, candidate-filtered by banded
     * MinHash LSH: [[minhashPairs]] (banded equality joins + the

@@ -214,39 +214,38 @@ object TextOps {
       .filter(col("w") =!= "")
 
   /** BM25 keyword retrieval: top-k documents for a fixed bag of query
-    * terms (Okapi BM25, k1/b standard).
+    * terms (Okapi BM25, k1/b standard). `doc_id` is a key of `docs`.
     *
-    * Scale shape: the only corpus-wide shuffles are the per-doc length
-    * aggregate (partial-agg'd longs) and the (doc, term) term-frequency
-    * aggregate, which is filtered to the QUERY terms *before* the
-    * shuffle — so tf shuffle volume is O(matching tokens), not
-    * O(corpus). df and the 1-row corpus stats are broadcast. The
-    * per-term partial scores are summed in FIXED term order via a pivot
-    * (floating addition is not associative; a free-order SUM would be
-    * ulp-nondeterministic vs any oracle — same discipline as the
-    * left-to-right dot product in Similarity).
+    * Scale shape: one tokenize pass per document
+    * ([[graft.functions.TermCountsExpr]]) yields its length dl and the
+    * tf of every query term; one global aggregate over that frame gives
+    * the corpus stats (docs, tokens) and each term's df, and is
+    * broadcast; the score is one projection over the documents that
+    * hold a query term. No token row is ever materialized and nothing
+    * corpus-sized is shuffled. The per-term partial scores are summed in
+    * FIXED term order (floating addition is not associative; a
+    * free-order SUM would be ulp-nondeterministic vs any oracle — same
+    * discipline as the left-to-right dot product in Similarity).
     */
   def bm25TopK(docs: DataFrame, terms: Seq[String], k1: Double = 1.2,
       b: Double = 0.75, k: Int = 20): DataFrame = {
-    val toks = tokenRows(docs)
-    val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-    val corpus = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("tok_total"))
-    val tf = toks.filter(col("w").isin(terms: _*))
-      .groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
-    val df = tf.groupBy("w").agg(count(lit(1)).as("df"))
-    val scored = tf.join(broadcast(df), "w")
-      .join(dl, "doc_id")
+    val c = col("c")
+    val dl = c.getItem(0)
+    def tf(i: Int): Column = c.getItem(i + 1)
+    val counts = docs.select(col("doc_id"),
+      graft.functions.TermCountsExpr(col("text"), terms).as("c"))
+    val corpus = counts.agg(count_if(dl > 0).as("n_docs"),
+      sum(dl).as("tok_total") +: terms.indices.map(i => count_if(tf(i) > 0).as(s"df$i")): _*)
+    val avgdl = col("tok_total").cast("double") / col("n_docs")
+    val perTerm = terms.indices.map { i =>
+      val df = col(s"df$i")
+      val idf = log((col("n_docs") - df + lit(0.5)) / (df + lit(0.5)) + lit(1.0))
+      when(tf(i) > 0, idf * (tf(i) * lit(k1 + 1.0)) /
+        (tf(i) + lit(k1) * (lit(1.0 - b) + lit(b) * dl / avgdl))).otherwise(lit(0.0))
+    }
+    counts.filter(terms.indices.map(i => tf(i) > 0).reduce(_ || _))
       .crossJoin(broadcast(corpus))
-      .withColumn("avgdl", col("tok_total").cast("double") / col("n_docs"))
-      .withColumn("idf",
-        log((col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)))
-      .withColumn("s",
-        col("idf") * (col("tf") * lit(k1 + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
-    val perTerm = scored.groupBy("doc_id").pivot("w", terms).agg(first("s"))
-    val total = terms.map(t => coalesce(col(s"`$t`"), lit(0.0)))
-      .reduceLeft(_ + _)
-    perTerm.select(col("doc_id"), round(total, 6).as("bm25"))
+      .select(col("doc_id"), round(perTerm.reduceLeft(_ + _), 6).as("bm25"))
       .orderBy(desc("bm25"), asc("doc_id"))
       .limit(k)
   }

@@ -421,25 +421,34 @@ object TripleStore {
 
   /** The one bloom builder: one filter per slice of `keyed` (columns `k`,
     * the string key, and `s`, its slice index in `caps`; a single filter
-    * is the one-slice case, `s` the constant 0). One treeAggregate builds
-    * every slice's filter at its cap and counts its keys as it inserts
-    * them, merging partial filters pairwise on executors, so one scan
-    * covers all K slices. A slice whose count exceeds its cap (a bound
-    * miss, which only extreme subject-hash skew causes for [[sliceCap]]'s
-    * headroom) is rebuilt at its exact count, with all such slices
-    * together in one second pass. Null keys are not inserted.
+    * is the one-slice case, `s` the constant 0; a null `s` is skipped).
+    * Each task builds every slice's filter at its cap and counts its keys
+    * as it inserts them, and a treeReduce merges the partial filters
+    * pairwise on executors, so one scan covers all K slices. A slice
+    * whose count exceeds its cap (a bound miss, which only extreme
+    * subject-hash skew causes for [[sliceCap]]'s headroom) is rebuilt at
+    * its exact count, with all such slices together in one second pass.
+    * Null keys are not inserted.
     */
   private[graft] def buildBlooms(keyed: DataFrame, caps: Seq[Long],
       fpp: Double = ReferenceFpp): Array[BloomFilter] = {
     val keys = keyed.select(col("k").cast("string"), col("s").cast("int")).na.drop()
       .as[(String, Int)](Encoders.tuple(Encoders.STRING, Encoders.scalaInt)).rdd
+    // each task creates its own filters from the caps, so a task ships
+    // only `sizes`, never K full-size empty filters; an empty store's
+    // relation may have no partition at all, which treeReduce rejects
+    def empty(sizes: Array[Long]) =
+      (new Array[Long](sizes.length), sizes.map(BloomFilter.create(_, fpp)))
     def fill(rows: RDD[(String, Int)], sizes: Array[Long]): (Array[Long], Array[BloomFilter]) =
-      rows.treeAggregate((new Array[Long](sizes.length), sizes.map(BloomFilter.create(_, fpp))))(
-        { case ((n, f), (key, s)) => f(s).putString(key); n(s) += 1; (n, f) },
-        { case ((na, a), (nb, b)) =>
-          var i = 0
-          while (i < a.length) { a(i).mergeInPlace(b(i)); na(i) += nb(i); i += 1 }
-          (na, a) })
+      if (rows.getNumPartitions == 0) empty(sizes)
+      else rows.mapPartitions { it =>
+        val (n, f) = empty(sizes)
+        it.foreach { case (key, s) => f(s).putString(key); n(s) += 1 }
+        Iterator.single((n, f))
+      }.treeReduce { case ((na, a), (nb, b)) =>
+        var i = 0
+        while (i < a.length) { a(i).mergeInPlace(b(i)); na(i) += nb(i); i += 1 }
+        (na, a) }
     val (counts, filters) = fill(keys, caps.toArray)
     val over = caps.indices.filter(i => counts(i) > caps(i)).toArray
     if (over.nonEmpty) {
@@ -544,15 +553,16 @@ object TripleStore {
     spark.emptyDataset[Triple].toDF()
   }
 
-  /** Index of the slice (in `slices` order) a hash belongs to, as a
-    * codegen-able when-chain. Caller guarantees the slices TILE the hashes
-    * it passes ([[ringSlices]] tile the ring), so the last slice is the
-    * fallthrough — every hash resolves to a valid index.
+  /** Index of the slice (in `slices` order) a hash belongs to, null for
+    * a hash outside every slice — one codegen'd expression that
+    * evaluates the hash once ([[graft.functions.RingSliceExpr]]). A null
+    * slice drops the row from both sides of [[bloomDiff]]: it is neither
+    * built nor probed. [[ringSlices]] tile the ring, so over them every
+    * hash has a slice.
     */
   private[graft] def sliceIdCol(slices: Seq[Keyspace], hash: Column): Column =
-    slices.init.zipWithIndex.foldRight(lit(slices.size - 1)) {
-      case ((ks, i), acc) => when(keyspaceIncludes(ks, hash), lit(i)).otherwise(acc)
-    }
+    ColumnBridge.column(graft.functions.RingSliceExpr(
+      ColumnBridge.expression(hash.cast("long")), slices.map(_.start), slices.map(_.end)))
 
   /** Keyspace membership as a Column predicate over a hash column —
     * unsigned ring-interval test (reference: protocol/keyspace.go:4-12).

@@ -143,29 +143,31 @@ class PlanSpec extends SparkSpecBase {
       s"unkeyed join in dedup_exact_substring plan:\n${p.take(2000)}")
   }
 
-  test("banded minhash self-join evaluates the signature subtree once (exchange reuse)") {
-    val p = plan("dedup_minhash")
-    // both sides of the (band, key) self-join descend from the SAME
-    // guarded banded subtree; Spark must reuse the exchange, not
-    // re-evaluate shingle explode + md5 min-agg per side
-    assert(p.contains("ReusedExchange"),
-      s"no exchange reuse in dedup_minhash plan:\n${p.take(3000)}")
+  test("banded minhash pairs evaluate the signature subtree once (no band self-join)") {
+    val p = plan("dedup_minhash").split("== Initial Plan ==")(0)
+    // each (band, key) group is collected once and paired in-row: one
+    // signature aggregate and one band-frequency count, no self-join
+    // whose two sides would each need the banded frame
+    assert("graft_minhash_longs".r.findAllIn(p).size == 1,
+      s"signature subtree evaluated more than once:\n${p.take(3000)}")
+    assert(!p.contains("Join") && !p.contains("Window"),
+      s"band self-join or per-side frequency window in dedup_minhash plan:\n${p.take(3000)}")
   }
 
-  test("bm25 term filter runs scan-side, before the tf shuffle") {
-    val p = plan("text_bm25_topk")
+  test("bm25 counts query terms scan-side in one tokenize pass, no token shuffle") {
+    val p = plan("text_bm25_topk").split("== Initial Plan ==")(0)
     val lines = p.linesIterator.toIndexedSeq
-    // the IN(query terms) filter must sit directly over a parquet scan
-    // with no Exchange between them — tf shuffle volume is O(matching
-    // tokens), not O(corpus)
-    val fi = lines.indexWhere(l => l.contains("Filter") && l.contains("spark") &&
+    // dl and every query term's tf come from one per-document expression
+    // over the parquet scan; no token row is exploded or shuffled
+    val ti = lines.indexWhere(l => l.contains("graft_term_counts") && l.contains("spark") &&
       l.contains("vector"))
-    assert(fi >= 0, s"term filter missing from plan:\n${p.take(2500)}")
-    val below = lines.drop(fi + 1)
+    assert(ti >= 0, s"term counts missing from plan:\n${p.take(2500)}")
+    val below = lines.drop(ti + 1)
     val scanAt = below.indexWhere(l => l.contains("Scan parquet") || l.contains("FileScan"))
-    assert(scanAt >= 0, s"no scan beneath the term filter:\n${p.take(2500)}")
+    assert(scanAt >= 0, s"no scan beneath the term counts:\n${p.take(2500)}")
     assert(!below.take(scanAt).exists(_.contains("Exchange")),
-      s"shuffle between term filter and scan:\n${below.take(scanAt + 1).mkString("\n")}")
+      s"shuffle between term counts and scan:\n${below.take(scanAt + 1).mkString("\n")}")
+    assert(!p.contains("Generate"), s"tokens exploded in the bm25 plan:\n${p.take(2500)}")
   }
 
   test("tfidf target-slice predicate is pushed through the tf aggregate to parquet") {
@@ -308,6 +310,19 @@ class PlanSpec extends SparkSpecBase {
     assert(probeLines.nonEmpty, s"bloom probe missing:\n${p.take(1500)}")
     assert(probeLines.exists(_.matches(""".*\*\(\d+\).*""")),
       s"bloom probe fell out of codegen:\n${probeLines.mkString("\n")}")
+  }
+
+  test("sliced sync diff probe filter evaluates the subject hash once per row") {
+    // the slice index is one expression over the hash; a when-chain of
+    // membership tests repeated md5(subj) in every branch, and FilterExec
+    // eliminates no common subexpressions
+    val p = plan("tp_sync_diff_sliced").split("== Initial Plan ==")(0)
+    val filters = p.linesIterator.filter(l =>
+      l.contains("Filter") && l.contains("graft_bloom_probe")).toSeq
+    assert(filters.size == 1, s"expected one probe filter:\n${p.take(2500)}")
+    assert("md5\\(".r.findAllIn(filters.head).size == 1,
+      s"hash evaluated more than once per row:\n${filters.head}")
+    assert(filters.head.contains("graft_ring_slice"), filters.head)
   }
 
   test("waiting-supplier decorrelates to keyed semi+anti joins, dim broadcast") {

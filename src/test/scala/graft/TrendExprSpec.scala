@@ -163,4 +163,43 @@ class TrendExprSpec extends SparkSpecBase {
     assert(got.toSeq === want.toSeq)
     assert(!got.exists(_._1 == "view")) // 1-bucket group emits nothing
   }
+
+  test("null series elements fail loudly, naming the function") {
+    def withNull(xs: Long*): GenericArrayData =
+      new GenericArrayData(xs.map(x => if (x < 0) null else Long.box(x)).toArray[Any])
+    val mk = intercept[IllegalArgumentException](
+      PairTrendUtil.mannKendallS(withNull(3L, -1L, 5L)))
+    assert(mk.getMessage.contains("graft_mann_kendall_s") && mk.getMessage.contains("index 1"))
+    // a single null element is refused too, not read as a 0-pair series
+    intercept[IllegalArgumentException](PairTrendUtil.mannKendallS(withNull(-1L)))
+    val tsNull = intercept[IllegalArgumentException](PairTrendUtil.theilSenLowerMedian(
+      withNull(0L, 1L, -1L), withNull(4L, 5L, 6L)))
+    assert(tsNull.getMessage.contains("graft_theilsen_median") &&
+      tsNull.getMessage.contains("index 2 of the t array"))
+    val nsNull = intercept[IllegalArgumentException](PairTrendUtil.theilSenLowerMedian(
+      withNull(0L, 1L, 2L), withNull(-1L, 5L, 6L)))
+    assert(nsNull.getMessage.contains("index 0 of the n array"))
+    // end to end: the SQL expression fails the query with the same error
+    val df = Seq((1L, Seq(Some(2L), None, Some(7L)))).toDF("g", "xs")
+    val e = intercept[Exception](
+      df.select(graft.functions.MannKendallSExpr(col("xs"))).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("graft_mann_kendall_s: null element")),
+      s"unnamed failure: $e")
+  }
+
+  test("theil-sen median on tied and duplicate slopes == sorted pair-slope order statistic") {
+    // every slope value repeats many times, so only the order statistic's
+    // VALUE can be compared: the primitive slope sort must land on the
+    // same element as the (slope, i, j)-ordered pair list
+    val rnd = new scala.util.Random(11)
+    for (trial <- 0 until 20) {
+      val n = 2 + rnd.nextInt(40)
+      val ts = Array.tabulate(n)(_.toLong)
+      val ns = Array.fill(n)(rnd.nextInt(2).toLong)
+      val got = PairTrendUtil.theilSenLowerMedian(
+        new GenericArrayData(ts), new GenericArrayData(ns))
+      assert(java.lang.Double.compare(got, bruteMedian(ts, ns)) === 0, s"trial $trial n=$n")
+    }
+  }
 }
