@@ -14,6 +14,11 @@ import graft.store.TripleStore
   * scatter/gather goroutines, greedy set cover of peer keyspaces)
   * disappears: a rooted step is a partition-pruned scan, an unrooted step
   * is a full scan over all partitions, and "gather" is the job result.
+  * A traversal hop is routed by subject hash as the reference routes each
+  * sub-query to the peers owning its subjects (core/query.go:38-106): the
+  * hop reads only the buckets owning the frontier's subjects
+  * ([[graft.store.TripleStore.traverseStep]]), and the frontier is still
+  * never collected to the driver.
   * Two reference bugs are fixed by construction and documented:
   *  - unrooted queries skipped the local node (`TODO localnode`,
   *    core/query.go:42) — a Spark scan includes every partition;
@@ -28,10 +33,11 @@ final class Engine(val store: TripleStore) {
     * as-is; step N+1 is constrained to subjects drawn from step N's
     * objects — the reference rewrites this as a literal
     * `OR(subj=obj1, subj=obj2, …)` list (unbounded width, materialized on
-    * the coordinator); we express it as a semi-join on `subj`, which
-    * Spark turns into a broadcast semi-join while the frontier is small
-    * and a shuffled one when it isn't. The frontier never touches the
-    * driver.
+    * the coordinator); we express it as a semi-join on `(bucket, subj)`,
+    * which Spark turns into a broadcast semi-join that prunes the store
+    * to the frontier's buckets while the frontier is small, and a
+    * shuffled one over every bucket when it isn't. The frontier never
+    * touches the driver.
     *
     * `limit <= 0` = unlimited. Divergence (documented): globally exact
     * limit, vs the reference's per-local-shard limit that over-returns
@@ -39,10 +45,7 @@ final class Engine(val store: TripleStore) {
     */
   def executeQuery(steps: Seq[ArrayOp], limit: Int = -1): DataFrame = {
     require(steps.nonEmpty, "query needs at least one step")
-    val first = store.query(steps.head)
-    val joined = steps.tail.foldLeft(first) { (prev, step) =>
-      Engine.traverseStep(store.all, prev, step)
-    }
+    val joined = steps.tail.foldLeft(store.query(steps.head))(store.traverseStep)
     if (limit > 0) joined.limit(limit) else joined
   }
 
@@ -74,9 +77,11 @@ object Engine {
     * next step's subjects to the previous step's objects (semi-join), then
     * apply the step's pattern filter. Exposed statically so the traversal
     * semantics can run over derived triple views, not just a TripleStore.
+    * The frontier is not deduplicated: a semi-join ignores duplicates, and
+    * a `distinct` would add an aggregate, a shuffle and a job per hop.
     */
   def traverseStep(triples: DataFrame, prev: DataFrame, step: ArrayOp): DataFrame = {
-    val frontier = prev.select(col("obj").as("subj")).distinct()
+    val frontier = prev.select(col("obj").as("subj"))
     triples
       .join(frontier, Seq("subj"), "left_semi")
       .filter(PatternCompiler.compile(step))

@@ -68,6 +68,10 @@ import graft.model.{ArrayOp, Keyspace, Triple}
   *    insert reads the store without the insert's rows; one built before
   *    a `compact` still points at the pre-compaction files, which the
   *    swap removes, so executing it afterwards fails.
+  *  - `count()` follows the relation: it sums the parquet footers of the
+  *    relation's files once, and the count is dropped with the relation,
+  *    by the same writes, `compact` and [[refresh]]. Bloom sizing reads
+  *    the same count.
   */
 final class TripleStore(
     val spark: SparkSession,
@@ -97,7 +101,9 @@ final class TripleStore(
   /** Raw read including the `bucket` partition column: the resolved
     * relation, shared until the next write or [[refresh]].
     */
-  def raw: DataFrame =
+  def raw: DataFrame = relation.df
+
+  private def relation: Resolved =
     relations(spark, qualifiedPath) {
       if (exists) spark.read.schema(StoreSchema).parquet(path)
       else emptyTriples(spark).withColumn("bucket", bucketCol)
@@ -173,6 +179,30 @@ final class TripleStore(
     if (limit > 0) filtered.limit(limit) else filtered
   }
 
+  /** One traversal hop: the triples matching `step` whose subject is an
+    * object of `prev` (reference: core/query.go:14-33), routed by subject
+    * hash like the reference's per-peer sub-queries (core/query.go:38-106).
+    * The frontier carries its subjects' bucket, computed by the store's
+    * one bucket function, and the hop semi-joins `raw` on
+    * `(bucket, subj)`: while the frontier is small enough to broadcast,
+    * Spark's dynamic partition pruning reuses that broadcast to read only
+    * the buckets owning a frontier subject; a larger frontier is a
+    * shuffled semi-join over every bucket. The frontier never reaches the
+    * driver, and it is not deduplicated — a semi-join ignores duplicates.
+    * The bucket joins as a one-field struct: Spark generates the pruning
+    * predicate over an INT key as a `switch` on the literal bucket ids, a
+    * new class for every set of frontier buckets, and over a struct as
+    * one lookup in a referenced set, one class for every frontier.
+    */
+  def traverseStep(prev: DataFrame, step: ArrayOp): DataFrame = {
+    val frontier = prev.select(col("obj").as("subj"))
+      .select(col("subj"), struct(bucketCol.as("bucket")).as("shard"))
+    raw.withColumn("shard", struct(col("bucket")))
+      .join(frontier, Seq("shard", "subj"), "left_semi")
+      .select(Triple.columns.map(col): _*)
+      .filter(PatternCompiler.compile(step))
+  }
+
   def query(op: ArrayOp, limit: Int, keyspace: Option[Keyspace]): DataFrame = {
     // keyspace guard BEFORE the limit — limiting first would sample rows
     // and then drop the out-of-range ones, under-returning
@@ -185,7 +215,11 @@ final class TripleStore(
     if (limit > 0) guarded.limit(limit) else guarded
   }
 
-  def count(): Long = all.count()
+  /** Number of stored triples: the row counts in the parquet footers of
+    * the relation's files, read once per resolved relation and dropped
+    * with it — no Spark job, no column data read.
+    */
+  def count(): Long = relation.rows
 
   /** Store info (reference: triplestore/triplestore.go:150-170 — COUNT(*),
     * file size, and the free-disk syscall at :158-166; here the
@@ -212,33 +246,7 @@ final class TripleStore(
       case None => (all, 1.0)
     }
     buildBlooms(rows.select(GraftFunctions.canonicalKey().as("k"), lit(0).as("s")),
-      Seq(sliceCap(metadataRowCount, fraction)), fpp).head
-  }
-
-  /** Exact store row count summed from parquet footers on the driver —
-    * metadata IO only, no executor job, no column data read. Like Spark's
-    * file listing it skips every path whose name starts with `_` or `.`
-    * (the `_temporary/…` files of an in-flight or killed append), so it
-    * counts exactly the rows a read of the store sees.
-    */
-  private def metadataRowCount: Long = {
-    if (!exists) return 0L
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    val visible: org.apache.hadoop.fs.PathFilter =
-      p => !p.getName.startsWith("_") && !p.getName.startsWith(".")
-    def rows(dir: org.apache.hadoop.fs.Path): Long =
-      fs.listStatus(dir, visible).iterator.map { f =>
-        if (f.isDirectory) rows(f.getPath)
-        else if (!f.getPath.getName.endsWith(".parquet")) 0L
-        else {
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-          try r.getRecordCount finally r.close()
-        }
-      }.sum
-    rows(root)
+      Seq(sliceCap(count(), fraction)), fpp).head
   }
 
   /** Triples whose canonical key tests positive in `filter` — the
@@ -261,7 +269,7 @@ final class TripleStore(
     * off the parquet footers: one slice up to ~5·10⁷ triples, 6 at 2·10⁸).
     * Returns the number actually inserted.
     */
-  def sync(peer: TripleStore): Long = syncFromSliced(peer, syncSliceCount(metadataRowCount))
+  def sync(peer: TripleStore): Long = syncFromSliced(peer, syncSliceCount(count()))
 
   /** One replication round INTO this store from `peer` in `k` ring
     * slices ([[TripleStore.ringSlices]]; `k = 1` is the whole ring): the
@@ -271,7 +279,7 @@ final class TripleStore(
   def syncFromSliced(peer: TripleStore, k: Int = 8): Long =
     insert(bloomDiff(all, peer.all, GraftFunctions.canonicalKey(),
       sliceIdCol(ringSlices(k), GraftFunctions.murmur64(col("subj"))),
-      ringCaps(metadataRowCount, k)))
+      ringCaps(count(), k)))
 
   /** Sign + stamp + insert pipeline (reference: core/http.go:62-92):
     * sets `author`, `sig` (ECDSA over the SHA-1 fingerprint), one
@@ -379,28 +387,46 @@ object TripleStore {
     Encoders.product[Triple].schema.fields.map(_.copy(nullable = true)) :+
       StructField("bucket", IntegerType))
 
+  /** A resolved store relation and its row count. The count is the sum
+    * of the record counts in the footers of the files the relation
+    * listed, read on the driver on first use — the same files a scan of
+    * `df` reads (Spark's listing skips `_temporary/…` and every other
+    * name starting with `_` or `.`), so it equals `df.count()`.
+    */
+  private final class Resolved(val df: DataFrame) {
+    lazy val rows: Long = {
+      val conf = df.sparkSession.sparkContext.hadoopConfiguration
+      df.inputFiles.iterator.map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(new java.net.URI(f)), conf))
+        try r.getRecordCount finally r.close()
+      }.sum
+    }
+  }
+
   /** Resolved store relations, one per (session, qualified path), shared
     * by every store in the process. A hit is a map lookup; a miss
     * resolves outside the lock, so a slow listing blocks no other read.
     */
   private object relations {
-    private val byKey = scala.collection.mutable.HashMap.empty[(SparkSession, String), DataFrame]
+    private val byKey = scala.collection.mutable.HashMap.empty[(SparkSession, String), Resolved]
     // bumped by every drop: a resolve that overlapped a drop may have
     // listed a half-written store, so it serves its caller but is not kept
     private var generation = 0L
 
-    def apply(spark: SparkSession, path: String)(resolve: => DataFrame): DataFrame = {
+    def apply(spark: SparkSession, path: String)(resolve: => DataFrame): Resolved = {
       val key = (spark, path)
       val (hit, seen) = synchronized((byKey.get(key), generation))
       hit.getOrElse {
-        val df = resolve
+        val resolved = new Resolved(resolve)
         synchronized {
-          if (generation != seen) df
+          if (generation != seen) resolved
           else {
             // a process that stops and starts sessions must not keep
             // the dead sessions' relations alive
             byKey.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-            byKey.getOrElseUpdate(key, df)
+            byKey.getOrElseUpdate(key, resolved)
           }
         }
       }

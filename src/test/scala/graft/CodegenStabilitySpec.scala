@@ -4,6 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graftbridge.CodegenCounters
 
 import graft.api.{Queries, Tables}
+import graft.engine.Engine
+import graft.model.{ArrayOp, Triple, TriplePattern}
+import graft.store.TripleStore
 
 /** Generated-code stability: a query's second and third back-to-back
   * runs must compile no class — every class the first run generated is
@@ -69,5 +72,52 @@ class CodegenStabilitySpec extends SparkSpecBase {
     compiles(graft.ops.Basket.ssspWeighted(li, rounds = 1))
     val n = compiles(graft.ops.Basket.ssspWeighted(li, rounds = 9))
     assert(n == 0L, s"rounds 2..9 compiled $n classes")
+  }
+
+  test("serve: after one query of each shape, other root, part and predicate counts compile nothing") {
+    import spark.implicits._
+    // a 64-bucket store: n(i) links to n(i+1) and n(i+7) under two
+    // predicates and has one name
+    val st = new TripleStore(spark, tmpDir("codegen-serve") + "/t", 64)
+    def n(i: Int) = s"/n/${i % 500}"
+    st.insert((0 until 500).flatMap(i => Seq(Triple(n(i), "/p/a", n(i + 1)),
+      Triple(n(i), "/p/b", n(i + 7)), Triple(n(i), "/p/name", s"name $i"))).toDF())
+    val eng = new Engine(st)
+    def subj(i: Int) = TriplePattern(subj = Some(n(i)))
+    def pred(p: String) = TriplePattern(pred = Some(p))
+    def or(ps: Seq[TriplePattern]) = ArrayOp.Or(ps)
+    def ran(df: => DataFrame): Long = {
+      val c0 = CodegenCounters.compiles
+      df.collect()
+      CodegenCounters.compiles - c0
+    }
+    def json(parts: Seq[(Int, Option[String])]) = parts.map {
+      case (i, None) => s"""{"subj":"${n(i)}"}"""
+      case (i, Some(p)) => s"""{"subj":"${n(i)}","pred":"$p"}"""
+    }.mkString("[", ",", "]")
+    def traverse(roots: Seq[Int], hops: Seq[Seq[String]]) =
+      eng.executeQuery(or(roots.map(subj)) +: hops.map(ps => or(ps.map(pred))))
+    // one query of each shape. Spark generates a broadcast semi-join's
+    // probe loop for unique or for repeated build keys, so a traversal
+    // whose frontier repeats a subject (roots 3 and 9 both reach n10, and
+    // their next hop reaches n11 and n17 twice) is a shape of its own
+    st.count()
+    Seq(st.query(or(Seq(subj(1)))),
+      eng.queryJson(json(Seq(1 -> None))), eng.queryJson(json(Seq(2 -> Some("/p/a")))),
+      eng.queryJson(json(Seq(3 -> None, 4 -> Some("/p/b")))),
+      traverse(Seq(1), Seq(Seq("/p/a"))), traverse(Seq(1), Seq(Seq("/p/a"), Seq("/p/b"))),
+      traverse(Seq(3, 9), Seq(Seq("/p/a"))), traverse(Seq(3, 9), Seq(Seq("/p/a", "/p/b"), Seq("/p/name")))
+    ).foreach(ran(_))
+    val compiled = Seq(
+      "lookup" -> ran(st.query(or(Seq(subj(42))))),
+      "or lookups" -> (2 to 8).map(k => ran(st.query(or((0 until k).map(i => subj(10 * i + k)))))).sum,
+      "json" -> Seq(Seq(5 -> None, 6 -> None), Seq(7 -> Some("/p/a"), 8 -> Some("/p/name")),
+        Seq(9 -> Some("/p/b"), 10 -> None, 11 -> None), Seq(12 -> None, 13 -> Some("/p/a"),
+          14 -> Some("/p/b"))).map(q => ran(eng.queryJson(json(q)))).sum,
+      "2-step" -> (1 to 5).map(k => ran(traverse((0 until k).map(_ * 31 + k),
+        Seq(Seq("/p/a", "/p/b").take(1 + k % 2))))).sum,
+      "3-step" -> (1 to 5).map(k => ran(traverse((0 until k).map(_ * 17 + k),
+        Seq(Seq("/p/b", "/p/a").take(1 + k % 2), Seq("/p/name", "/p/a").take(2 - k % 2))))).sum)
+    assert(compiled.forall(_._2 == 0), s"classes compiled per shape: $compiled")
   }
 }

@@ -30,8 +30,57 @@ class PlanSpec extends SparkSpecBase {
     val q = st.query(graft.model.ArrayOp.of(
       graft.model.TriplePattern(subj = Some("s1"))))
     val p = q.queryExecution.executedPlan.toString
-    assert(p.contains("PushedFilters: [IsNotNull(subj), EqualTo(subj,s1)]") ||
-      p.contains("EqualTo(subj,s1)"), s"subject equality not pushed:\n${p.take(2000)}")
+    // a subject group compiles to one InSet, pushed as In whatever its size
+    assert(p.contains("PushedFilters: [In(subj, [s1])]"),
+      s"subject membership not pushed:\n${p.take(2000)}")
+  }
+
+  /** A 64-bucket store where n(i) links to n(i+1). */
+  private def chainStore(): graft.store.TripleStore = {
+    import spark.implicits._
+    val st = new graft.store.TripleStore(spark, tmpDir("plan-chain") + "/t", 64)
+    st.insert((0 until 400).map(i => graft.model.Triple(s"n$i", "next", s"n${(i + 1) % 400}")).toDF())
+    st
+  }
+
+  private def subjects(xs: String*) =
+    graft.model.ArrayOp.Or(xs.map(x => graft.model.TriplePattern(subj = Some(x))))
+
+  test("a rooted OR query pushes In(subj, …) to parquet") {
+    val q = chainStore().query(subjects("n3", "n4", "n5"))
+    q.collect()
+    val p = q.queryExecution.executedPlan.toString
+    assert("PushedFilters: \\[In\\(subj, \\[n[345],n[345],n[345]\\]\\)\\]".r
+      .findFirstIn(p).nonEmpty, s"subject membership not pushed:\n${p.take(2000)}")
+  }
+
+  test("a store hop: frontier side has no aggregate or exchange; the scan prunes buckets dynamically") {
+    import org.apache.spark.sql.catalyst.expressions.DynamicPruningExpression
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val next = graft.model.ArrayOp.of(graft.model.TriplePattern(pred = Some("next")))
+    val df = new graft.engine.Engine(chainStore()).executeQuery(Seq(subjects("n1", "n2"), next))
+    assert(df.select("subj").collect().map(_.getString(0)).toSet == Set("n2", "n3"))
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val plan = df.queryExecution.executedPlan
+    val hops = aqe.collect(plan) { case j: BroadcastHashJoinExec if j.joinType == LeftSemi => j }
+    assert(hops.size == 1, s"one broadcast semi-join expected:\n$plan")
+    val frontierSide = aqe.collect(hops.head.right) {
+      case a: BaseAggregateExec => a
+      case e: ShuffleExchangeLike => e
+    }
+    assert(frontierSide.isEmpty, s"frontier side aggregates or shuffles:\n$plan")
+    val scans = aqe.collect(hops.head.left) { case s: FileSourceScanExec => s }
+    assert(scans.size == 1 && scans.head.partitionFilters.exists {
+      case d: DynamicPruningExpression => d.references.exists(_.name == "bucket")
+      case _ => false
+    }, s"no dynamic bucket pruning on the hop's scan:\n$plan")
+    // only the frontier's buckets (n2's and n3's) are read
+    assert(scans.head.metrics("numFiles").value <= 2, s"hop read ${scans.head.metrics("numFiles").value} files")
   }
 
   test("scan is column-pruned to referenced columns") {

@@ -22,19 +22,30 @@ class PropertySpec extends AnyFunSuite {
   } yield TriplePattern.fromStrings(s, p, o, l)
 
   /** Reference semantics, straight from triplestore.go:110-129: match on
-    * every non-empty field.
+    * every non-empty field — in SQL's three-valued logic, where a null
+    * field makes its equality unknown (None).
     */
-  private def refMatch(t: Triple, p: TriplePattern): Boolean =
-    p.subj.forall(_ == t.subj) && p.pred.forall(_ == t.pred) &&
-      p.obj.forall(_ == t.obj) && p.lang.forall(_ == t.lang) &&
-      p.author.forall(_ == t.author)
+  private def refMatch(t: Triple, p: TriplePattern): Option[Boolean] =
+    and3(Seq(p.subj -> t.subj, p.pred -> t.pred, p.obj -> t.obj,
+      p.lang -> t.lang, p.author -> t.author).collect {
+        case (Some(v), f) => Option(f).map(_ == v) })
 
-  private def refEval(t: Triple, op: ArrayOp): Boolean = {
+  private def and3(xs: Seq[Option[Boolean]]): Option[Boolean] =
+    if (xs.contains(Some(false))) Some(false)
+    else if (xs.contains(None)) None
+    else Some(true)
+
+  private def or3(xs: Seq[Option[Boolean]]): Option[Boolean] =
+    if (xs.isEmpty || xs.contains(Some(true))) Some(true)
+    else if (xs.contains(None)) None
+    else Some(false)
+
+  private def refEval(t: Triple, op: ArrayOp): Option[Boolean] = {
     val operands = op.triples.map(refMatch(t, _)) ++ op.args.map(refEval(t, _))
     op match {
-      case _: ArrayOp.Not => !operands.head
-      case _: ArrayOp.And => operands.forall(identity)
-      case _: ArrayOp.Or  => operands.isEmpty || operands.exists(identity)
+      case _: ArrayOp.Not => operands.head.map(!_)
+      case _: ArrayOp.And => and3(operands)
+      case _: ArrayOp.Or  => or3(operands)
     }
   }
 
@@ -42,9 +53,17 @@ class PropertySpec extends AnyFunSuite {
     val leafs = Gen.nonEmptyListOf(genPattern).map(ps => ArrayOp.Or(ps))
     val ands = Gen.nonEmptyListOf(genPattern).map(ps => ArrayOp.And(ps))
     val nots = genPattern.map(p => ArrayOp.Not(Seq(p)))
-    Gen.oneOf(leafs, ands, nots,
+    // ORs whose patterns all fix subj and pred (some obj too): the
+    // multi-field membership groups, negated
+    val fixed = Gen.oneOf("a", "s1", "s2", "p", "q", "o", "b")
+    val grouped = Gen.nonEmptyListOf(for {
+      s <- fixed; p <- fixed; o <- Gen.option(fixed)
+    } yield TriplePattern(Some(s), Some(p), o))
+    val notGroups = grouped.map(ps => ArrayOp.Not(Nil, Seq(ArrayOp.Or(ps))))
+    Gen.oneOf(leafs, ands, nots, notGroups,
       Gen.zip(leafs, ands).map { case (a, b) => ArrayOp.And(Nil, Seq(a, b)) },
-      Gen.zip(nots, leafs).map { case (a, b) => ArrayOp.Or(Nil, Seq(a, b)) })
+      Gen.zip(nots, leafs).map { case (a, b) => ArrayOp.Or(Nil, Seq(a, b)) },
+      Gen.zip(notGroups, leafs).map { case (a, b) => ArrayOp.And(Nil, Seq(a, b)) })
   }
 
   private val genKs: Gen[Keyspace] = for {
@@ -95,17 +114,21 @@ class PropertySpec extends AnyFunSuite {
   test("ArrayOp compile ≡ reference row semantics on a corpus") {
     val spark = SparkSpecBase.session
     import spark.implicits._
+    // rows with a null subj, pred or obj: a filter keeps a row only when
+    // its predicate is true, and NOT of unknown is unknown
+    val nulls = Seq(Triple(null, "p", "o"), Triple("a", null, "o"), Triple("s1", "p", null),
+      Triple(null, null, "b"), Triple("s3", "q", "b", lang = null))
     val corpus = (for {
       s <- Seq("", "a", "s1", "s2", "x y")
       p <- Seq("", "p", "q")
       o <- Seq("", "o", "b")
-    } yield Triple(s, p, o, lang = if (s.length % 2 == 0) "en" else "")).distinct
+    } yield Triple(s, p, o, lang = if (s.length % 2 == 0) "en" else "")).distinct ++ nulls
     val df = corpus.toDF().cache()
-    samples(genOp, 60).foreach { op =>
+    samples(genOp, 100).foreach { op =>
       val got = df.filter(PatternCompiler.compile(op))
         .select("subj", "pred", "obj").collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-      val want = corpus.filter(refEval(_, op)).map(t => (t.subj, t.pred, t.obj)).toSet
+      val want = corpus.filter(refEval(_, op).contains(true)).map(t => (t.subj, t.pred, t.obj)).toSet
       assert(got == want, s"op=$op")
     }
   }

@@ -579,4 +579,39 @@ class TripleStoreSpec extends SparkSpecBase {
       ArrayOp.of(TriplePattern(pred = Some("next"))),
       ArrayOp.of(TriplePattern(pred = Some("next")))))) == Set(("n3", "next", "n4")))
   }
+
+  test("count answers from the relation's parquet footers: no job when warm, equal to a scan after every write") {
+    import spark.implicits._
+    val st = freshStore(buckets = 64)
+    def same(after: String): Unit = assert(st.count() == st.all.count(), after)
+    st.insert((0 until 300).map(i => Triple(s"c$i", "p", s"o$i")).toDF())
+    same("insert")
+    assert(jobsRunBy { st.count(); st.info() } == 0)
+    assert(st.info().triples == 300)
+    st.insertSigned(Seq(Triple("c1", "p", "o1"), Triple("c1", "q", "x")).toDF(),
+      graft.functions.TripleCrypto.generateKeyPair())
+    same("insertSigned")
+    assert(st.count() == 301)
+    st.compact()
+    same("compact")
+    // an outside writer, then refresh()
+    Seq(Triple("/m/0new", "p", "o")).toDF()
+      .withColumn("bucket", lit(TripleStore.bucketOf("/m/0new", 64)))
+      .write.mode("append").partitionBy("bucket").parquet(st.path)
+    st.refresh()
+    same("refresh after an outside write")
+    assert(st.count() == 302)
+    // a part file left under _temporary by a killed append is not read
+    val root = new org.apache.hadoop.fs.Path(st.path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val data = fs.listFiles(root, true)
+    var file = data.next().getPath
+    while (!file.getName.endsWith(".parquet")) file = data.next().getPath
+    org.apache.hadoop.fs.FileUtil.copy(fs, file, fs, new org.apache.hadoop.fs.Path(root,
+      s"_temporary/0/_temporary/attempt_0/${file.getParent.getName}/${file.getName}"),
+      false, spark.sparkContext.hadoopConfiguration)
+    st.refresh()
+    same("planted _temporary part file")
+    assert(st.count() == 302)
+  }
 }
