@@ -432,7 +432,7 @@ private[api] object QueriesDedup {
       },
       Some(TextSql.dupNgramFraction)),
 
-    // Cluster resolution over the near-dup pair graph: GraphX connected
+    // Cluster resolution over the near-dup pair graph: connected
     // components label every member with its cluster's min doc id — the
     // keep-one-per-cluster step pairwise dedup can't express (A~B, B~C
     // must delete both B and C, not just one of each pair). Oracle is

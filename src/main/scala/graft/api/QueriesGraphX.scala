@@ -8,7 +8,7 @@ import graft.expr.PatternCompiler
 import graft.model.{ArrayOp, TriplePattern}
 import QueriesShared._
 
-/** GraphX/Pregel analytics over the shared triple graph.
+/** Graph analytics over the shared triple graph.
   *
   * One contiguous, ORDER-PRESERVING slice of the declared query
   * surface; [[Queries.registry]] concatenates the slices in the
@@ -17,13 +17,12 @@ import QueriesShared._
   */
 private[api] object QueriesGraphX {
   val entries: Seq[(String, Q)] = Seq(
-    // ===== Extension: GraphX/Pregel analytics =====
-    // 2-hop reverse reachability from a region node via Pregel BFS;
-    // oracle = the equivalent 2 joins.
+    // ===== Extension: graph analytics =====
+    // 2-hop reverse reachability from a region node via BFS; oracle =
+    // the equivalent 2 joins.
     "graph_2hop" -> Q(
       (s, d) => graft.graph.GraphOps
-        .reverseBfs(graft.graph.GraphOps.cachedGraph(Tables.starTriples(s, d), d),
-          "region:2", maxDepth = 2)
+        .reverseBfs(Tables.starTriples(s, d), "region:2", maxDepth = 2)
         .withColumn("depth", col("depth").cast("long"))
         .orderBy("depth", "node"),
       Some(withCte(
@@ -58,31 +57,26 @@ private[api] object QueriesGraphX {
     // Personalized PageRank from a seed entity — the "related nodes"
     // recommendation scorer (rank ∝ seed-restarting-walk visit
     // frequency). Same order-free fixed-point BIGINT loop as the exact
-    // PageRank, teleporting to the seed only; message volume stays
-    // proportional to the REACHED frontier (zero-rank vertices send
-    // nothing), so a seed query on a 100 TB graph touches its
-    // neighborhood, not the graph. Oracle unrolls the same 5 rounds.
+    // PageRank, teleporting to the seed only — the batch PPR with one
+    // seed; the rank frame holds the seed's reached neighborhood only.
+    // Oracle unrolls the same 5 rounds.
     "graph_ppr_related" -> Q(
       (s, d) => graft.graph.GraphOps
-        .personalizedPageRankFixedPoint(
-          graft.graph.GraphOps.cachedGraph(Tables.starTriples(s, d), d),
-          "order:1", iters = 5)
+        .personalizedPageRankFixedPoint(Tables.starTriples(s, d), Seq("order:1"), iters = 5)
         .filter(col("rank_u") > 0)
+        .select("node", "rank_u")
         .orderBy(desc("rank_u"), asc("node")),
       Some(GraphSql.personalizedPagerank("order:1", iters = 5))),
 
     // BATCHED multi-seed PPR — "related nodes for every query entity"
-    // in one pass: state is keyed by (node, seed) pairs end-to-end
-    // (closure, rank loop, teleport), so k seeds share each hop's
-    // edge-bucket shuffle instead of running k passes, and a batch of
-    // hub seeds stays executor-resident where k driver closures would
-    // not. Per-pair arithmetic is the same order-free BIGINT loop, so
-    // each seed's slice is bit-identical to its single-seed run — the
+    // in one pass: rank state is keyed by (seed, node) rows, so k seeds
+    // share each round's join against the edge frame instead of running
+    // k passes. Per-pair arithmetic is the same order-free BIGINT loop,
+    // so each seed's slice is bit-identical to its single-seed run — the
     // oracle IS the single-seed SQL unioned per seed.
     "graph_ppr_batch" -> Q(
       (s, d) => graft.graph.GraphOps
-        .personalizedPageRankFixedPointBatch(
-          graft.graph.GraphOps.cachedGraph(Tables.starTriples(s, d), d),
+        .personalizedPageRankFixedPoint(Tables.starTriples(s, d),
           Seq("order:1", "order:2", "order:3"), iters = 5)
         .filter(col("rank_u") > 0)
         .orderBy(asc("seed"), desc("rank_u"), asc("node")),
@@ -93,18 +87,16 @@ private[api] object QueriesGraphX {
     // node string (portable — oracle is 20 unrolled min-label rounds).
     "graph_cc_sizes" -> Q(
       (s, d) => graft.graph.GraphOps
-        .componentSizes(graft.graph.GraphOps.cachedGraph(Tables.starTriples(s, d), d))
+        .componentSizes(Tables.starTriples(s, d))
         .orderBy(desc("n"), asc("component")).limit(20),
       Some(GraphSql.ccSizes(rounds = 20, limit = 20))),
 
     // BFS depth profile: frontier size per hop from a seed (the
-    // reachability fan-out report). The Pregel traversal prunes to the
-    // frontier each round — message volume is the frontier's in-edges,
-    // never the graph; the oracle unrolls the layered star schema.
+    // reachability fan-out report). Each hop joins only the frontier's
+    // in-edges; the oracle unrolls the layered star schema.
     "graph_bfs_profile" -> Q(
       (s, d) => graft.graph.GraphOps
-        .reverseBfs(graft.graph.GraphOps.cachedGraph(Tables.starTriples(s, d), d),
-          "region:2", maxDepth = 4)
+        .reverseBfs(Tables.starTriples(s, d), "region:2", maxDepth = 4)
         .groupBy(col("depth").cast("long").as("depth"))
         .agg(count(lit(1)).as("n_nodes"))
         .orderBy("depth"),

@@ -600,31 +600,11 @@ object TextSql {
        |  CAST(floor(sum(is_t * is_c) * 10000 / sum(is_c)) AS BIGINT) AS precision_x1e4
        |FROM j""".stripMargin
 
-  /** Jaccard histogram of the banded candidates (bucket = floor(j·10),
-    * capped at 9 so j = 1.0 lands with the 0.9s) — the threshold-tuning
-    * readout over the same candidate/verify CTEs as the Jaccard gate.
-    */
-  val dedupJaccardHistogram: String =
-    s"""WITH ${plantCte(exact = false)},
-       |$shinglesCte,
-       |$minhashCandCtes,
-       |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-       |inter AS (
-       |  SELECT c.a, c.b, count(*) AS i
-       |  FROM cand c JOIN sh l ON l.doc_id = c.a JOIN sh r ON r.doc_id = c.b AND r.s = l.s
-       |  GROUP BY 1, 2),
-       |jac AS (
-       |  SELECT round(CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE), 6) AS jaccard
-       |  FROM inter
-       |  JOIN sizes sa ON sa.doc_id = a
-       |  JOIN sizes sb ON sb.doc_id = b)
-       |SELECT least(9, CAST(floor(jaccard * 10) AS BIGINT)) AS j_bucket,
-       |  count(*) AS n_pairs
-       |FROM jac GROUP BY 1 ORDER BY j_bucket""".stripMargin
-
-  /** [[dedupJaccardHistogram]] at the schedule-chosen band cap — the
-    * declared `dedup_jaccard_histogram` mirror (Spark side:
-    * Dedup.ngramJaccardPairsAuto). Only the candidate chain differs.
+  /** Jaccard histogram of the banded candidates at the schedule-chosen
+    * band cap (bucket = floor(j·10), capped at 9 so j = 1.0 lands with
+    * the 0.9s) — the declared `dedup_jaccard_histogram` mirror (Spark
+    * side: Dedup.ngramJaccardPairsAuto), the threshold-tuning readout
+    * over the same candidate/verify CTEs as the Jaccard gate.
     */
   def dedupJaccardHistogramAuto: String =
     s"""WITH ${plantCte(exact = false)},
@@ -644,29 +624,11 @@ object TextSql {
        |  count(*) AS n_pairs
        |FROM jac GROUP BY 1 ORDER BY j_bucket""".stripMargin
 
-  /** Jaccard over MinHash-banded candidates only — mirrors the Spark
-    * plan's prefilter (candidates from the capped bands, exact Jaccard
-    * verified by joining the pair list back on the shingle rows).
-    */
-  val dedupNgramJaccard: String =
-    s"""WITH ${plantCte(exact = false)},
-       |$shinglesCte,
-       |$minhashCandCtes,
-       |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-       |inter AS (
-       |  SELECT c.a, c.b, count(*) AS i
-       |  FROM cand c JOIN sh l ON l.doc_id = c.a JOIN sh r ON r.doc_id = c.b AND r.s = l.s
-       |  GROUP BY 1, 2)
-       |SELECT a, b, jaccard FROM (
-       |  SELECT a, b, round(CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE), 6) AS jaccard
-       |  FROM inter
-       |  JOIN sizes sa ON sa.doc_id = a
-       |  JOIN sizes sb ON sb.doc_id = b)
-       |WHERE jaccard >= 0.5 ORDER BY a, b""".stripMargin
-
-  /** [[dedupNgramJaccard]] at the schedule-chosen band cap — the
-    * declared `dedup_ngram_jaccard` mirror (Spark side:
-    * Dedup.ngramJaccardPairsAuto). Only the candidate chain differs.
+  /** Jaccard over MinHash-banded candidates at the schedule-chosen band
+    * cap — the declared `dedup_ngram_jaccard` mirror (Spark side:
+    * Dedup.ngramJaccardPairsAuto): candidates from the capped bands,
+    * exact Jaccard verified by joining the pair list back on the
+    * shingle rows.
     */
   def dedupNgramJaccardAuto: String =
     s"""WITH ${plantCte(exact = false)},
@@ -700,42 +662,15 @@ object TextSql {
       |    source, lang
       |  FROM documents WHERE doc_id < 20)""".stripMargin
 
-  /** Containment mirror of Dedup.containmentPairs: the stop-shingle cap
-    * (same QUALIFY shape and constant as the band caps), intersections
+  /** Containment mirror of Dedup.containmentPairs at the SCHEDULE-chosen
+    * stop-shingle cap — replays Dedup.containmentSchedule in SQL: cap =
+    * clamp(8, 128, budget // n) over the SAME corpus count the Scala
+    * side reads, as a one-row CTE the QUALIFY compares against (BIGINT
+    * floor division of non-negative values is exact on both engines, so
+    * the schedule cannot diverge by a ulp). After the cap: intersections
     * via the shingle-keyed inverted-index join, sizes over the SAME
     * kept-shingle space, min-denominator ratio and smaller-side
-    * contained_id. The shingle width n is pinned to 3 by shinglesCte;
-    * a registration must pass the SAME (threshold, maxShingleDf) to the
-    * Scala operator or the compare silently diverges.
-    */
-  def dedupContainment(threshold: Double = 0.8,
-      maxShingleDf: Int = graft.ops.Dedup.DefaultBandCap): String =
-    s"""WITH $plantQuoteCte,
-       |$shinglesCte,
-       |shf AS (
-       |  SELECT doc_id, s FROM sh
-       |  QUALIFY count(*) OVER (PARTITION BY s) <= $maxShingleDf),
-       |sizes AS (SELECT doc_id, count(*) AS sz FROM shf GROUP BY doc_id),
-       |inter AS (
-       |  SELECT l.doc_id AS a, r.doc_id AS b, count(*) AS i
-       |  FROM shf l JOIN shf r ON r.s = l.s AND l.doc_id < r.doc_id
-       |  GROUP BY 1, 2)
-       |SELECT a, b, containment, contained_id FROM (
-       |  SELECT a, b,
-       |    round(CAST(i AS DOUBLE) / CAST(least(sa.sz, sb.sz) AS DOUBLE), 6) AS containment,
-       |    CASE WHEN sa.sz <= sb.sz THEN a ELSE b END AS contained_id
-       |  FROM inter
-       |  JOIN sizes sa ON sa.doc_id = a
-       |  JOIN sizes sb ON sb.doc_id = b)
-       |WHERE containment >= $threshold ORDER BY a, b""".stripMargin
-
-  /** Containment mirror at the SCHEDULE-chosen stop-shingle cap —
-    * replays Dedup.containmentSchedule in SQL: cap = clamp(8, 128,
-    * budget // n) over the SAME corpus count the Scala side reads, as a
-    * one-row CTE the QUALIFY compares against (BIGINT floor division of
-    * non-negative values is exact on both engines, so the schedule
-    * cannot diverge by a ulp). Everything after the cap is the fixed
-    * mirror's text.
+    * contained_id. The shingle width n is pinned to 3 by shinglesCte.
     */
   def dedupContainmentAuto(threshold: Double = 0.8): String =
     s"""WITH $plantQuoteCte,
@@ -885,7 +820,7 @@ object TextSql {
   /** ±1 sign-LSH hyperplanes from the parity of md5's first hex nibble
     * (plane family t·bits+j over dims 0..dim-1) — the engine-portable
     * construction Similarity.planeSign uses, so buckets replay
-    * bit-for-bit. Shared by simAnnLsh and dedupEmbedding.
+    * bit-for-bit. Used by the simAnnLsh mirrors.
     */
   private def lshPlanesCte(tables: Int = 8, bits: Int = 6, dim: Int = 64): String =
     s"""planes AS (
@@ -923,18 +858,6 @@ object TextSql {
        |      / (sqrt(list_dot_product(x.e, x.e)) * sqrt(list_dot_product(y.e, y.e))), 6) AS cos
        |  FROM cand c JOIN v x ON x.vec_id = c.a JOIN v y ON y.vec_id = c.b)
        |WHERE cos >= $threshold ORDER BY a, b""".stripMargin
-
-  /** Embedding near-dup mirror at EXPLICIT (bits, tables) knobs — the
-    * plane family is deterministic (md5 nibble parity, plane id
-    * t·bits+j), so the oracle can replay ANY knob choice; a
-    * registration must pass the same knobs to the Scala operator.
-    */
-  def dedupEmbedding(bits: Int = 6, tables: Int = 8,
-      threshold: Double = 0.45): String =
-    s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-       |${lshPlanesCte(tables, bits)},
-       |$lshBucketsCte,
-       |${dedupEmbeddingTail(threshold)}""".stripMargin
 
   /** Embedding near-dup mirror at SCHEDULE-chosen knobs — replays
     * Dedup.lshSchedule in SQL (integer arithmetic on both sides, so no
@@ -974,8 +897,8 @@ object TextSql {
        |${dedupEmbeddingTail(0.45)}""".stripMargin
 
   /** Cosine histogram over the schedule-knob candidate pairs — the
-    * threshold-tuning readout (mirror of dedupJaccardHistogram's role
-    * for MinHash): same prefix CTEs as dedupEmbeddingAuto, every
+    * threshold-tuning readout (mirror of dedupJaccardHistogramAuto's
+    * role for MinHash): same prefix CTEs as dedupEmbeddingAuto, every
     * distinct candidate pair scored, bucketed by floor(cos·10) with the
     * 1.0 endpoint folded into bucket 9. Runs on a deterministic 50%
     * vec-id hash sample (same audit-sample discipline as
@@ -1448,8 +1371,8 @@ object TextSql {
 
   /** Near-dup cluster resolution mirror: the SAME capped MinHash
     * candidate pairs (minhashCandCtes — the oracles cannot drift), then
-    * `rounds` unrolled min-label propagation rounds (the GraphX
-    * connectedComponents fixpoint; components here are band-collision
+    * `rounds` unrolled min-label propagation rounds (the
+    * GraphOps.connectedComponents fixpoint; components here are band-collision
     * cliques, so eccentricity from each component's min node is far
     * below `rounds` — a shortfall would surface as a label mismatch in
     * the cross-SF verify sweep, same argument as GraphSql.ccSizes).

@@ -1,123 +1,58 @@
 package graft.graph
 
-import org.apache.spark.graphx.{Edge, EdgeDirection, Graph, VertexId}
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.Murmur3x64
-
-/** GraphX view of a triples table — the analytics surface the reference
-  * declared but never implemented (GREMLIN enum value,
+/** Graph analytics over a triples table — the traversal surface the
+  * reference declared but never implemented (GREMLIN enum value,
   * protocol/protocol.proto:71; ErrNotImplemented core/query.go:109-112).
-  * Flagged extension per BASELINE.json north star.
   *
-  * `VertexId = murmur3_64(node id)` — the same hash the reference uses
-  * for node identity on its keyspace ring (network/network.go:283-289),
-  * so graph partitioning is consistent with store sharding.
+  * Every algorithm is one kind of loop: each round joins the per-node
+  * state against the edges, aggregates, and ends in a
+  * `localCheckpoint` that cuts the lineage (the Pregel superstep as
+  * dataflow, GraphX OSDI'14 §4). Round-varying values (depth, rank)
+  * travel as columns, never as per-round literals, so rounds after the
+  * first reuse the first round's generated code.
   */
 object GraphOps {
 
-  /** Build a property graph: vertex attr = node string id, edge attr =
-    * predicate. Objects that never appear as subjects (literals) are
-    * vertices too — harmless for reachability, filtered where needed.
+  /** BFS from `source` following edges in reverse (obj → subj), up to
+    * `maxDepth` hops. Returns (node, depth: INT) for every node first
+    * reached at depth ≥ 1. Each hop joins the edges on obj ∈ frontier,
+    * takes the new subjects at frontier depth + 1, and anti-joins the
+    * nodes already reached (the source included); the loop stops at
+    * `maxDepth` or when the frontier is empty. The frontier and the
+    * reached set are broadcast every hop, which bounds a traversal to
+    * the nodes a broadcast holds (millions, not billions).
     */
-  def fromTriples(triples: DataFrame): Graph[String, String] = {
+  def reverseBfs(triples: DataFrame, source: String, maxDepth: Int): DataFrame = {
     val spark = triples.sparkSession
     import spark.implicits._
-    val edges: RDD[Edge[String]] = triples
-      .select("subj", "pred", "obj").as[(String, String, String)]
-      .rdd.map { case (s, p, o) =>
-        Edge(Murmur3x64.hash64(s), Murmur3x64.hash64(o), p)
-      }
-    val vertices: RDD[(VertexId, String)] = triples
-      .select(explode(array(col("subj"), col("obj"))).as("node"))
-      .distinct().as[String]
-      .rdd.map(n => (Murmur3x64.hash64(n), n))
-    // iterative algorithms (Pregel/PageRank/CC) traverse the graph many
-    // times — cache once at construction
-    Graph(vertices, edges).cache()
+    // a projection of the (cached) triples view: nothing to checkpoint
+    val e = triples.select(col("obj").as("node"), col("subj").as("next"))
+    var frontier = Seq(source -> 0).toDF("node", "depth").localCheckpoint()
+    var reached = frontier
+    var size = 1L
+    var hop = 0
+    while (hop < maxDepth && size > 0) {
+      // both state frames are broadcast: their size estimates compound
+      // from hop to hop, so unhinted joins flip strategy (and generated
+      // code) at whichever hop the estimate crosses the threshold
+      val n = Observation()
+      frontier = e.join(broadcast(frontier), "node")
+        .groupBy(col("next").as("node"))
+        .agg((min("depth") + 1).as("depth"))
+        .join(broadcast(reached), Seq("node"), "left_anti")
+        .observe(n, count(lit(1)).as("n"))
+        .localCheckpoint()
+      size = n.get("n").asInstanceOf[Long]
+      reached = reached.unionByName(frontier).localCheckpoint()
+      hop += 1
+    }
+    reached.filter(col("depth") >= 1)
   }
 
-  /** Graph construction memo, keyed by (session, source): BFS, PageRank
-    * and CC over the same triples view share one cached Graph instead of
-    * re-deriving vertices/edges per query — the same reuse a long-lived
-    * engine gets from its materialized graph view. NOT a WeakHashMap:
-    * the cached Graph's RDDs come from DataFrame.rdd, whose lineage
-    * strongly retains the owning session, so a weak key would never be
-    * collectable (value → key). Instead, stopped sessions are swept on
-    * access — the same lifetime discipline as Tables.triplesMemo.
-    */
-  private val memo = java.util.Collections.synchronizedMap(
-    new java.util.HashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, Graph[String, String]]]())
-
-  /** The session that owns this graph's RDDs: prefer the active/default
-    * session only when its context matches — binding result DataFrames
-    * to an arbitrary thread-active session would attach them to a
-    * session that may stop first in multi-session JVMs.
-    */
-  private def sessionOf(g: Graph[_, _]): SparkSession = {
-    val ctx = g.vertices.sparkContext
-    SparkSession.getActiveSession.filter(_.sparkContext eq ctx)
-      .orElse(SparkSession.getDefaultSession.filter(_.sparkContext eq ctx))
-      .getOrElse(throw new IllegalStateException(
-        "no active or default SparkSession on the graph's SparkContext — " +
-          "run graph ops from a thread bound to the owning session"))
-  }
-
-  def cachedGraph(triples: DataFrame, sourceKey: String): Graph[String, String] = {
-    memo.keySet.removeIf(sess => sess.sparkContext.isStopped)
-    memo.computeIfAbsent(triples.sparkSession,
-        _ => new java.util.concurrent.ConcurrentHashMap[String, Graph[String, String]]())
-      .computeIfAbsent(sourceKey, _ => fromTriples(triples))
-  }
-
-  /** Pregel BFS from `source`, following edges in reverse (obj → subj),
-    * up to `maxDepth`. Returns (node, depth) for reached nodes,
-    * depth >= 1. Deterministic (min-depth merge is order-free).
-    */
-  def reverseBfs(triples: DataFrame, source: String, maxDepth: Int): DataFrame =
-    reverseBfs(fromTriples(triples), source, maxDepth)
-
-  def reverseBfs(g: Graph[String, String], source: String, maxDepth: Int): DataFrame = {
-    val spark = sessionOf(g)
-    import spark.implicits._
-    val srcId = Murmur3x64.hash64(source)
-    // Pregel on a primitive Int depth attr (the node string would ride
-    // along in every vertex shuffle otherwise); names join back on once
-    val init = g.mapVertices((id, _) => if (id == srcId) 0 else Int.MaxValue)
-    val bfs = init.pregel(
-      initialMsg = Int.MaxValue,
-      maxIterations = maxDepth,
-      activeDirection = EdgeDirection.In)(
-      vprog = (_, d, msg) => math.min(d, msg),
-      // reverse traversal: message flows dst → src
-      sendMsg = t =>
-        if (t.dstAttr != Int.MaxValue && t.dstAttr + 1 < t.srcAttr)
-          Iterator((t.srcId, t.dstAttr + 1))
-        else Iterator.empty,
-      mergeMsg = math.min)
-    g.vertices.join(bfs.vertices)
-      .filter { case (_, (_, d)) => d >= 1 && d != Int.MaxValue }
-      .map { case (_, (node, d)) => (node, d) }
-      .toDF("node", "depth")
-  }
-
-  /** Fixed-iteration PageRank over the triples graph (staticPageRank
-    * semantics: init 1.0, rank' = 0.15 + 0.85·Σ srcRank/outDeg, dangling
-    * mass dropped), ranks floored at 1e-6 for display stability.
-    *
-    * NOT GraphX staticPageRank: that entry point rebuilds a
-    * degree-joined, edge-reweighted graph on every call
-    * (outerJoinVertices + mapTriplets + mapVertices each materialize new
-    * edge/vertex partitions), so the warmed [[cachedGraph]] buys it
-    * nothing — measured 2.7× the fixed-point twin's loop on the same
-    * cached graph. Instead this runs the same aggregateMessages loop as
-    * [[pageRankFixedPoint]] in Double arithmetic: contributions divide
-    * at send time (no reweighted edge copy), with the identical
-    * cache/materialize/unpersist round discipline.
-    */
   /** Degree-joined edge frame + node universe shared by both PageRank
     * loops: (src, dst, od) with one row per EDGE (multi-edges kept —
     * each triple row contributes, matching the oracle), nodes =
@@ -171,33 +106,82 @@ object GraphOps {
     out
   }
 
-  /** Connected components (undirected), component labeled by the
-    * minimum vertex hash — deterministic.
+  /** Connected components of the undirected graph over `edges` (src,
+    * dst — any orderable type, both columns the same): every node is
+    * labeled with the MINIMUM node of its component, a label any engine
+    * reproduces. Min-label propagation over both edge orientations,
+    * until no label changes (GraphX connectedComponents semantics).
+    *
+    * Two cuts keep the rounds small. Leaves (one incident edge: star
+    * spokes, literal objects, most near-dup pairs) take no part in the
+    * rounds: each core node starts from the min over itself and ALL its
+    * neighbours, leaves included, and a leaf finally takes its
+    * neighbour's label (a leaf-leaf edge is its own component). And only
+    * core nodes whose label dropped in the last round offer it again.
+    * Returns (node, component).
     */
-  def connectedComponents(triples: DataFrame): DataFrame =
-    connectedComponents(fromTriples(triples))
-
-  def connectedComponents(g: Graph[String, String]): DataFrame = {
-    val spark = sessionOf(g)
-    import spark.implicits._
-    g.vertices.join(g.connectedComponents().vertices)
-      .map { case (_, (node, cc)) => (node, cc) }
-      .toDF("node", "component")
+  def connectedComponents(edges: DataFrame): DataFrame = {
+    val e = edges.select(explode(array(
+        struct(col("src").as("a"), col("dst").as("b")),
+        struct(col("dst").as("a"), col("src").as("b")))).as("e"))
+      .select("e.a", "e.b")
+      .localCheckpoint()
+    // each node's min neighbour and edge count; a leaf's min neighbour
+    // is its only one
+    val nb = e.groupBy("a").agg(min("b").as("m"), count(lit(1)).as("deg"))
+      .localCheckpoint()
+    val core = nb.filter(col("deg") > 1).select(col("a"), col("m"))
+    // the core and its labels are broadcast too: a join of two shuffled
+    // branches lets AQE number its codegen stages in whichever order the
+    // branches finish, so reruns compile renamed classes
+    val coreEdges = e.join(broadcast(core.select("a")), "a")
+      .join(broadcast(core.select(col("a").as("b"))), "b")
+      .localCheckpoint()
+    // checkpoints a label frame; `moved` marks a label that dropped
+    def round(df: DataFrame): (DataFrame, Boolean) = {
+      val moved = Observation()
+      val out = df.observe(moved, max(col("moved")).as("any")).localCheckpoint()
+      (out, moved.get("any") == true)
+    }
+    var (lab, moving) = round(core.select(col("a").as("node"),
+      least(col("a"), col("m")).as("lbl"), (col("m") < col("a")).as("moved")))
+    while (moving) {
+      // the moved labels and their offers are broadcast for the reason
+      // reverseBfs gives
+      val offers = coreEdges.join(broadcast(lab.filter(col("moved"))), col("a") === col("node"))
+        .groupBy(col("b").as("node"))
+        .agg(min("lbl").as("offer"))
+      val next = round(lab.join(broadcast(offers), Seq("node"), "left")
+        .select(col("node"), least(col("lbl"), col("offer")).as("lbl"),
+          coalesce(col("offer") < col("lbl"), lit(false)).as("moved")))
+      lab = next._1
+      moving = next._2
+    }
+    val leaves = nb.filter(col("deg") === 1)
+      .join(broadcast(lab), col("m") === col("node"), "left")
+      .select(col("a").as("node"), coalesce(col("lbl"), least(col("a"), col("m"))).as("component"))
+    lab.select(col("node"), col("lbl").as("component")).unionByName(leaves)
   }
 
-  /** Component sizes with a PORTABLE label: the lexicographically
-    * smallest node string in each component (the GraphX min-hash label
-    * is engine-internal; the min string is reproducible by any engine,
-    * which is what makes the oracle possible).
+  /** Component sizes of the triples graph, each component labeled by
+    * its lexicographically smallest node string (the oracle replays
+    * the same label in unrolled SQL rounds). The rounds run on 64-bit
+    * xxhash ids, as GraphX's murmur VertexIds did: string keys make
+    * every round's min a sort, and an order-preserving dictionary costs
+    * more than the rounds. One min(node) pass over the labeled nodes
+    * then turns each component's id into its min string.
     */
-  def componentSizes(triples: DataFrame): DataFrame =
-    componentSizes(fromTriples(triples))
-
-  def componentSizes(g: Graph[String, String]): DataFrame =
-    connectedComponents(g)
+  def componentSizes(triples: DataFrame): DataFrame = {
+    val names = triples.select(col("subj").as("name"))
+      .union(triples.select(col("obj").as("name")))
+      .distinct()
+    connectedComponents(
+        triples.select(xxhash64(col("subj")).as("src"), xxhash64(col("obj")).as("dst")))
+      .join(names, col("node") === xxhash64(col("name")))
       .groupBy("component")
-      .agg(min("node").as("comp"), count(lit(1)).as("n"))
-      .select(col("comp").as("component"), col("n"))
+      .agg(min("name").as("label"), count(lit(1)).as("n"))
+      .select(col("label").as("component"), col("n"))
+  }
 
   /** Fixed-point PageRank in scaled integer arithmetic (rank units of
     * 1e-6): contrib = rank div outDeg, rank' = 0.15 + 0.85·Σcontrib,
@@ -232,287 +216,45 @@ object GraphOps {
     out
   }
 
-  /** Ceiling on the driver-resident seed neighborhood in
-    * [[personalizedPageRankFixedPoint]]: the ≤(iters-1)-hop forward
-    * closure is collected and re-broadcast as a sorted Long array
-    * (2²² ids = 32 MB). Within it, a seed query costs iters-1 scan-only
-    * passes over the cached edges plus a neighborhood-sized fixed-point
-    * loop — nothing per-round touches a graph-sized vertex RDD. A hub
-    * seed on a 100 TB graph that overflows this wants the fully
-    * distributed form: the edge table bucketed by src, the frontier kept
-    * as an RDD, and each hop a frontier-sized shuffle join against the
-    * bucket layout — same rounds, no driver state.
+  /** Personalized PageRank for every seed in `seeds` at once, in the
+    * same order-free fixed-point BIGINT arithmetic as
+    * [[pageRankFixedPoint]], with all teleport mass returning to the
+    * seed: rank_0 = 1e6 on the seed; each round contrib = rank div
+    * outDeg summed at the target, rank' = 85·Σ div 100, plus 150000 on
+    * the seed. State is (seed, node, rank_u) rows, so the frame holds
+    * each seed's reached neighbourhood only, and every seed's slice is
+    * bit-identical to its single-seed run. A round joins the rank frame
+    * with the out-edges of its nodes and counts those edges for the
+    * out-degree, so no pass over the whole graph computes degrees. The
+    * rank frame is broadcast every round, which bounds the
+    * neighbourhoods to what a broadcast holds. Nodes no mass reached
+    * are absent; callers filter rank_u > 0.
     */
-  private[graft] val MaxSeedNeighborhood: Int = 1 << 22
-
-  /** Personalized PageRank in the same order-free fixed-point BIGINT
-    * arithmetic as [[pageRankFixedPoint]]: all teleport mass returns to
-    * the SEED (rank ∝ seed-restarting-walk visit frequency — the
-    * "related nodes" recommendation scorer).
-    *
-    * Seed-local by construction: in `iters` rounds mass can only leave
-    * nodes within iters-1 hops of the seed, so the ≤(iters-1)-hop
-    * forward closure is extracted FIRST (broadcast-frontier membership
-    * filter over the cached edge RDD — one scan per hop, no shuffle of
-    * the edges, no per-round vertex-RDD rebuild) and the fixed-point
-    * loop runs on that neighborhood's out-edges only. Every per-round
-    * structure (rank, contribs, degree-joined edges) is
-    * neighborhood-sized; the full graph is touched by scan-only passes
-    * and one final name join. Results are bit-identical to the
-    * full-graph loop: the closure contains every node whose rank can be
-    * nonzero as a sender, out-degrees are exact (ALL out-edges of an
-    * in-closure source are kept, including those leaving it), and the
-    * BIGINT sums are order-free. Returns only nodes that receive mass
-    * (the full-graph form returned rank-0 rows for untouched nodes;
-    * callers filter rank_u > 0 either way).
-    */
-  def personalizedPageRankFixedPoint(g: Graph[String, String], seed: String,
+  def personalizedPageRankFixedPoint(triples: DataFrame, seeds: Seq[String],
       iters: Int): DataFrame = {
-    val spark = sessionOf(g)
+    val spark = triples.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
-    val seedId = graft.functions.Murmur3x64.hash64(seed)
-    def member(sorted: Array[Long], v: Long): Boolean =
-      java.util.Arrays.binarySearch(sorted, v) >= 0
-    // (src, dst) pairs re-derived lazily per pass from the CACHED edge
-    // RDD — each closure hop is a scan, not a materialization
-    val pairs = g.edges.map(e => (e.srcId, e.dstId))
-
-    // ---- Phase 1: forward closure to depth iters-1 (the mass sources)
-    var reached = Array(seedId)
-    var frontier = Array(seedId)
-    var depth = 0
-    while (depth < iters - 1 && frontier.nonEmpty) {
-      val bf = sc.broadcast(frontier)
-      val next = pairs.filter { case (s, _) => member(bf.value, s) }
-        .map(_._2).distinct().collect()
-      bf.destroy()
-      val prev = reached
-      frontier = next.filter(v => !member(prev, v)).distinct.sorted
-      reached = (reached ++ frontier).sorted
-      require(reached.length <= MaxSeedNeighborhood,
-        s"seed neighborhood exceeds $MaxSeedNeighborhood nodes — use the " +
-          "distributed frontier form (see MaxSeedNeighborhood scaladoc)")
-      depth += 1
+    val edges = triples.select(col("subj").as("src"), col("obj").as("dst"))
+    // one zero offer per seed keeps each seed's row, and its teleport
+    // term, alive in rounds where no mass flows back to it
+    val anchors = seeds.distinct.toDF("seed")
+      .select(col("seed"), col("seed").as("node"), lit(0L).as("c"))
+      .localCheckpoint()
+    var rank = anchors.select(col("seed"), col("node"), lit(1000000L).as("rank_u"))
+      .localCheckpoint()
+    val outEdges = Window.partitionBy("seed", "src")
+    for (_ <- 1 to iters) {
+      rank = broadcast(rank).join(edges, col("node") === col("src"))
+        .withColumn("od", count(lit(1)).over(outEdges))
+        .select(col("seed"), col("dst").as("node"), expr("rank_u div od").as("c"))
+        .unionByName(anchors)
+        .groupBy("seed", "node")
+        .agg(sum("c").as("s"))
+        .select(col("seed"), col("node"),
+          expr("85L * s div 100L + CASE WHEN node = seed THEN 150000L ELSE 0L END")
+            .as("rank_u"))
+        .localCheckpoint()
     }
-
-    // ---- Phase 2: neighborhood out-edges with exact out-degrees
-    val bs = sc.broadcast(reached)
-    val withDeg = {
-      val sub = pairs.filter { case (s, _) => member(bs.value, s) }
-      val outDeg = sub.mapValues(_ => 1L).reduceByKey(_ + _)
-      sub.join(outDeg).cache() // (src, (dst, outDeg)) — neighborhood-sized
-    }
-    withDeg.foreachPartition(_ => ())
-
-    // ---- Phase 3: the same BIGINT loop, on neighborhood-sized RDDs
-    val out = pprFixedPointLoop(g, withDeg, seedId, iters)
-    withDeg.unpersist(blocking = false)
-    bs.destroy()
-    out
-  }
-
-  /** The shared PPR fixed-point loop over a (src → (dst, outDeg)) edge
-    * RDD: identical order-free BIGINT arithmetic for the seed-local and
-    * distributed forms, so both are bit-identical to the full-graph
-    * reference loop. Materializes the result before returning (callers
-    * unpersist `withDeg`, which the result reads through lineage).
-    */
-  private def pprFixedPointLoop(g: Graph[String, String],
-      withDeg: RDD[(VertexId, (VertexId, Long))], seedId: VertexId,
-      iters: Int): DataFrame = {
-    val spark = sessionOf(g)
-    import spark.implicits._
-    val sc = spark.sparkContext
-    val seedZero = sc.parallelize(Seq((seedId, 0L)))
-    var rank: RDD[(VertexId, Long)] = sc.parallelize(Seq((seedId, 1000000L)))
-    for (_ <- 0 until iters) {
-      val contribs = withDeg.join(rank)
-        .map { case (_, ((dst, dg), r)) => (dst, r / dg) }
-        .reduceByKey(_ + _)
-      // seedZero keeps the seed present when nothing cycles back to it;
-      // the teleport term lands only on the seed, matching the
-      // full-graph vprog exactly
-      rank = contribs.mapValues(s => 85L * s / 100L)
-        .union(seedZero)
-        .reduceByKey(_ + _)
-        .map { case (v, r) => (v, r + (if (v == seedId) 150000L else 0L)) }
-    }
-    val out = g.vertices.join(rank)
-      .map { case (_, (node, r)) => (node, r) }
-      .toDF("node", "rank_u")
-    // materialize before releasing the loop cache — the result plan
-    // reads withDeg through `rank`'s lineage
-    out.cache().count()
-    out
-  }
-
-  /** The fully distributed PPR form the [[MaxSeedNeighborhood]] scaladoc
-    * names: the edge table keyed and hash-partitioned by src once (the
-    * "bucketed by src" layout), the frontier kept as a co-partitioned
-    * RDD, and each closure hop ONE frontier-sized shuffle join against
-    * those buckets — no driver-resident closure, no `require` ceiling,
-    * so a hub seed whose (iters-1)-hop neighborhood overflows 2²² nodes
-    * still runs. Phases 2–3 and the BIGINT arithmetic are shared with
-    * [[personalizedPageRankFixedPoint]], so results are bit-identical
-    * (gated against the same naive reference loop in GraphStreamSpec and
-    * cross-checked against the seed-local form at 10× via ScaleProbe).
-    *
-    * Cost shape vs the seed-local form: per hop, a shuffle of the
-    * frontier (instead of a broadcast + full edge scan) plus a map-side
-    * lookup join in the edge buckets. At small neighborhoods the
-    * broadcast form wins (no shuffle latency); past the driver ceiling
-    * only this form works. The declared `graph_ppr_related` query keeps
-    * the seed-local path; this is the documented 100 TB escape hatch.
-    */
-  /** BATCHED multi-seed PPR: every phase of the distributed form, with
-    * state keyed by (node, seed) pairs — the closure, the rank loop and
-    * the teleport all carry the seed through the key, so one pass over
-    * the bucketed edge layout serves every seed simultaneously (the
-    * "related items for every query entity" production shape: k seeds
-    * cost one shared edge shuffle per hop, not k passes). Per-pair
-    * arithmetic is the SAME order-free BIGINT loop, so each seed's
-    * slice is bit-identical to its single-seed run — the oracle is the
-    * per-seed SQL unioned, and GraphStreamSpec pins slice
-    * equality. State size is Σ per-seed neighborhood (pair-keyed, never
-    * a per-seed broadcast), so a batch of hub seeds stays executor-
-    * resident where k driver closures would not.
-    */
-  def personalizedPageRankFixedPointBatch(g: Graph[String, String],
-      seeds: Seq[String], iters: Int): DataFrame = {
-    val spark = sessionOf(g)
-    import spark.implicits._
-    val sc = spark.sparkContext
-    val seedIds = seeds.map(s => graft.functions.Murmur3x64.hash64(s)).toArray
-    val parts = new org.apache.spark.HashPartitioner(
-      math.max(g.edges.getNumPartitions, sc.defaultParallelism))
-    val bySrc: RDD[(VertexId, VertexId)] = g.edges
-      .map(e => (e.srcId, e.dstId)).partitionBy(parts).cache()
-
-    // closure over (node, seed) pairs: the edge side joins on node, the
-    // seed rides along in the value — one frontier-sized shuffle per
-    // hop regardless of how many seeds are in flight
-    var reached: RDD[(VertexId, VertexId)] = sc
-      .parallelize(seedIds.map(sid => (sid, sid)).toSeq).partitionBy(parts).cache()
-    var frontier = reached
-    var frontierSize = seedIds.length.toLong
-    var depth = 0
-    while (depth < iters - 1 && frontierSize > 0) {
-      val next = frontier.join(bySrc, parts)
-        .map { case (_, (sid, dst)) => ((dst, sid), ()) }
-        .reduceByKey((a, _) => a)
-        .map { case ((dst, sid), _) => (dst, sid) }
-        .partitionBy(parts)
-        .subtract(reached, parts)
-        .cache()
-      frontierSize = next.count()
-      val prevReached = reached
-      val prevFrontier = frontier
-      // union is disjoint-distinct by construction (`next` is deduped
-      // and subtracted from `reached`), so no distinct pass; both sides
-      // share `parts`, making the union partitioner-aware and the
-      // partitionBy a no-op guard rather than an extra shuffle
-      reached = reached.union(next).partitionBy(parts).cache()
-      reached.foreachPartition(_ => ())
-      prevReached.unpersist(blocking = false)
-      if (prevFrontier ne prevReached) prevFrontier.unpersist(blocking = false)
-      frontier = next
-      depth += 1
-    }
-
-    // out-edges + exact global out-degrees of every reached node (seed
-    // union — degree is seed-independent, computed once)
-    val reachedNodes = reached.map { case (n, _) => (n, ()) }
-      .reduceByKey(parts, (a, _) => a)
-    val sub = reachedNodes.join(bySrc, parts).map { case (s, (_, d)) => (s, d) }
-    val outDeg = sub.mapValues(_ => 1L).reduceByKey(parts, _ + _)
-    val withDeg = sub.join(outDeg, parts).cache()
-    withDeg.foreachPartition(_ => ())
-
-    // the shared BIGINT loop, pair-keyed: contributions shuffle on the
-    // node (carrying the seed), teleport mass lands on (seed, seed)
-    val seedSet = seedIds.toSet
-    val seedZero = sc.parallelize(seedIds.map(sid => ((sid, sid), 0L)).toSeq)
-    var rank: RDD[((VertexId, VertexId), Long)] =
-      sc.parallelize(seedIds.map(sid => ((sid, sid), 1000000L)).toSeq)
-    for (_ <- 0 until iters) {
-      val contribs = withDeg
-        .join(rank.map { case ((n, sid), r) => (n, (sid, r)) }, parts)
-        .map { case (_, ((dst, dg), (sid, r))) => ((dst, sid), r / dg) }
-        .reduceByKey(_ + _)
-      rank = contribs.mapValues(s => 85L * s / 100L)
-        .union(seedZero)
-        .reduceByKey(_ + _)
-        .map { case ((v, sid), r) =>
-          ((v, sid), r + (if (v == sid && seedSet(v)) 150000L else 0L)) }
-    }
-    val names = sc.broadcast(seeds.map(s =>
-      graft.functions.Murmur3x64.hash64(s) -> s).toMap)
-    val out = g.vertices
-      .join(rank.map { case ((n, sid), r) => (n, (sid, r)) })
-      .map { case (_, (node, (sid, r))) => (names.value(sid), node, r) }
-      .toDF("seed", "node", "rank_u")
-    out.cache().count()
-    withDeg.unpersist(blocking = false)
-    frontier.unpersist(blocking = false)
-    reached.unpersist(blocking = false)
-    bySrc.unpersist(blocking = false)
-    out
-  }
-
-  def personalizedPageRankFixedPointDistributed(g: Graph[String, String],
-      seed: String, iters: Int): DataFrame = {
-    val spark = sessionOf(g)
-    val sc = spark.sparkContext
-    val seedId = graft.functions.Murmur3x64.hash64(seed)
-    val parts = new org.apache.spark.HashPartitioner(
-      math.max(g.edges.getNumPartitions, sc.defaultParallelism))
-    // the bucketed edge layout: one shuffle to key by src, cached for
-    // every hop and for the degree join — the RDD analogue of a table
-    // bucketed by src
-    val bySrc: RDD[(VertexId, VertexId)] = g.edges
-      .map(e => (e.srcId, e.dstId)).partitionBy(parts).cache()
-
-    // ---- Phase 1: forward closure to depth iters-1, frontier as an RDD
-    val first: RDD[(VertexId, Unit)] = sc.parallelize(Seq((seedId, ())))
-      .partitionBy(parts)
-    var reached = first.cache()
-    var frontier = reached
-    var frontierSize = 1L
-    var depth = 0
-    while (depth < iters - 1 && frontierSize > 0) {
-      // one frontier-sized shuffle join per hop: the frontier moves to
-      // the edge buckets (bySrc is already partitioned, so only the
-      // frontier side shuffles), new nodes dedup via reduceByKey on the
-      // same partitioner and drop already-reached via subtractByKey
-      val next = frontier.join(bySrc, parts)
-        .map { case (_, (_, dst)) => (dst, ()) }
-        .reduceByKey(parts, (a, _) => a)
-        .subtractByKey(reached, parts)
-        .cache()
-      frontierSize = next.count()
-      val prevReached = reached
-      val prevFrontier = frontier
-      reached = reached.union(next).reduceByKey(parts, (a, _) => a).cache()
-      reached.foreachPartition(_ => ())
-      prevReached.unpersist(blocking = false)
-      if (prevFrontier ne prevReached) prevFrontier.unpersist(blocking = false)
-      frontier = next
-      depth += 1
-    }
-
-    // ---- Phase 2: neighborhood out-edges + exact degrees, all keyed
-    val sub = reached.join(bySrc, parts)
-      .map { case (s, (_, d)) => (s, d) }
-    val outDeg = sub.mapValues(_ => 1L).reduceByKey(parts, _ + _)
-    val withDeg = sub.join(outDeg, parts).cache()
-    withDeg.foreachPartition(_ => ())
-
-    val out = pprFixedPointLoop(g, withDeg, seedId, iters)
-    withDeg.unpersist(blocking = false)
-    frontier.unpersist(blocking = false)
-    reached.unpersist(blocking = false)
-    bySrc.unpersist(blocking = false)
-    out
+    rank
   }
 }

@@ -44,8 +44,6 @@ final case class TriplePattern(
     lang: Option[String] = None,
     author: Option[String] = None
 ) {
-  def isUnrooted: Boolean = subj.isEmpty
-
   def fields: Seq[(String, Option[String])] = Seq(
     "subj" -> subj,
     "pred" -> pred,
@@ -85,7 +83,6 @@ object TriplePattern {
 sealed trait ArrayOp {
   def triples: Seq[TriplePattern]
   def args: Seq[ArrayOp]
-  def operandCount: Int = triples.size + args.size
 }
 
 object ArrayOp {

@@ -781,22 +781,19 @@ object Dedup {
     * is one boilerplate family — so cluster resolution is the step that
     * makes near-dedup *composable* with curation.
     *
-    * Runs GraphX connectedComponents (Pregel min-label propagation):
-    * message volume is frontier-proportional and the vertex state is one
-    * Long, so the cost is O(edges · diameter) with no driver
-    * materialization — near-dup components are band-collision cliques,
-    * so diameters stay small even at 100 TB. Input must expose BIGINT
-    * pair columns (a, b); output is (doc_id, canonical_id), one row per
-    * doc that appears in any pair.
+    * Runs [[graft.graph.GraphOps.connectedComponents]] (min-label
+    * propagation): the per-node state is one Long and each round is one
+    * keyed join of the label frame against the pair edges, so the cost
+    * is O(edges · diameter) with no driver materialization — near-dup
+    * components are band-collision cliques, so diameters stay small
+    * even at 100 TB. Input must expose BIGINT pair columns (a, b);
+    * output is (doc_id, canonical_id), one row per doc that appears in
+    * any pair.
     */
-  def duplicateClusters(pairs: DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
-    val edges = pairs.select(col("a").cast("long"), col("b").cast("long"))
-      .rdd.map(r => org.apache.spark.graphx.Edge(r.getLong(0), r.getLong(1), ()))
-    val labeled = org.apache.spark.graphx.Graph.fromEdges(edges, ())
-      .connectedComponents().vertices
-    spark.createDataFrame(labeled).toDF("doc_id", "canonical_id")
-  }
+  def duplicateClusters(pairs: DataFrame): DataFrame =
+    graft.graph.GraphOps.connectedComponents(
+        pairs.select(col("a").cast("long").as("src"), col("b").cast("long").as("dst")))
+      .select(col("node").as("doc_id"), col("component").as("canonical_id"))
 
   /** Winnowing fingerprint rows (Schleimer/Wilkerson/Aiken, SIGMOD'03
     * "Winnowing: Local Algorithms for Document Fingerprinting" — the

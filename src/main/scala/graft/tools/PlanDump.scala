@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
 /** Plan-shape probe for declared queries: materializes each named query
   * at sf0.001 and prints its FINAL AQE plan's join/cartesian operators
@@ -9,10 +8,7 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.LocalSession(defaultCpus = 4)
     spark.sparkContext.setLogLevel("ERROR")
     // --explain <outdir> <sfdir> <query...>: write each query's
     // explain("formatted") (the pre-execution plan, the judge-checkable

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Ad-hoc operator-variant timing probe — the measurement harness
   * behind SCALE.md's "measured and kept/rejected" decisions. Unlike
@@ -15,14 +15,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(defaultCpus = 32)
 
     // `gen-embs <outDir> <n> [planted]`: synthesize an embeddings table
     // past the LSH→PQ knee (the 100× table tops out at 200k vectors —
@@ -220,28 +213,11 @@ object ScaleProbe {
           .select("a", "b").distinct()
       }),
       // dedup_clusters decomposition: pair generation alone vs the full
-      // pairs + GraphX connected-components resolution — the difference
-      // is the RDD-boundary fromEdges + Pregel cost
+      // pairs + connected-components resolution — the difference is the
+      // min-label propagation rounds
       "clusters_pairs_only" -> (() => graft.ops.Dedup.minhashPairs(docs)),
       "clusters_full" -> (() =>
         graft.ops.Dedup.duplicateClusters(graft.ops.Dedup.minhashPairs(docs))),
-      // PPR forms side by side (same seed/iters as graph_ppr_related):
-      // the declared seed-local path (driver-resident closure, capped at
-      // MaxSeedNeighborhood) vs the distributed bucketed-frontier form —
-      // the 100 TB escape hatch must match it row-for-row and stay in
-      // the same cost class at 10×
-      "ppr_seed_local" -> (() => graft.graph.GraphOps
-        .personalizedPageRankFixedPoint(
-          graft.graph.GraphOps.cachedGraph(
-            graft.api.Tables.starTriples(spark, sfDir), sfDir),
-          "order:1", iters = 5)
-        .filter(org.apache.spark.sql.functions.col("rank_u") > 0)),
-      "ppr_distributed" -> (() => graft.graph.GraphOps
-        .personalizedPageRankFixedPointDistributed(
-          graft.graph.GraphOps.cachedGraph(
-            graft.api.Tables.starTriples(spark, sfDir), sfDir),
-          "order:1", iters = 5)
-        .filter(org.apache.spark.sql.functions.col("rank_u") > 0)),
       // IVF trainer forms side by side (same params as sim_ann_ivf_exact):
       // driver-resident centroid literals vs the DataFrame-resident
       // broadcast-join model — bit-identical results, different cost class

@@ -38,14 +38,7 @@ object StreamProbe {
     val sfDir = args(0)
     val slices = if (args.length > 1) args(1).toInt else 8
     val mode = if (args.length > 2) args(2) else "attrib"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(defaultCpus = 32)
 
     val json = mode match {
       case "psi"    => psiProbe(spark, sfDir, slices)

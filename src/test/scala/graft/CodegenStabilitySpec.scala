@@ -39,7 +39,8 @@ class CodegenStabilitySpec extends SparkSpecBase {
   // compile renamed classes whatever its operators generate.
   private val names = Seq(
     "graph_sssp_weighted", "text_bm25_topk", "dedup_minhash", "stats_mann_kendall",
-    "dedup_simhash", "dedup_source_matrix", "events_theilsen_slope", "tp_sync_diff_sliced")
+    "dedup_simhash", "dedup_source_matrix", "events_theilsen_slope", "tp_sync_diff_sliced",
+    "graph_2hop", "graph_bfs_profile", "graph_cc_sizes", "graph_ppr_batch", "dedup_clusters")
 
   for (name <- names) test(s"$name: runs 2 and 3 compile no class") {
     // the shared triples view is materialized before any query runs, as
@@ -72,6 +73,22 @@ class CodegenStabilitySpec extends SparkSpecBase {
     compiles(graft.ops.Basket.ssspWeighted(li, rounds = 1))
     val n = compiles(graft.ops.Basket.ssspWeighted(li, rounds = 9))
     assert(n == 0L, s"rounds 2..9 compiled $n classes")
+  }
+
+  test("graph loops: a deeper BFS and more PPR rounds compile nothing after shallower runs") {
+    val triples = Tables.starTriples(spark, dir)
+    triples.count()
+    // two hops (rounds) compile the seed, a first and a later hop
+    // (round); hops 3-4 and rounds 3-6 are the later one's plan. Each
+    // loop is checked right after its own warm-up: the two together
+    // generate nearly as many classes as Spark's codegen cache keeps
+    compiles(graft.graph.GraphOps.reverseBfs(triples, "region:2", maxDepth = 2))
+    val bfs = compiles(graft.graph.GraphOps.reverseBfs(triples, "region:1", maxDepth = 4))
+    compiles(graft.graph.GraphOps.personalizedPageRankFixedPoint(
+      triples, Seq("order:1"), iters = 2))
+    val ppr = compiles(graft.graph.GraphOps.personalizedPageRankFixedPoint(
+      triples, Seq("order:2", "order:3"), iters = 6))
+    assert((bfs, ppr) == ((0L, 0L)), s"deeper BFS, more PPR rounds compiled ${(bfs, ppr)}")
   }
 
   test("serve: after one query of each shape, other root, part and predicate counts compile nothing") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.api.Tables
+import graft.api.{Queries, Tables}
 import graft.graph.GraphOps
 import graft.streaming.EventStream
 
@@ -55,7 +55,8 @@ class GraphStreamSpec extends SparkSpecBase {
     import spark.implicits._
     // cycle back through the seed, a chain that runs past the 5-round
     // horizon (h needs round 6 — must be absent), and a disconnected
-    // component (z→w — must be absent)
+    // component (z→w — must be absent from a's ranks); w has no
+    // out-edges, so as a seed it keeps only its teleport mass
     val edges = Seq("a" -> "b", "b" -> "c", "c" -> "a", "b" -> "d",
       "d" -> "e", "e" -> "f", "f" -> "g", "g" -> "h", "z" -> "w")
     val t = edges.map { case (s, o) => (s, "p", o) }.toDF("subj", "pred", "obj")
@@ -64,60 +65,38 @@ class GraphStreamSpec extends SparkSpecBase {
     // the exact full-graph vprog semantics
     val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
     val outDeg = edges.groupBy(_._1).view.mapValues(_.size.toLong).toMap
-    var rank = nodes.map(n => n -> (if (n == "a") 1000000L else 0L)).toMap
-    for (_ <- 0 until iters) {
-      val contribs = edges.groupBy(_._2).view.mapValues(_.map { case (s, _) =>
-        rank(s) / outDeg(s) }.sum).toMap.withDefaultValue(0L)
-      rank = nodes.map(n => n ->
-        ((if (n == "a") 150000L else 0L) + 85L * contribs(n) / 100L)).toMap
+    def reference(seed: String): Map[String, Long] = {
+      var rank = nodes.map(n => n -> (if (n == seed) 1000000L else 0L)).toMap
+      for (_ <- 0 until iters) {
+        val contribs = edges.groupBy(_._2).view.mapValues(_.map { case (s, _) =>
+          rank(s) / outDeg(s) }.sum).toMap.withDefaultValue(0L)
+        rank = nodes.map(n => n ->
+          ((if (n == seed) 150000L else 0L) + 85L * contribs(n) / 100L)).toMap
+      }
+      rank.filter(_._2 > 0)
     }
-    val expected = rank.filter(_._2 > 0)
-    val graph = GraphOps.fromTriples(t)
-    val got = GraphOps.personalizedPageRankFixedPoint(graph, "a", iters)
-      .filter(col("rank_u") > 0).collect()
-      .map(r => r.getAs[String]("node") -> r.getAs[Long]("rank_u")).toMap
-    assert(got == expected, s"got $got expected $expected")
-    assert(!got.contains("h") && !got.contains("z") && !got.contains("w"))
-    // the distributed-frontier form (no driver-resident closure) must be
-    // bit-identical to both the seed-local form and the reference loop
-    val gotDist = GraphOps.personalizedPageRankFixedPointDistributed(
-        graph, "a", iters)
-      .filter(col("rank_u") > 0).collect()
-      .map(r => r.getAs[String]("node") -> r.getAs[Long]("rank_u")).toMap
-    assert(gotDist == expected, s"distributed: got $gotDist expected $expected")
-  }
-
-  test("distributed PPR matches seed-local row-for-row at 10x (needs /tmp/sf1h)") {
-    // the 10x cross-check behind the ScaleProbe ppr_* rows: both forms
-    // share the fixed-point loop, so any divergence is in the closure /
-    // degree phases. Canceled (not failed) where the scaled corpus
-    // hasn't been generated — regenerate with
-    // `python3 tools/make_sf.py /root/testdata/sf0.1 /tmp/sf1h 10 --heaps`.
-    assume(new java.io.File("/tmp/sf1h/orders.parquet").exists)
-    val g = GraphOps.cachedGraph(Tables.starTriples(spark, "/tmp/sf1h"), "/tmp/sf1h")
-    def ranks(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
-      df.filter(col("rank_u") > 0).collect()
-        .map(r => r.getAs[String]("node") -> r.getAs[Long]("rank_u")).toMap
-    val local = ranks(GraphOps.personalizedPageRankFixedPoint(g, "order:1", 5))
-    val dist = ranks(GraphOps.personalizedPageRankFixedPointDistributed(g, "order:1", 5))
-    assert(local.nonEmpty)
-    assert(dist == local,
-      s"distributed/seed-local diverge: ${dist.toSet.diff(local.toSet).take(5)} vs ${local.toSet.diff(dist.toSet).take(5)}")
-  }
-
-  test("batched PPR slices are bit-identical to the single-seed runs") {
-    val g = GraphOps.cachedGraph(Tables.starTriples(spark, dir), dir)
-    val seeds = Seq("order:1", "order:2", "cust:42")
-    val batch = GraphOps.personalizedPageRankFixedPointBatch(g, seeds, iters = 5)
+    val got = GraphOps.personalizedPageRankFixedPoint(t, Seq("a", "w"), iters)
       .filter(col("rank_u") > 0).collect()
       .groupBy(_.getAs[String]("seed"))
       .map { case (s, rows) => s ->
         rows.map(r => r.getAs[String]("node") -> r.getAs[Long]("rank_u")).toMap }
-    seeds.foreach { s =>
-      val single = GraphOps.personalizedPageRankFixedPoint(g, s, iters = 5)
+    assert(got == Map("a" -> reference("a"), "w" -> reference("w")), s"got $got")
+    assert(!got("a").contains("h") && !got("a").contains("z") && !got("a").contains("w"))
+    assert(got("w") == Map("w" -> 150000L))
+  }
+
+  test("batched PPR slices are bit-identical to the single-seed runs") {
+    val triples = Tables.starTriples(spark, dir)
+    val seeds = Seq("order:1", "order:2", "cust:42")
+    def ranks(seeds: Seq[String]) =
+      GraphOps.personalizedPageRankFixedPoint(triples, seeds, iters = 5)
         .filter(col("rank_u") > 0).collect()
-        .map(r => r.getAs[String]("node") -> r.getAs[Long]("rank_u")).toMap
-      assert(batch.getOrElse(s, Map.empty) == single,
+        .groupBy(_.getAs[String]("seed"))
+        .map { case (s, rows) => s ->
+          rows.map(r => r.getAs[String]("node") -> r.getAs[Long]("rank_u")).toMap }
+    val batch = ranks(seeds)
+    seeds.foreach { s =>
+      assert(batch.getOrElse(s, Map.empty) == ranks(Seq(s))(s),
         s"batched slice for $s diverges from the single-seed run")
     }
   }
@@ -135,16 +114,44 @@ class GraphStreamSpec extends SparkSpecBase {
 
   test("connected components: one component per connected star subgraph") {
     import spark.implicits._
-    val t = Seq(
-      ("a", "p", "b"), ("b", "p", "c"), // component 1
-      ("x", "p", "y") // component 2
-    ).toDF("subj", "pred", "obj")
-    val cc = GraphOps.connectedComponents(t).collect()
-      .map(r => r.getAs[String]("node") -> r.getAs[Long]("component")).toMap
-    assert(cc("a") == cc("b") && cc("b") == cc("c"))
-    assert(cc("x") == cc("y"))
-    assert(cc("a") != cc("x"))
+    // the chain d→c→b→a takes three rounds to carry label "a" to d
+    val e = Seq(
+      ("d", "c"), ("c", "b"), ("b", "a"), // component 1
+      ("x", "y") // component 2
+    ).toDF("src", "dst")
+    val cc = GraphOps.connectedComponents(e).collect()
+      .map(r => r.getAs[String]("node") -> r.getAs[String]("component")).toMap
+    assert(cc == Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a", "x" -> "x", "y" -> "x"))
   }
+
+  // the loops' answers must not depend on partitioning or on AQE
+  // re-planning a round: the same rows at 1 and 7 shuffle partitions,
+  // AQE on and off
+  private val layoutCases: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+    "reverse BFS" -> (() =>
+      GraphOps.reverseBfs(Tables.starTriples(spark, dir), "region:2", maxDepth = 4)),
+    "connected components" -> (() => GraphOps.connectedComponents(
+      Tables.starTriples(spark, dir).select(col("subj").as("src"), col("obj").as("dst")))),
+    "batched PPR" -> (() => GraphOps.personalizedPageRankFixedPoint(
+      Tables.starTriples(spark, dir), Seq("order:1", "order:2", "cust:42"), iters = 5)),
+    "duplicate clusters" -> (() =>
+      Queries.registry("dedup_clusters").fn(spark, dir)))
+
+  for ((name, run) <- layoutCases)
+    test(s"$name: same rows at 1 or 7 shuffle partitions, AQE on or off") {
+      def rows(parts: Int, aqe: Boolean): Seq[String] = {
+        val prev = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+          .map(k => k -> spark.conf.get(k))
+        spark.conf.set("spark.sql.shuffle.partitions", parts.toLong)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        try run().collect().map(_.toString).toSeq.sorted
+        finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+      }
+      val base = rows(1, aqe = true)
+      assert(base.nonEmpty)
+      for (parts <- Seq(1, 7); aqe <- Seq(true, false) if (parts, aqe) != ((1, true)))
+        assert(rows(parts, aqe) == base, s"$parts partitions, AQE $aqe")
+    }
 
   test("streaming dedup drops replayed events across micro-batches") {
     val stageDir = java.nio.file.Files.createTempDirectory("graft-dedup")
