@@ -59,11 +59,6 @@ object Tables {
     * Catalyst pushes filters and column pruning through Repartition
     * (PushPredicateThroughNonJoin / ColumnPruning), so PushedFilters
     * still reach the scan — pinned by TablesSplitSpec.
-    *
-    * Operators whose per-row work is super-proportional to input bytes
-    * (the Lloyd trainer's rows×k×d expansion) still own their keyed
-    * repartition — a bytes-keyed loader cannot know a 9 MB table
-    * expands 500× downstream; see Similarity.fpTrainAssignDistributed.
     */
   private[graft] val FatRowBytes = 64L
 

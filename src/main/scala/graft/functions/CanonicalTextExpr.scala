@@ -14,7 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * on [[DeflateUtil]]).
   *
   * Semantics are EXACTLY the composed built-in form it replaces
-  * (Linkage.canonicalBuiltin, gated equivalent in OpsSpec):
+  * (`Reference.canonicalBuiltin` in the test sources, gated equivalent
+  * in BasketLinkageSpec):
   *
   *   trim(regexp_replace(regexp_replace(lower(text), "[^a-z0-9 ]", ""), " +", " "))
   *

@@ -14,22 +14,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * The former formulation — `array_position(array(score_0 … score_k),
   * array_min(…))` over k per-centroid [[LongDotProduct]] literals —
   * builds an expression tree of k·dim literal nodes: at nlist = 1024 /
-  * dim = 64 that is 65k nodes, far past the JIT/codegen comfort zone,
-  * and the frame-resident trainer it forced
-  * (`fpTrainAssignDistributed`) pays a corpus×nlist crossJoin row
-  * expansion per Lloyd pass instead (measured at the 100× probe corpus,
-  * 200k vectors × nlist 1024: `dedup_semantic` 573 s, almost all of it
-  * the trainer's 3 × 204M-row broadcast-join passes). This expression
-  * keeps the matrix OFF the tree — one object reference — and evaluates
-  * the whole argmin as a tight primitive double loop per row: no row
-  * expansion, no shuffle, no boxing, O(nlist·dim) long multiplies.
+  * dim = 64 that is 65k nodes, far past the JIT/codegen comfort zone.
+  * This expression keeps the matrix OFF the tree — one object
+  * reference — and evaluates the whole argmin as a tight primitive double
+  * loop per row: no row expansion, no shuffle, no boxing, O(nlist·dim)
+  * long multiplies.
   *
   * Arithmetic and tie-break are EXACTLY the former formulation's:
   * score(c) = |c|² − 2·q·c (the |q|² term is constant per row, so
   * score order ≡ squared-L2 order, ties included), first minimum wins
   * (strict `<` keeps the lowest cell index — `array_position` takes the
   * first match). All operands are BIGINTs bounded by dim·(10⁶)² ≈ 2⁴⁶.
-  * Bit-identity with both trainers is gated in OpsSpec.
+  * The DuckDB oracles of the fixed-point queries (`sim_ann_ivf_exact`,
+  * `dedup_semantic`, the PQ family) hash-gate the result.
   */
 case class CentroidArgMin(child: Expression, cents: Array[Array[Long]])
     extends UnaryExpression {

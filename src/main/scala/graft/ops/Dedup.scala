@@ -433,60 +433,6 @@ object Dedup {
     ngramJaccardPairs(docs, n, threshold, k, bands,
       containmentSchedule(docs.count()))
 
-  /** Prefix-filtered containment variant — the classic lossless
-    * candidate optimization (PPJoin-family): probe the inverted index
-    * with only each doc's df-ascending prefix of ⌊(1-t)·sz⌋+1 kept
-    * shingles. Any pair at containment ≥ t shares a prefix shingle of
-    * its smaller side (at most (1-t)·m of the smaller side's m shingles
-    * can miss the other doc), so one probe direction plus least/greatest
-    * normalization is complete. Kept `private[graft]` as the measured
-    * ALTERNATIVE to [[containmentPairs]], not the declared path:
-    * round 5 measured it 3-5× slower on the vocab-saturated synthetic
-    * corpora (no shingle is rare → the prefix prunes nothing, and the
-    * separated candidates-then-verify rejoin pays pairs × doc shingles);
-    * round 6 re-measured it on the Heaps-law corpus (tools/make_sf.py
-    * --heaps, per-shingle dfs flat) where its premise holds — see
-    * SCALE.md r6 addendum for the numbers and the crossover reading.
-    * Exercised by ScaleProbe and the OpsSpec equivalence test.
-    */
-  private[graft] def containmentPairsPrefixed(docs: DataFrame, n: Int = 3,
-      threshold: Double = 0.8, maxShingleDf: Int = DefaultBandCap): DataFrame = {
-    val sh0 = shingleRows(docs, n).select("doc_id", "sh")
-    val sh = if (maxShingleDf <= 0) sh0
-      else sh0
-        .withColumn("df", count(lit(1)).over(Window.partitionBy("sh")))
-        .filter(col("df") <= maxShingleDf)
-        .drop("df")
-    val ranked = sh
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("sh")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("doc_id").orderBy("df", "sh")))
-      .withColumn("sz", count(lit(1)).over(Window.partitionBy("doc_id")))
-    val prefix = ranked
-      .filter(col("rn") <= floor((lit(1.0) - threshold) * col("sz")) + 1)
-      .select("doc_id", "sh")
-    val cand = prefix.select(col("doc_id").as("x"), col("sh"))
-      .join(sh.select(col("doc_id").as("y"), col("sh")), "sh")
-      .filter(col("x") =!= col("y"))
-      .select(least(col("x"), col("y")).as("a"),
-        greatest(col("x"), col("y")).as("b"))
-      .distinct()
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val inter = cand
-      .join(sh.select(col("doc_id").as("a"), col("sh")), "a")
-      .join(sh.select(col("doc_id").as("b"), col("sh")), Seq("b", "sh"))
-      .groupBy("a", "b").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("sz", "sza"), "a")
-      .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("sz", "szb"), "b")
-      .withColumn("containment", round(col("inter").cast("double") /
-        least(col("sza"), col("szb")).cast("double"), 6))
-      .filter(col("containment") >= threshold)
-      .withColumn("contained_id",
-        when(col("sza") <= col("szb"), col("a")).otherwise(col("b")))
-      .select("a", "b", "containment", "contained_id")
-  }
-
   /** Embedding near-dups: pairs with cosine >= threshold, candidates
     * from OR-amplified sign-LSH (`tables` independent hash tables of
     * `bits` hyperplanes each — the same plane family as
@@ -497,7 +443,8 @@ object Dedup {
     * the dedup keeps the wide vector columns out of the distinct's
     * shuffle). Recall is 1-(1-p^bits)^tables for plane-agreement
     * probability p = 1-θ/π; tune `bits` up for narrower buckets at
-    * scale. Measured against the brute-force baseline in DedupSpec.
+    * scale. Measured against the brute-force baseline
+    * (`Reference.embeddingNearDupsExact`, test sources) in OpsSpec.
     */
   def embeddingNearDups(embs: DataFrame, threshold: Double = 0.99,
       dim: Int = 64, bits: Int = 6, tables: Int = 8): DataFrame = {
@@ -638,8 +585,7 @@ object Dedup {
     * cap·n — linear candidate volume at any n. The exact-cosine verify
     * tail is identical on both branches (same rounding, same (a, b,
     * cos) contract, a < b). Was the knob sheet's one manual switch
-    * (SCALE.md "1000-executor knob sheet", lshSchedule row); scheduled
-    * here the way the trainer's driver→frame escalation already is.
+    * (SCALE.md "1000-executor knob sheet", lshSchedule row).
     */
   private[graft] def lshOccupancyKnee(targetBucket: Int = 20): Long =
     (1L << 12) * targetBucket.toLong * 128L
@@ -744,33 +690,6 @@ object Dedup {
       .select("corpus_id", "bench_id").distinct()
       .groupBy("corpus_id")
       .agg(count(lit(1)).as("n_bench_hits"), min("bench_id").as("first_bench"))
-  }
-
-  /** [[crossCorpusMatches]] past the batch-broadcast ceiling — the
-    * escape hatch the §100× first-wall table names for incremental
-    * dedup: once the incoming batch stops being broadcast-small (a
-    * backfill, a whole-crawl re-ingest), the probe flips to a
-    * SHUFFLE-HASH join on the same (band, key) — the plan class the
-    * embedding near-dup join uses — so neither side is ever collected
-    * or broadcast. Band construction, hot-band cap, and the aggregate
-    * tail are the SAME code as the broadcast form, so outputs are
-    * row-for-row identical (gated in OpsSpec at fixture scale and 10×);
-    * only the join strategy differs. The declared `dedup_incremental`
-    * keeps the broadcast form — below the ceiling it saves the batch
-    * shuffle entirely.
-    */
-  def crossCorpusMatchesShuffled(corpus: DataFrame, batch: DataFrame,
-      k: Int = OracleMinhashK, bands: Int = OracleMinhashBands,
-      maxBandFreq: Int = DefaultBandCap): DataFrame = {
-    val cb = dropHotBands(
-        bandKeys(sigsFromShingles(shingleRows(corpus, 3), k), k, bands), maxBandFreq)
-      .select(col("band"), col("key"), col("doc_id").as("corpus_id"))
-    val bb = bandKeys(sigsFromShingles(shingleRows(batch, 3), k), k, bands)
-      .select(col("band"), col("key"), col("doc_id").as("batch_id"))
-    cb.join(bb.hint("shuffle_hash"), Seq("band", "key"))
-      .select("batch_id", "corpus_id").distinct()
-      .groupBy("batch_id")
-      .agg(count(lit(1)).as("n_corpus_dups"), min("corpus_id").as("first_dup"))
   }
 
   /** Resolve near-dup pairs into duplicate CLUSTERS: connected
@@ -959,23 +878,4 @@ object Dedup {
   def exactSubstringRunsAuto(docs: DataFrame, n: Int = 5,
       minRunTokens: Int = 15): DataFrame =
     exactSubstringRuns(docs, n, minRunTokens, containmentSchedule(docs.count()))
-
-  /** Brute-force O(n²) embedding near-dup baseline — the recall oracle
-    * for [[embeddingNearDups]] in tests; never the declared query's
-    * plan. The broadcast hint is the CartesianGuard opt-in (this is a
-    * deliberate test-scale all-pairs).
-    */
-  private[graft] def embeddingNearDupsExact(embs: DataFrame, threshold: Double): DataFrame = {
-    val v = embs
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", Similarity.norm(col("v")))
-    val l = v.select(col("vec_id").as("a"), col("v").as("va"), col("nrm").as("na"))
-    val r = v.select(col("vec_id").as("b"), col("v").as("vb"), col("nrm").as("nb"))
-    l.crossJoin(broadcast(r))
-      .filter(col("a") < col("b"))
-      .withColumn("cos", round(
-        Similarity.dot(col("va"), col("vb")) / (col("na") * col("nb")), 6))
-      .filter(col("cos") >= threshold)
-      .select("a", "b", "cos")
-  }
 }

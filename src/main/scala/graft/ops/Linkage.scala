@@ -100,19 +100,13 @@ object Linkage {
     *
     * Runs as the fused one-pass byte scan
     * ([[graft.functions.CanonicalTextExpr]]): the two-regex chain it
-    * replaces ([[canonicalBuiltin]], spec-gated equal) was measured as
+    * replaces (`Reference.canonicalBuiltin` in the test sources,
+    * spec-gated equal) was measured as
     * 94% of `dedup_canonical`'s cost at 100× (ScaleProbe canon_*
     * decomposition). The DuckDB oracle keeps the regex formulation.
     */
   def canonical(text: Column): Column =
     graft.functions.CanonicalTextExpr(text)
-
-  /** The composed built-in chain [[canonical]] fuses — kept as the
-    * semantics reference (OpsSpec gates byte-equality on adversarial
-    * fixtures; same discipline as TextOps.piiScrubBuiltin).
-    */
-  private[graft] def canonicalBuiltin(text: Column): Column =
-    trim(regexp_replace(regexp_replace(lower(text), "[^a-z0-9 ]", ""), " +", " "))
 
   /** Duplicate groups under the aggressive canonicalization, tagged with
     * whether the whitespace-normalized fingerprint already catches them

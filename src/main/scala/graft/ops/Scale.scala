@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Scale utilities: skew mitigation patterns that AQE alone doesn't
+/** Scale utilities: a skew mitigation pattern that AQE alone doesn't
   * cover, usable by any pipeline in this library.
   */
 object Scale {
@@ -30,19 +30,5 @@ object Scale {
       .agg(aggs.head._3.as(aggs.head._1),
         aggs.tail.map { case (n, _, f) => f.as(n) }: _*)
       .withColumnRenamed("__key", "key")
-  }
-
-  /** Skew-safe equi-join of a big skewed table against a small one:
-    * replicate the small side `saltFactor` times, salt the big side's
-    * key deterministically, join on (key, salt). Use when the small
-    * side is too big to broadcast but the big side's key is skewed.
-    */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-      saltFactor: Int): DataFrame = {
-    val saltedBig = big.withColumn("__salt",
-      pmod(monotonically_increasing_id(), lit(saltFactor.toLong)))
-    val replicatedSmall = small.withColumn("__salt",
-      explode(sequence(lit(0L), lit(saltFactor.toLong - 1))))
-    saltedBig.join(replicatedSmall, Seq(key, "__salt")).drop("__salt")
   }
 }

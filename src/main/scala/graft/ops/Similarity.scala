@@ -127,39 +127,6 @@ object Similarity {
       .select("query_id", "vec_id", "cos", "rank")
   }
 
-  /** [[lshTopK]] past the query-side-broadcast ceiling — the escape
-    * hatch the §100× first-wall table names for the ANN family: at
-    * large |Q| (a full re-embedding diffed against the corpus, an
-    * all-pairs linkage run) the query bucket frame stops fitting a
-    * broadcast, so the candidate join flips to a SHUFFLE-HASH join on
-    * the same (table, bucket) key — both sides shuffle once, nothing is
-    * collected or broadcast. Bucketing, candidate dedup, scoring, and
-    * ranking are the SAME code path, so results are row-for-row
-    * identical to [[lshTopK]] (gated in OpsSpec); the declared
-    * `sim_ann_lsh` keeps the broadcast form, which below the ceiling
-    * saves the corpus-side shuffle entirely.
-    */
-  def lshTopKShuffled(embs: DataFrame, queryIds: Seq[Long], k: Int,
-      dim: Int = 64, bits: Int = 6, tables: Int = 8): DataFrame = {
-    val v = withNorm(embs)
-    val bucketed = v.select(col("vec_id"), col("v"), col("nrm"),
-      posexplode(graft.functions.LshBuckets(col("v"), dim, bits, tables))
-        .as(Seq("table", "bucket")))
-    val q = bucketed.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"),
-        col("table"), col("bucket"))
-    val candidates = bucketed.join(q.hint("shuffle_hash"), Seq("table", "bucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select("query_id", "vec_id", "v", "nrm", "qv", "qnrm")
-      .dropDuplicates("query_id", "vec_id")
-    val scored = candidates.withColumn("cos",
-      round(dot(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 6))
-    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "vec_id", "cos", "rank")
-  }
-
   /** Multi-probe sign-LSH top-k (Lv et al., VLDB'07, adapted to sign
     * LSH): each query probes its home bucket PLUS the `extraProbes`
     * buckets reached by flipping the query's lowest-|margin| planes —
@@ -220,30 +187,27 @@ object Similarity {
       .select("query_id", "vec_id", "cos", "rank")
   }
 
-  /** Hard ceiling on driver-resident k-means state: both IVF trainers
-    * collect nlist·dim centroid cells per Lloyd round (and build
-    * nlist-wide argmin column expressions), which is the deliberate
-    * small-model IVF shape — but unguarded it would OOM the driver (and
-    * melt codegen) at 100 TB-grade parameters (nlist ≥ 10⁵). 2²² cells
-    * ≈ 32 MB of doubles and a few-thousand-wide expression tree at
-    * dim 64 — comfortably inside both limits. Beyond it, keep the model
-    * DataFrame-resident: centroids as a (cid, pos, m) frame, assignment
-    * via a broadcast join + groupBy(vec_id) argmin instead of per-cell
-    * column literals, probing via the same join — nothing on the driver.
+  /** Hard ceiling on driver-resident k-means state: every Lloyd trainer
+    * here ([[ivfTopK]]'s and [[fpTrainCentroids]]) collects nlist·dim
+    * centroid cells per round and probes with nlist-wide per-query
+    * column expressions — the small-model IVF shape — so unguarded it
+    * would OOM the driver (and melt codegen) at 100 TB-grade parameters
+    * (nlist ≥ 10⁵). 2²² cells ≈ 32 MB of longs and a few-thousand-wide
+    * probe expression at dim 64 — comfortably inside both limits, and
+    * past every scheduled knob (SemDeDup's nlist tops out at 1024, PQ's
+    * ksub at 256). Out-of-range input fails fast, before any Lloyd round.
     */
   private[graft] val MaxDriverCentroidCells: Long = 1L << 22
 
   private def requireCentroidsFitDriver(nlist: Int, dim: Int): Unit =
     require(nlist.toLong * dim <= MaxDriverCentroidCells,
-      s"IVF driver-side k-means caps at nlist*dim <= $MaxDriverCentroidCells " +
-        s"cells (got ${nlist}x$dim = ${nlist.toLong * dim}); use a " +
-        "DataFrame-resident centroid model (broadcast-join assignment) " +
-        "beyond this — see MaxDriverCentroidCells scaladoc")
+      s"k-means model of nlist*dim = ${nlist}x$dim = ${nlist.toLong * dim} " +
+        s"cells exceeds the driver cap of $MaxDriverCentroidCells cells")
 
   /** (vec_id, v, q, nrm) projection shared by the fixed-point k-means
     * consumers: q = floor(component·10⁶) BIGINT micro-units.
     */
-  private[graft] def fpQuantized(embs: DataFrame): DataFrame =
+  private def fpQuantized(embs: DataFrame): DataFrame =
     embs.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("q", transform(col("v"), x => floor(x * 1e6).cast("long")))
       .withColumn("nrm", norm(col("v")))
@@ -273,21 +237,22 @@ object Similarity {
     * a codegen reference object, not a k·dim-literal expression tree,
     * so assignment cost is one tight primitive loop per row at ANY
     * nlist under the driver guard (the former array_position-over-
-    * score-literals form hit a codegen wall past nlist ≈ 32, which is
-    * what forced the crossJoin trainer at scheduled nlist).
+    * score-literals form hit a codegen wall past nlist ≈ 32).
     */
   private def fpCellCol(cs: Array[Array[Long]]): Column = fpCellColOn(col("q"), cs)
 
   private def fpCellColOn(q: Column, cs: Array[Array[Long]]): Column =
     graft.functions.CentroidArgMin(q, cs.map(_.clone()))
 
-  /** The fixed-point Lloyd trainer shared by [[ivfFixedPointTopK]] and
-    * [[semanticDedup]]: deterministic init (the `nlist` lowest vec_ids),
+  /** The fixed-point Lloyd trainer — the one behind [[ivfFixedPointTopK]],
+    * [[semanticDedup]], the PQ codebooks ([[pqTrain]]) and the IVFPQ
+    * coarse quantizer: deterministic init (the `nlist` lowest vec_ids),
     * integer argmin assignment, floor-of-double-mean updates — order-free
     * and bit-identical on any engine/partitioning. `v` must be the
-    * (cached) [[fpQuantized]] frame.
+    * (cached) [[fpQuantized]] frame. Models past
+    * [[MaxDriverCentroidCells]] are refused.
     */
-  private[graft] def fpTrainCentroids(v: DataFrame, nlist: Int, iters: Int): Array[Array[Long]] = {
+  private def fpTrainCentroids(v: DataFrame, nlist: Int, iters: Int): Array[Array[Long]] = {
     var cents: Array[Array[Long]] = v.orderBy("vec_id").limit(nlist)
       .select("q").collect().map(_.getSeq[Long](0).toArray)
     requireCentroidsFitDriver(nlist, cents.headOption.map(_.length).getOrElse(0))
@@ -304,6 +269,23 @@ object Similarity {
       cents = next
     }
     cents
+  }
+
+  /** Train the m per-subspace PQ codebooks off a cached [[fpQuantized]]
+    * frame; returns (subDim, codebooks). Shared by [[pqError]] and
+    * [[pqCodeDups]] so the two queries train bit-identically.
+    */
+  private def pqTrain(full: DataFrame, m: Int, ksub: Int,
+      iters: Int): (Int, Seq[Array[Array[Long]]]) = {
+    val dim = full.select(size(col("q")).as("d")).head().getAs[Int]("d")
+    require(dim % m == 0, s"dim $dim must split into $m equal subspaces")
+    requireCentroidsFitDriver(ksub, dim)
+    val sub = dim / m
+    (sub, (0 until m).map { s =>
+      fpTrainCentroids(
+        full.select(col("vec_id"), slice(col("q"), s * sub + 1, sub).as("q")),
+        ksub, iters)
+    })
   }
 
   /** Product-quantization codebook trainer + reconstruction-error
@@ -325,62 +307,6 @@ object Similarity {
     * training pulls ksub·(D/m) means per iter per subspace (bounded,
     * the IVF-centroid collect discipline).
     */
-  /** Train the m per-subspace PQ codebooks off a cached [[fpQuantized]]
-    * frame; returns (subDim, codebooks). Shared by [[pqError]] and
-    * [[pqCodeDups]] so the two queries train bit-identically.
-    */
-  private def pqTrain(full: DataFrame, m: Int, ksub: Int,
-      iters: Int): (Int, Seq[Array[Array[Long]]]) = {
-    val dim = full.select(size(col("q")).as("d")).head().getAs[Int]("d")
-    require(dim % m == 0, s"dim $dim must split into $m equal subspaces")
-    requireCentroidsFitDriver(ksub, dim)
-    val sub = dim / m
-    (sub, (0 until m).map { s =>
-      fpTrainCentroidsAuto(
-        full.select(col("vec_id"), slice(col("q"), s * sub + 1, sub).as("q")),
-        ksub, iters)
-    })
-  }
-
-  /** Trainer escalation shared by the PQ/IVFPQ chain and (via
-    * semanticDedupAuto's equivalent switch) SemDeDup: below
-    * [[DriverTrainerMaxNlist]] the driver-resident Lloyd loop wins (no
-    * per-round shuffle); past it the frame-resident
-    * [[fpTrainAssignDistributed]] loop trains — bit-identical fixed
-    * point (OpsSpec gates equality on a sliced subspace frame) — and
-    * only the FINISHED nlist-row model is collected, because the
-    * consumers here (PQ codebook literals, the coarse-quantizer argmin)
-    * are codegen'd column expressions over literal centroids. That
-    * materialization is what [[requireCentroidsFitDriver]] still
-    * guards: the 2²² ceiling is a driver-memory/codegen fact about the
-    * literal form, independent of which trainer produced the model.
-    * ksub in any real PQ is ≤ 256 (8-bit codes) and the coarse nlist
-    * grows as √n — both orders of magnitude inside the guard at 100 TB;
-    * a model past it keeps the frame form end-to-end
-    * ([[ivfFixedPointTopKDistributed]] / [[semanticDedupDistributed]]).
-    */
-  private[graft] def fpTrainCentroidsAuto(v: DataFrame, nlist: Int,
-      iters: Int): Array[Array[Long]] =
-    if (nlist <= DriverTrainerMaxNlist) fpTrainCentroids(v, nlist, iters)
-    else fpTrainCentroidsDistributed(v, nlist, iters)
-
-  /** The frame-resident trainer in the driver trainer's calling
-    * convention (finished model collected — bounded by the same 2²²
-    * cell guard its consumers enforce). Split out so OpsSpec can gate
-    * driver/frame bit-identity at ANY nlist, independent of where
-    * [[DriverTrainerMaxNlist]] sits.
-    */
-  private[graft] def fpTrainCentroidsDistributed(v: DataFrame, nlist: Int,
-      iters: Int): Array[Array[Long]] = {
-    val (assigned, cents) = fpTrainAssignDistributed(v, nlist, iters)
-    val out = cents.select("cid", "c").collect()
-      .sortBy(_.getAs[Int]("cid"))
-      .map(_.getSeq[Long](1).toArray)
-    assigned.unpersist(blocking = false)
-    cents.unpersist(blocking = false)
-    out
-  }
-
   def pqError(embs: DataFrame, m: Int = 4, ksub: Int = 8,
       iters: Int = 2): DataFrame = {
     val full = fpQuantized(embs).cache()
@@ -417,7 +343,8 @@ object Similarity {
     * generate-candidates-then-verify shape as every dedup path), then
     * candidates are verified by exact cosine ≥ threshold. Codebooks are
     * [[pqTrain]]'s — bit-identical to `emb_pq_error`'s, so the two
-    * queries gate each other. Cells hotter than `maxCellDf` vectors are
+    * queries gate each other (ksub·dim codebook cells stay under
+    * [[MaxDriverCentroidCells]]). Cells hotter than `maxCellDf` vectors are
     * dropped before the self-join (the containment stop-shingle guard;
     * Σdf² ≤ cap · n). Complements the sign-LSH candidate path: PQ cells
     * adapt to the data distribution where hyperplanes are oblivious.
@@ -471,8 +398,8 @@ object Similarity {
     * and indexed per candidate by its stored code: the per-candidate
     * work is m array lookups + adds, the plan is |Q|-independent, and
     * the corpus is touched only through the keyed `cid` join. Scale
-    * knobs are IVF's (nlist↑ with corpus; model frames past the driver
-    * guard → the frame-resident trainer).
+    * knobs are IVF's (nlist↑ with corpus); a coarse model past
+    * [[MaxDriverCentroidCells]] is refused by the trainer.
     *
     * Output: (query_id, vec_id, adist, rnk) — adist is the exact
     * integer ADC distance in micro-units², ties broken by vec_id.
@@ -481,7 +408,7 @@ object Similarity {
       nlist: Int = 8, nprobe: Int = 2, m: Int = 4, ksub: Int = 8,
       iters: Int = 2): DataFrame = {
     val full = fpQuantized(embs).cache()
-    val coarse = fpTrainCentroidsAuto(full, nlist, iters)
+    val coarse = fpTrainCentroids(full, nlist, iters)
     val (sub, books) = pqTrain(full, m, ksub, iters)
     val codeCols = (0 until m).map(s =>
       fpCellColOn(slice(col("q"), s * sub + 1, sub), books(s)))
@@ -525,6 +452,28 @@ object Similarity {
     topk
   }
 
+  /** The SemDeDup nlist schedule: hold the EXPECTED cluster size near
+    * `targetCluster` so the within-cluster pair volume stays
+    * ~n·targetCluster/2 (linear in n) instead of n²/const — the same
+    * corpus-scheduled-knob discipline as [[graft.ops.Dedup.lshSchedule]].
+    * Integer-exact on both engines: ceil-div via (n + t - 1) / t on
+    * non-negative BIGINTs (Java `/` truncates ≡ DuckDB `//` floors
+    * here), clamped to [4, 1024]. The 1024 top keeps the model at 2¹⁶
+    * cells at dim 64, far inside [[MaxDriverCentroidCells]]; past it
+    * clusters grow instead (measured at the 100× corpus, 200k vectors
+    * at nlist 1024: 9.7 s `dedup_semantic`).
+    */
+  def semDedupSchedule(n: Long, targetCluster: Int = 125): Int =
+    math.min(1024L, math.max(4L, (n + targetCluster - 1) / targetCluster)).toInt
+
+  /** Corpus-size-aware [[semanticDedup]] at [[semDedupSchedule]] knobs.
+    * The count() is one cheap driver action against columnar footers.
+    */
+  def semanticDedupAuto(embs: DataFrame, threshold: Double = 0.45,
+      targetCluster: Int = 125, iters: Int = 2): DataFrame =
+    semanticDedup(embs, threshold,
+      nlist = semDedupSchedule(embs.count(), targetCluster), iters = iters)
+
   /** Semantic deduplication (SemDeDup, Abbas et al., arXiv:2303.09540):
     * embeddings are k-means-clustered, then near-duplicate PAIRS are
     * searched only WITHIN each cluster — the clustering is what bounds
@@ -540,54 +489,8 @@ object Similarity {
     * Output: one row per cluster — (cid, n_vecs, n_dropped, n_kept) —
     * the dedup-rate readout per semantic region. The within-cluster
     * self-join is keyed on cid; at scale raise nlist so clusters stay
-    * O(target) and the join stays skew-free (nlist beyond the driver
-    * guard → train via [[ivfFixedPointTopKDistributed]]'s frame-resident
-    * loop, same escalation).
+    * O(target) and the join stays skew-free ([[semDedupSchedule]]).
     */
-  /** The SemDeDup nlist schedule: hold the EXPECTED cluster size near
-    * `targetCluster` so the within-cluster pair volume stays
-    * ~n·targetCluster/2 (linear in n) instead of n²/const — the same
-    * corpus-scheduled-knob discipline as [[graft.ops.Dedup.lshSchedule]].
-    * Integer-exact on both engines: ceil-div via (n + t - 1) / t on
-    * non-negative BIGINTs (Java `/` truncates ≡ DuckDB `//` floors
-    * here), clamped to [4, 1024]. The 1024 top is the declared-query
-    * comfort zone (65 k-wide codegen argmin at dim 64 stays inside the
-    * 2²² driver-centroid guard); past it, train via the frame-resident
-    * Lloyd loop.
-    */
-  def semDedupSchedule(n: Long, targetCluster: Int = 125): Int =
-    math.min(1024L, math.max(4L, (n + targetCluster - 1) / targetCluster)).toInt
-
-  /** Above this nlist the frame-resident trainer takes over. The old
-    * crossover (32 — the nlist-wide argmin EXPRESSION got slow, r8)
-    * died with [[graft.functions.CentroidArgMin]]: assignment is now a
-    * reference-object loop whose cost is the arithmetic itself, so the
-    * driver trainer wins everywhere its nlist·dim model fits the 2²²
-    * driver-memory guard (measured at the 100× probe corpus, 200k
-    * vectors × nlist 1024 × dim 64: crossJoin trainer 573 s total
-    * `dedup_semantic`, driver trainer 9.7 s). 4096·64 = 2¹⁸ cells
-    * keeps an order of magnitude of headroom under the guard; past it
-    * the frame-resident loop is the same fixed point (OpsSpec gates
-    * bit-identity), so the switch stays invisible to results and
-    * oracle.
-    */
-  private[graft] val DriverTrainerMaxNlist = 4096
-
-  /** Corpus-size-aware [[semanticDedup]] at [[semDedupSchedule]] knobs.
-    * The count() is one cheap driver action against columnar footers.
-    * The schedule also picks the TRAINER: past [[DriverTrainerMaxNlist]]
-    * the frame-resident Lloyd loop takes over (same fixed point, same
-    * results — the cost crossover is the only difference).
-    */
-  def semanticDedupAuto(embs: DataFrame, threshold: Double = 0.45,
-      targetCluster: Int = 125, iters: Int = 2): DataFrame = {
-    val nlist = semDedupSchedule(embs.count(), targetCluster)
-    if (nlist <= DriverTrainerMaxNlist)
-      semanticDedup(embs, threshold, nlist = nlist, iters = iters)
-    else
-      semanticDedupDistributed(embs, threshold, nlist = nlist, iters = iters)
-  }
-
   def semanticDedup(embs: DataFrame, threshold: Double = 0.45,
       nlist: Int = 16, iters: Int = 2): DataFrame = {
     val v = fpQuantized(embs).cache()
@@ -596,39 +499,8 @@ object Similarity {
       .select(col("cid").cast("long").as("cid"), col("vec_id"), col("v"), col("nrm"))
       .cache()
     v.unpersist(blocking = false)
-    val out = semanticAccounting(assigned, threshold).cache()
-    out.count()
-    assigned.unpersist(blocking = false)
-    out
-  }
-
-  /** [[semanticDedup]] past the driver-trainer ceiling — for nlist where
-    * the nlist-wide codegen argmin stops being cheap (measured: 56 s at
-    * nlist=160/20k vectors vs seconds via the frame-resident trainer)
-    * or past the 2²² centroid-cell guard entirely: training and
-    * assignment run [[fpTrainAssignDistributed]]'s broadcast-join Lloyd
-    * loop (bit-identical fixed point), the pair scan and accounting are
-    * the SAME code, so outputs equal [[semanticDedup]] row-for-row —
-    * gated in OpsSpec at fixture scale and 10×.
-    */
-  def semanticDedupDistributed(embs: DataFrame, threshold: Double = 0.45,
-      nlist: Int = 16, iters: Int = 2): DataFrame = {
-    val v = fpQuantized(embs).cache()
-    val (assigned0, cents) = fpTrainAssignDistributed(v, nlist, iters)
-    val assigned = assigned0
-      .select(col("cid").cast("long").as("cid"), col("vec_id"), col("v"), col("nrm"))
-    v.unpersist(blocking = false)
-    val out = semanticAccounting(assigned, threshold).cache()
-    out.count()
-    assigned0.unpersist(blocking = false)
-    cents.unpersist(blocking = false)
-    out
-  }
-
-  /** The shared SemDeDup tail: within-cluster pair scan (keyed on cid),
-    * greedy min-id drop, per-cluster survivor accounting.
-    */
-  private def semanticAccounting(assigned: DataFrame, threshold: Double): DataFrame = {
+    // within-cluster pair scan (keyed on cid), greedy min-id drop,
+    // per-cluster survivor accounting
     val l = assigned.select(col("cid"), col("vec_id").as("a"),
       col("v").as("va"), col("nrm").as("na"))
     val r = assigned.select(col("cid"), col("vec_id").as("b"),
@@ -639,13 +511,17 @@ object Similarity {
       .filter(col("cos") >= threshold)
       .select(col("cid"), col("b").as("vec_id")).distinct()
       .withColumn("drp", lit(1L))
-    assigned.select("cid", "vec_id")
+    val out = assigned.select("cid", "vec_id")
       .join(dropped, Seq("cid", "vec_id"), "left")
       .groupBy("cid")
       .agg(count(lit(1)).as("n_vecs"),
         sum(coalesce(col("drp"), lit(0L))).as("n_dropped"))
       .withColumn("n_kept", col("n_vecs") - col("n_dropped"))
       .orderBy("cid")
+      .cache()
+    out.count()
+    assigned.unpersist(blocking = false)
+    out
   }
 
   /** Fixed-point IVF ANN — the oracle-gated twin of [[ivfTopK]]: the
@@ -699,144 +575,6 @@ object Similarity {
     // pin it in executor storage for the session lifetime
     topk.count()
     assigned.unpersist(blocking = false)
-    topk
-  }
-
-  /** Integer assignment score of a row's q against a joined model row's
-    * (c, c2): c2 − 2·q·c — the frame-resident sibling of [[fpScoreCol]]
-    * (same per-row argmin order as squared L2, same codegen'd dot
-    * product; c2 = |c|² is computed once per centroid row on the
-    * nlist-sized model frame, never per corpus row).
-    */
-  private def fpQScore: Column =
-    col("c2") - lit(2L) * graft.functions.LongDotProduct(col("q"), col("c"))
-
-  /** The frame-resident fixed-point Lloyd trainer + final assignment
-    * shared by [[ivfFixedPointTopKDistributed]] and
-    * [[semanticDedupDistributed]] — the escape hatch past BOTH driver
-    * ceilings (the 2²² centroid-cell memory guard AND the nlist-wide
-    * codegen argmin expression, whose compile+eval cost grows with
-    * nlist; measured in SCALE.md round-8 close). Bit-identical to the
-    * driver trainer (same seed, argmin tie-break, sparse floor-mean
-    * update). `v` must be the cached [[fpQuantized]] frame; returns
-    * (assigned, cents), both cached — callers unpersist.
-    */
-  private def fpTrainAssignDistributed(v0: DataFrame, nlist: Int,
-      iters: Int): (DataFrame, DataFrame) = {
-    // Spread the vector frame across the cluster FIRST. The general
-    // single-split hazard (one row group → one task while 31 cores
-    // idle; measured here at 30×: one thread sort-spilling a 28.8M-row
-    // partition for 15+ min) is now fixed at the LOADER
-    // (Tables.rowGroupBoundTarget guarantees bytes-proportional scan
-    // splits), but the trainer keeps its own keyed repartition: its
-    // per-row work is rows×nlist×dims — super-proportional to input
-    // bytes — so a bytes-keyed split count still under-parallelizes a
-    // small-but-hot frame (10× embeddings: 3.3 MB → 1-3 byte-keyed
-    // splits vs 32 useful cores). One keyed repartition of the corpus
-    // is amortized over every training round.
-    val v = v0.repartition(col("vec_id"))
-    // init: cid i = the i-th lowest vec_id's vector, exactly the driver
-    // trainer's seed. The single-partition row_number window is over the
-    // nlist-row model frame, never the corpus.
-    // Per-round EAGER localCheckpoint, not cache(): cache materializes
-    // data but the ANALYZER still walks the full logical tree, and each
-    // round's model references the previous round's crossJoin — the
-    // plan compounds geometrically with iters (the Basket.scala:168
-    // plan-growth failure, rediscovered here by the first full-corpus
-    // 30× sweep: dedup_semantic's trainer sat 20+ min in single-core
-    // driver planning with 45 MB task binaries). localCheckpoint
-    // truncates lineage, so every round plans against a leaf.
-    var cents = v.orderBy("vec_id").limit(nlist)
-      .select(col("vec_id"), col("q").as("c"))
-      .withColumn("cid",
-        (row_number().over(Window.orderBy("vec_id")) - 1).cast("int"))
-      .select("cid", "c")
-      .withColumn("c2", aggregate(transform(col("c"), x => x * x), lit(0L), (s, x) => s + x))
-      .localCheckpoint(true)
-
-    def assignCids(): DataFrame =
-      v.select(col("vec_id"), col("q"))
-        .crossJoin(broadcast(cents))
-        .groupBy("vec_id")
-        .agg(min(struct(fpQScore.as("d"), col("cid"))).as("md"))
-        .select(col("vec_id"), col("md.cid").as("cid"))
-
-    for (_ <- 0 until iters) {
-      val means = assignCids()
-        .join(v.select(col("vec_id"), col("q")), "vec_id")
-        .select(col("cid"), posexplode(col("q")).as(Seq("pos", "x")))
-        .groupBy("cid", "pos")
-        .agg(floor(sum("x") / count(lit(1))).cast("long").as("m"))
-        .groupBy("cid")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          s => s.getField("m")).as("cnew"))
-      // cells that received no vectors keep their previous centroid —
-      // the driver trainer's sparse overwrite, as a left join
-      cents = cents.join(means, Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("cnew"), col("c")).as("c"))
-        .withColumn("c2", aggregate(transform(col("c"), x => x * x), lit(0L), (s, x) => s + x))
-        .localCheckpoint(true)
-    }
-
-    val assigned = v.join(assignCids(), "vec_id").cache()
-    (assigned, cents)
-  }
-
-  /** The DataFrame-resident IVF form the [[MaxDriverCentroidCells]]
-    * guard names — [[ivfFixedPointTopK]]'s escape hatch for 100 TB-grade
-    * models (nlist·dim > 2²² cells): the centroid model lives as a
-    * (cid, c, c2) frame end-to-end, assignment is a broadcast join of
-    * the model against the vectors with a groupBy(vec_id) integer argmin
-    * (min over (score, cid) structs — ties to the lowest cid, same as
-    * the driver trainer's first-minimum array_position), the centroid
-    * update is the same floor(sum/count) aggregate re-assembled into
-    * arrays, and probing ranks the model frame per query by
-    * (score, cell). Nothing model-sized ever reaches the driver, so
-    * there is no `require` ceiling. Arithmetic is the identical BIGINT
-    * micro-unit fixed point and score ordering equals distance ordering
-    * per row, so results are BIT-IDENTICAL to the driver-resident
-    * trainer — gated in OpsSpec at fixture scale and at 10× via the
-    * assume-gated cross-check.
-    *
-    * Cost shape vs the driver trainer: the argmin is a corpus×model
-    * broadcast-join shuffle per Lloyd round instead of an nlist-wide
-    * codegen'd column expression — slower at small nlist (the declared
-    * `sim_ann_ivf_exact` keeps the driver path), unbounded at large.
-    * Broadcast of the model frame holds to ~10⁷ cells; past that, add a
-    * coarse quantizer (IVF-in-IVF) or flip the assignment join to
-    * shuffle-hash on a bucketed cid prefix — the same escalation every
-    * billion-scale IVF library applies.
-    */
-  def ivfFixedPointTopKDistributed(embs: DataFrame, queryIds: Seq[Long],
-      k: Int, nlist: Int = 8, nprobe: Int = 2, iters: Int = 2): DataFrame = {
-    val v = fpQuantized(embs).cache()
-    val qdist = fpQScore
-    val (assigned, cents) = fpTrainAssignDistributed(v, nlist, iters)
-    v.unpersist(blocking = false)
-    // nprobe nearest cells per query: the few query rows × the model
-    // frame, ranked by (dist, cell) — the same tie-break as the driver
-    // path's slice(array_sort(...))
-    val wProbe = Window.partitionBy("query_id").orderBy(col("d"), col("cid"))
-    val probes = assigned.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("q"),
-        col("v").as("qv"), col("nrm").as("qnrm"))
-      .crossJoin(broadcast(cents))
-      .withColumn("d", qdist)
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= nprobe)
-      .select(col("query_id"), col("qv"), col("qnrm"), col("cid"))
-    val perQuery = assigned.join(broadcast(probes), Seq("cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos", round(dot(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 6))
-      .select("query_id", "vec_id", "cos")
-    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("vec_id"))
-    val topk = perQuery.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "vec_id", "cos", "rank")
-      .cache()
-    topk.count()
-    assigned.unpersist(blocking = false)
-    cents.unpersist(blocking = false)
     topk
   }
 

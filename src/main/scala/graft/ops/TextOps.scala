@@ -33,20 +33,15 @@ object TextOps {
 
   /** Whitespace-collapsed, lowercased canonical text. Runs as the
     * fused one-pass byte scan ([[graft.functions.NormalizeWsExpr]]);
-    * [[normalizedBuiltin]] is the regex chain it replaces, spec-gated
-    * byte-equal (the Linkage.canonical discipline — this projection
-    * feeds the exact-dup fingerprint of every dedup/funnel path, so
-    * its regex NFA pass was a per-query constant across the family).
+    * `Reference.normalizedBuiltin` (test sources) is the regex chain it
+    * replaces, spec-gated byte-equal (the Linkage.canonical discipline —
+    * this projection feeds the exact-dup fingerprint of every
+    * dedup/funnel path, so its regex NFA pass was a per-query constant
+    * across the family).
     * The DuckDB oracle keeps the regex formulation.
     */
   def normalized(text: Column): Column =
     graft.functions.NormalizeWsExpr(text)
-
-  /** The composed built-in chain [[normalized]] fuses — the semantics
-    * reference for the spec gate.
-    */
-  private[graft] def normalizedBuiltin(text: Column): Column =
-    trim(regexp_replace(lower(text), "\\s+", " "))
 
   /** MD5 fingerprint of the normalized text — the exact-dup key. */
   def fingerprint(text: Column): Column = md5(normalized(text))

@@ -75,7 +75,6 @@ object ScaleProbe {
     val probes: Seq[(String, () => DataFrame)] = Seq(
       "containment_direct" -> (() => graft.ops.Dedup.containmentPairs(docs)),
       "containment_sched" -> (() => graft.ops.Dedup.containmentPairsAuto(docs)),
-      "containment_prefix" -> (() => graft.ops.Dedup.containmentPairsPrefixed(docs)),
       // fused codegen'd PII scanner vs the 6-expression built-in chain
       // it replaced (round-9): same rows (OpsSpec), cost is the measure
       "pii_fused" -> (() => graft.ops.TextOps.piiScrub(docs)),
@@ -218,25 +217,15 @@ object ScaleProbe {
       "clusters_pairs_only" -> (() => graft.ops.Dedup.minhashPairs(docs)),
       "clusters_full" -> (() =>
         graft.ops.Dedup.duplicateClusters(graft.ops.Dedup.minhashPairs(docs))),
-      // IVF trainer forms side by side (same params as sim_ann_ivf_exact):
-      // driver-resident centroid literals vs the DataFrame-resident
-      // broadcast-join model — bit-identical results, different cost class
+      // fixed-point IVF at sim_ann_ivf_exact's params, and SemDeDup's
+      // Lloyd trainer across nlist
       "ivf_driver" -> (() => graft.ops.Similarity.ivfFixedPointTopK(
         embs, queryIds = Seq(0L, 1L, 2L), k = 10)),
-      "ivf_distributed" -> (() => graft.ops.Similarity.ivfFixedPointTopKDistributed(
-        embs, queryIds = Seq(0L, 1L, 2L), k = 10)),
-      // SemDeDup trainer forms across nlist: the driver trainer's
-      // nlist-wide codegen argmin vs the frame-resident broadcast-join
-      // loop — picks the declared path per nlist regime
       "semdedup_n16_driver" -> (() => graft.ops.Similarity.semanticDedup(
         embs, 0.45, nlist = 16)),
       "semdedup_n64_driver" -> (() => graft.ops.Similarity.semanticDedup(
         embs, 0.45, nlist = 64)),
       "semdedup_n160_driver" -> (() => graft.ops.Similarity.semanticDedup(
-        embs, 0.45, nlist = 160)),
-      "semdedup_n64_frame" -> (() => graft.ops.Similarity.semanticDedupDistributed(
-        embs, 0.45, nlist = 64)),
-      "semdedup_n160_frame" -> (() => graft.ops.Similarity.semanticDedupDistributed(
         embs, 0.45, nlist = 160)),
       // canonical-dedup cost decomposition (dedup_canonical at 100×
       // reads ~13× dedup_exact on the same docs): the full operator,

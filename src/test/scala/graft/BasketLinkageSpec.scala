@@ -213,9 +213,9 @@ class BasketLinkageSpec extends SparkSpecBase {
       .toDF("doc_id", "text")
     val both = rows.select(
       Linkage.canonical(col("text")).as("fused"),
-      Linkage.canonicalBuiltin(col("text")).as("builtin"),
+      Reference.canonicalBuiltin(col("text")).as("builtin"),
       graft.ops.TextOps.normalized(col("text")).as("nfused"),
-      graft.ops.TextOps.normalizedBuiltin(col("text")).as("nbuiltin"))
+      Reference.normalizedBuiltin(col("text")).as("nbuiltin"))
     assert(both.filter(col("fused") =!= col("builtin")
         || col("fused").isNull =!= col("builtin").isNull).count() == 0)
     // normalized() keeps non-[a-z0-9 ] chars, so the unicode rows gate

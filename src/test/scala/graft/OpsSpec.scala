@@ -246,52 +246,10 @@ class OpsSpec extends SparkSpecBase {
         maxShingleDf = Dedup.containmentSchedule(n))))
   }
 
-  test("PQ trainer escalation: frame-resident codebook equals the driver codebook on a sliced subspace frame") {
-    // past DriverTrainerMaxNlist, pqTrain/ivfPqTopK switch to the
-    // frame-resident Lloyd loop; the two trainers must agree
-    // BIT-FOR-BIT on the same sliced frame or the PQ queries would
-    // silently drift when a corpus crosses the switch. Gated via the
-    // explicit distributed entry point at a fixture-sized nlist — the
-    // switch constant (4096 since r12) is past the fixture's row count,
-    // so the equality, not the constant, is what the spec pins.
-    val nlist = 40
-    val full = Similarity.fpQuantized(embs).cache()
-    val sliced = full.select(col("vec_id"), slice(col("q"), 1, 16).as("q")).cache()
-    sliced.count()
-    val driver = Similarity.fpTrainCentroids(sliced, nlist, 2).map(_.toSeq).toSeq
-    val auto = Similarity.fpTrainCentroidsDistributed(sliced, nlist, 2).map(_.toSeq).toSeq
-    sliced.unpersist(blocking = false)
-    full.unpersist(blocking = false)
-    assert(auto.size == nlist)
-    assert(auto == driver, "frame-resident codebook diverges from the driver trainer")
-  }
-
-  test("prefix-filtered containment is lossless (same pairs as the direct join)") {
-    // the PPJoin-style rarest-prefix probe claims completeness: any pair
-    // at containment >= t shares a df-ascending prefix shingle of its
-    // smaller side — check exact equivalence against the direct capped
-    // join on a real corpus slice (planted quote included)
-    import spark.implicits._
-    val base = graft.api.Tables.documents(spark, dir).select("doc_id", "text")
-      .filter(col("doc_id") < 300)
-    val quote = Seq((9100L,
-      base.filter(col("doc_id") === 0L).head().getString(1)
-        .split("\\s+").take(12).mkString(" "))).toDF("doc_id", "text")
-    val docs = base.unionByName(quote)
-    def key(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"),
-        r.getAs[Double]("containment"), r.getAs[Long]("contained_id"))).toSet
-    val direct = key(Dedup.containmentPairs(docs, threshold = 0.5))
-    val prefixed = key(Dedup.containmentPairsPrefixed(docs, threshold = 0.5))
-    assert(direct.nonEmpty, "fixture produced no containment pairs")
-    assert(direct == prefixed,
-      s"prefix variant diverges: direct-only=${direct -- prefixed} prefix-only=${prefixed -- direct}")
-  }
-
   test("LSH-bucketed embedding near-dups: precision 1 vs brute force, recall measured") {
     def pairsOf(df: DataFrame) =
       df.collect().map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"))).toSet
-    val exact = pairsOf(Dedup.embeddingNearDupsExact(embs, 0.45))
+    val exact = pairsOf(Reference.embeddingNearDupsExact(embs, 0.45))
     val lsh = pairsOf(Dedup.embeddingNearDups(embs, 0.45))
     assert(exact.nonEmpty)
     assert(lsh.subsetOf(exact), "LSH path reported a pair below threshold")
@@ -321,7 +279,7 @@ class OpsSpec extends SparkSpecBase {
     def pairsOf(df: DataFrame) =
       df.collect().map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"))).toSet
     val auto = pairsOf(Dedup.embeddingNearDupsAuto(embs, 0.45))
-    val exact = pairsOf(Dedup.embeddingNearDupsExact(embs, 0.45))
+    val exact = pairsOf(Reference.embeddingNearDupsExact(embs, 0.45))
     assert(auto.nonEmpty && auto.subsetOf(exact))
     // at the fixture's n (< targetBucket * 2^6) the schedule must not
     // exceed the small-corpus default, so recall is >= the fixed-knob
@@ -361,7 +319,7 @@ class OpsSpec extends SparkSpecBase {
     val (m, ksub) = Dedup.pqSchedule(n)
     val pq = pairsOf(Similarity.pqCodeDups(corpus, m, ksub, iters = 2,
       threshold = 0.45))
-    val exact = pairsOf(Dedup.embeddingNearDupsExact(corpus, 0.45))
+    val exact = pairsOf(Reference.embeddingNearDupsExact(corpus, 0.45))
     val expected = (0L until 10L).map(i => (i, i + 900000L)).toSet
     assert(expected.subsetOf(lsh), s"LSH missed ${expected -- lsh}")
     assert(expected.subsetOf(pq), s"PQ missed ${expected -- pq}")
@@ -409,44 +367,18 @@ class OpsSpec extends SparkSpecBase {
 
   test("IVF trainers refuse driver-side k-means past the centroid cap") {
     // 70000 cells/list x 64 dims = 4.48M cells > MaxDriverCentroidCells
-    // (2^22): both trainers must fail fast with the guard message, not
-    // start Lloyd rounds
-    val e1 = intercept[IllegalArgumentException](
-      Similarity.ivfTopK(embs, Seq(0L), k = 5, nlist = 70000))
-    assert(e1.getMessage.contains("DataFrame-resident"))
-    val e2 = intercept[IllegalArgumentException](
-      Similarity.ivfFixedPointTopK(embs, Seq(0L), k = 5, nlist = 70000))
-    assert(e2.getMessage.contains("DataFrame-resident"))
-  }
-
-  test("DataFrame-resident IVF is bit-identical to the driver-resident trainer") {
-    // the escape hatch past MaxDriverCentroidCells must reproduce the
-    // driver trainer's result EXACTLY: same BIGINT fixed point, same
-    // argmin/probe tie-breaks, so any divergence is a semantics bug in
-    // the distributed assignment or the sparse centroid update
-    val qids = Seq(0L, 1L, 2L, 3L, 4L)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"),
-        r.getAs[Double]("cos"), r.getAs[Int]("rank"))).toSet
-    val driver = rows(Similarity.ivfFixedPointTopK(embs, qids, k = 5))
-    val dist = rows(Similarity.ivfFixedPointTopKDistributed(embs, qids, k = 5))
-    assert(driver.nonEmpty)
-    assert(dist == driver,
-      s"diverge: extra=${(dist -- driver).take(3)} missing=${(driver -- dist).take(3)}")
-  }
-
-  test("DataFrame-resident IVF matches the driver trainer at 10x (needs /tmp/sf1h)") {
-    assume(new java.io.File("/tmp/sf1h/embeddings.parquet").exists)
-    val e10 = spark.read.parquet("/tmp/sf1h/embeddings.parquet")
-    val qids = Seq(0L, 1L, 2L)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"),
-        r.getAs[Double]("cos"), r.getAs[Int]("rank"))).toSet
-    val driver = rows(Similarity.ivfFixedPointTopK(e10, qids, k = 10))
-    val dist = rows(Similarity.ivfFixedPointTopKDistributed(e10, qids, k = 10))
-    assert(driver.nonEmpty)
-    assert(dist == driver,
-      s"diverge at 10x: extra=${(dist -- driver).take(3)} missing=${(driver -- dist).take(3)}")
+    // (2^22): every trainer — including IVFPQ's coarse quantizer — must
+    // fail fast with the guard message naming the cap and the model
+    // size, not start Lloyd rounds
+    def guarded(run: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](run)
+      assert(e.getMessage.contains(
+        "nlist*dim = 70000x64 = 4480000 cells exceeds the driver cap of " +
+          s"${Similarity.MaxDriverCentroidCells} cells"), e.getMessage)
+    }
+    guarded(Similarity.ivfTopK(embs, Seq(0L), k = 5, nlist = 70000))
+    guarded(Similarity.ivfFixedPointTopK(embs, Seq(0L), k = 5, nlist = 70000))
+    guarded(Similarity.ivfPqTopK(embs, Seq(0L), nlist = 70000))
   }
 
   test("fixed-point IVF recall is substantial and reruns are bit-identical") {
@@ -480,67 +412,6 @@ class OpsSpec extends SparkSpecBase {
     assert(first.forall { case (src, fb) => fb <= src })
   }
 
-  test("shuffled incremental dedup matches the broadcast form and never broadcasts") {
-    // the §100× escape hatch for a broadcast-too-big ingest batch: same
-    // band construction, same cap, same aggregate — only the join
-    // strategy differs, so outputs must be row-for-row identical
-    val batch = docs.filter(col("doc_id") < 20)
-      .withColumn("doc_id", col("doc_id") + 500000)
-      .withColumn("text", concat(col("text"), lit(" drifted tail")))
-    def rows(df: DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("batch_id"), r.getAs[Long]("n_corpus_dups"),
-        r.getAs[Long]("first_dup"))).toSet
-    val bcast = Dedup.crossCorpusMatches(docs, batch)
-    val shuf = Dedup.crossCorpusMatchesShuffled(docs, batch)
-    assert(rows(bcast).nonEmpty)
-    assert(rows(shuf) == rows(bcast))
-    val plan = shuf.queryExecution.executedPlan.toString
-    assert(plan.contains("ShuffledHashJoin"), s"expected shuffle-hash join:\n$plan")
-    assert(!plan.contains("BroadcastHashJoin"),
-      s"escape hatch must not broadcast either side:\n$plan")
-  }
-
-  test("shuffled LSH top-k matches the broadcast form and never broadcasts") {
-    val qids = Seq(0L, 1L, 2L, 3L, 4L)
-    def rows(df: DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"),
-        r.getAs[Double]("cos"), r.getAs[Int]("rank"))).toSet
-    val bcast = Similarity.lshTopK(embs, qids, k = 5)
-    val shuf = Similarity.lshTopKShuffled(embs, qids, k = 5)
-    assert(rows(bcast).nonEmpty)
-    assert(rows(shuf) == rows(bcast))
-    val plan = shuf.queryExecution.executedPlan.toString
-    assert(plan.contains("ShuffledHashJoin"), s"expected shuffle-hash join:\n$plan")
-    assert(!plan.contains("BroadcastHashJoin"),
-      s"escape hatch must not broadcast either side:\n$plan")
-  }
-
-  test("escape hatches match their broadcast twins at 10x (needs /tmp/sf1h)") {
-    assume(new java.io.File("/tmp/sf1h/documents.parquet").exists &&
-      new java.io.File("/tmp/sf1h/embeddings.parquet").exists)
-    val d10 = spark.read.parquet("/tmp/sf1h/documents.parquet")
-    val batch = d10.filter(col("doc_id") < 2000)
-      .withColumn("doc_id", col("doc_id") + 5000000)
-      .withColumn("text", concat(col("text"), lit(" drifted tail")))
-    def drows(df: DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("batch_id"), r.getAs[Long]("n_corpus_dups"),
-        r.getAs[Long]("first_dup"))).toSet
-    assert(drows(Dedup.crossCorpusMatchesShuffled(d10, batch)) ==
-      drows(Dedup.crossCorpusMatches(d10, batch)))
-    val e10 = spark.read.parquet("/tmp/sf1h/embeddings.parquet")
-    val qids = Seq(0L, 1L, 2L)
-    def erows(df: DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"),
-        r.getAs[Double]("cos"), r.getAs[Int]("rank"))).toSet
-    assert(erows(Similarity.lshTopKShuffled(e10, qids, k = 10)) ==
-      erows(Similarity.lshTopK(e10, qids, k = 10)))
-    // semantic dedup trainer switch: frame-resident == driver at a
-    // past-crossover nlist on the 10x corpus
-    assert(Similarity.semanticDedupDistributed(e10, 0.45, nlist = 64)
-      .collect().toSeq ==
-      Similarity.semanticDedup(e10, 0.45, nlist = 64).collect().toSeq)
-  }
-
   test("semDedup schedule clamps and the auto form replays it exactly") {
     assert(Similarity.semDedupSchedule(0) == 4)
     assert(Similarity.semDedupSchedule(200) == 4)
@@ -551,11 +422,6 @@ class OpsSpec extends SparkSpecBase {
     val manual = Similarity.semanticDedup(embs, 0.45,
       nlist = Similarity.semDedupSchedule(embs.count())).collect().toSeq
     assert(auto == manual && auto.nonEmpty)
-    // the frame-resident trainer the schedule switches to past
-    // DriverTrainerMaxNlist must reproduce the driver trainer exactly
-    val dist = Similarity.semanticDedupDistributed(embs, 0.45,
-      nlist = Similarity.semDedupSchedule(embs.count())).collect().toSeq
-    assert(dist == manual)
   }
 
   test("semantic dedup drops a planted exact-duplicate embedding") {
