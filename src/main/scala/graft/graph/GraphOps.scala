@@ -175,9 +175,12 @@ object GraphOps {
     val names = triples.select(col("subj").as("name"))
       .union(triples.select(col("obj").as("name")))
       .distinct()
-    connectedComponents(
-        triples.select(xxhash64(col("subj")).as("src"), xxhash64(col("obj")).as("dst")))
-      .join(names, col("node") === xxhash64(col("name")))
+    // the labels are broadcast for the reason connectedComponents gives:
+    // left to the size estimates, this join may plan with two shuffled
+    // branches, whose codegen stages AQE numbers in finish order
+    val labels = connectedComponents(
+      triples.select(xxhash64(col("subj")).as("src"), xxhash64(col("obj")).as("dst")))
+    names.join(broadcast(labels), xxhash64(col("name")) === col("node"))
       .groupBy("component")
       .agg(min("name").as("label"), count(lit(1)).as("n"))
       .select(col("label").as("component"), col("n"))

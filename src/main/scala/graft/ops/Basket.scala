@@ -1,7 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Market-basket / co-occurrence-graph operators over the order lines:
   * association rules (support / confidence / lift) and triangle counting
@@ -232,54 +238,111 @@ object Basket {
   }
 
   /** Weighted single-source shortest paths over the support-pruned
-    * co-order graph by `rounds` Bellman-Ford relaxations: edge cost
-    * 10⁶ div n_both (stronger co-purchase = cheaper hop), seed = the
+    * co-order graph by at most `rounds` Bellman-Ford relaxations: edge
+    * cost 10⁶ div n_both (stronger co-purchase = cheaper hop), seed = the
     * highest-degree node (ties → smallest id; the min-id seed landed in
     * a 2-node component at sf0.1). Exact for all paths of ≤ rounds
     * hops — the same declared-rounds contract as [[kCore]] (the spec
-    * asserts the corpus fixpoint lands within them), and the same
-    * per-round localCheckpoint lineage truncation.
+    * asserts the corpus fixpoint lands within them).
     *
-    * Scale shape: the edge frame (both orientations, one aggregate) is
-    * checkpointed once; each round broadcasts the distance frame
-    * (≤ |nodes| rows, never edge-sized), streams the edge checkpoint
-    * through one broadcast hash join with no exchange on the edge side,
-    * and min-aggregates — nothing wider than |nodes| + |edges|. The
-    * broadcast is a hint, not an AQE decision, so every round plans the
-    * same join with the same build side and compiles the same
-    * generated classes (round 1 included: the seed frame has the round
-    * output's schema); the per-round checkpoint restarts codegen stage
-    * numbering, so rounds 2..n compile nothing.
+    * Round shape (active-set Bellman-Ford, the GraphX superstep
+    * restricted to active vertices): the both-orientation edge set is
+    * partitioned on `src` and laid out once as per-partition sorted
+    * adjacency arrays ([[SsspPartition]]), persisted by the first job
+    * over it and unpersisted on exit. Distances live in a driver map.
+    * Each round broadcasts only the nodes whose distance fell in the
+    * previous round (the seed in round 1), and one `mapPartitions` +
+    * collect returns each partition's per-`dst` minimum offer, which the
+    * driver merges.
+    * A node that did not fall already offered its current distance, so
+    * skipping it changes nothing: after r rounds the map equals plain
+    * Bellman-Ford after r rounds. The loop stops after `rounds` rounds
+    * or on the first round that lowers no distance, where plain
+    * Bellman-Ford has reached its fixpoint.
+    *
+    * Jobs: the edge build's, one for the seed (it also materializes the
+    * layout) and one per executed round. The rounds are RDD closures
+    * over primitive arrays, so no round generates a class; the top-k
+    * by (dist, node) comes back as a local frame of (node: the
+    * co-order node type, dist: BIGINT not null).
+    *
+    * Scale shape: the driver map holds at most the reached nodes, the
+    * bound the former per-round broadcast of the whole distance frame
+    * already put on the driver. A round probes, per partition, each
+    * edge-list source against the active set or each active node
+    * against the sources, whichever side is smaller — never wider than
+    * a hash join of the edges with the active set.
     */
   def ssspWeighted(lineitem: DataFrame, rounds: Int = 5,
       minSupport: Int = 2, k: Int = 20): DataFrame = {
-    val w = expr("1000000L div n_both")
-    val e = coOrderEdges(lineitem, minSupport)
-      .select(explode(array(
-        struct(col("pa").as("src"), col("pb").as("dst"), w.as("w")),
-        struct(col("pb").as("src"), col("pa").as("dst"), w.as("w")))).as("e"))
-      .select("e.src", "e.dst", "e.w")
-      .localCheckpoint(true)
-    var d = e.groupBy("src").agg(count(lit(1)).as("deg"))
-      .orderBy(desc("deg"), asc("src")).limit(1)
-      .select(col("src").as("node"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      // each joined edge offers its dst the relaxed distance and re-offers
-      // its src the current one: every node of `d` is the src of an edge
-      // (the frame holds both orientations), so this keeps `d` without a
-      // union of the two frames, and the partial min folds the repeats
-      d = broadcast(d).join(e, d("node") === e("src"))
-        .select(explode(array(
-          struct(e("dst").as("node"), (d("dist") + e("w")).as("dist")),
-          struct(e("src").as("node"), d("dist").as("dist")))).as("r"))
-        .groupBy(col("r.node").as("node"))
-        // min over a non-empty group of non-null distances is never
-        // null; the coalesce keeps `dist` non-nullable like the seed's
-        .agg(coalesce(min("r.dist"), lit(0L)).as("dist"))
-        .localCheckpoint(true)
+    val e0 = coOrderEdges(lineitem, minSupport)
+    val node = e0.schema("pa")
+    val out: Long => Any = node.dataType match {
+      case LongType => identity
+      case IntegerType => _.toInt
+      case t => throw new IllegalArgumentException(s"co-order node type $t is not BIGINT or INT")
     }
-    d.orderBy("dist", "node").limit(k)
+    val laid = ssspEdges(e0)
+    val dist = try relaxFromDensest(laid, rounds) finally laid.unpersist(blocking = false)
+    val top = dist.toArray.sortBy { case (v, d) => (d, v) }.take(k)
+      .map { case (v, d) => Row(out(v), d) }
+    lineitem.sparkSession.createDataFrame(java.util.Arrays.asList(top: _*),
+      StructType(Seq(node.copy(name = "node"), StructField("dist", LongType, nullable = false))))
+  }
+
+  /** [[ssspWeighted]]'s edge layout: both orientations of the co-order
+    * edges `e0` with cost 10⁶ div n_both, hash-partitioned on `src` and
+    * sorted within partitions, one [[SsspPartition]] per partition.
+    * Persisted, so the first job over it stores it; callers unpersist
+    * it.
+    */
+  private[graft] def ssspEdges(e0: DataFrame): RDD[SsspPartition] = {
+    val w = expr("1000000L div n_both")
+    val pa = col("pa").cast("long")
+    val pb = col("pb").cast("long")
+    e0.select(explode(array(
+        struct(pa.as("src"), pb.as("dst"), w.as("w")),
+        struct(pb.as("src"), pa.as("dst"), w.as("w")))).as("e"))
+      .select("e.src", "e.dst", "e.w")
+      .repartition(col("src"))
+      .sortWithinPartitions("src")
+      .queryExecution.toRdd
+      .mapPartitions(rows => Iterator.single(SsspPartition(rows)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** Distances from the highest-degree node of `laid` after at most
+    * `rounds` active-set relaxations (see [[ssspWeighted]]); empty when
+    * the graph has no edge.
+    */
+  private def relaxFromDensest(laid: RDD[SsspPartition],
+      rounds: Int): mutable.LongMap[Long] = {
+    val sc = laid.sparkContext
+    val dist = mutable.LongMap.empty[Long]
+    // every src of a partition lives in that partition only, so its
+    // local degree is its degree
+    val seeds = laid.flatMap(_.densest).collect()
+    if (seeds.nonEmpty) {
+      val seed = seeds.minBy { case (deg, v) => (-deg, v) }._2
+      dist(seed) = 0L
+      var active = Array(seed)
+      var round = 0
+      while (round < rounds && active.nonEmpty) {
+        round += 1
+        val at = sc.broadcast((active, active.map(dist)))
+        val offers = try laid.map(_.relax(at.value._1, at.value._2)).collect()
+          finally at.destroy()
+        val fell = mutable.LongMap.empty[Unit]
+        for ((dsts, ds) <- offers; i <- dsts.indices) {
+          if (ds(i) < dist.getOrElse(dsts(i), Long.MaxValue)) {
+            dist(dsts(i)) = ds(i)
+            fell(dsts(i)) = ()
+          }
+        }
+        active = fell.keys.toArray.sorted
+      }
+    }
+    dist
   }
 
   /** HITS hubs/authorities (Kleinberg, JACM'99) on the customer–part
@@ -380,5 +443,74 @@ object Basket {
       .orderBy(desc("n_members"), asc("lbl")).limit(k)
       .select(col("lbl").cast("long").as("community"),
         col("n_members").cast("long").as("n_members"))
+  }
+}
+
+/** One partition of [[Basket.ssspWeighted]]'s edge layout: `srcs` sorted
+  * and distinct, src i's edges at indices [from(i), from(i + 1)) of
+  * `dst` and `w`.
+  */
+private[graft] final case class SsspPartition(srcs: Array[Long], from: Array[Int],
+    dst: Array[Long], w: Array[Long]) {
+
+  /** (degree, src) of this partition's highest-degree src, ties to the
+    * smallest; none when the partition is empty.
+    */
+  def densest: Option[(Int, Long)] =
+    if (srcs.isEmpty) None
+    else Some(srcs.indices.map(i => (from(i + 1) - from(i), srcs(i)))
+      .minBy { case (deg, v) => (-deg, v) })
+
+  /** Per-dst minimum of dist(src) + w over the edges whose src is in
+    * `nodes` (sorted, with distances `ds`), as parallel arrays. Probes
+    * the smaller of the two sorted sides against the larger.
+    */
+  def relax(nodes: Array[Long], ds: Array[Long]): (Array[Long], Array[Long]) = {
+    val best = mutable.LongMap.empty[Long]
+    def offer(i: Int, d: Long): Unit = {
+      var j = from(i)
+      while (j < from(i + 1)) {
+        val o = d + w(j)
+        if (o < best.getOrElse(dst(j), Long.MaxValue)) best(dst(j)) = o
+        j += 1
+      }
+    }
+    if (nodes.length < srcs.length) {
+      for (a <- nodes.indices) {
+        val i = java.util.Arrays.binarySearch(srcs, nodes(a))
+        if (i >= 0) offer(i, ds(a))
+      }
+    } else {
+      for (i <- srcs.indices) {
+        val a = java.util.Arrays.binarySearch(nodes, srcs(i))
+        if (a >= 0) offer(i, ds(a))
+      }
+    }
+    val (vs, os) = (new Array[Long](best.size), new Array[Long](best.size))
+    var n = 0
+    best.foreachEntry { (v, o) => vs(n) = v; os(n) = o; n += 1 }
+    (vs, os)
+  }
+}
+
+private[graft] object SsspPartition {
+  /** Lays out (src, dst, w) BIGINT rows sorted on src. */
+  def apply(rows: Iterator[InternalRow]): SsspPartition = {
+    val srcs, dst, w = mutable.ArrayBuilder.make[Long]
+    val from = mutable.ArrayBuilder.make[Int]
+    var n = 0
+    var last = 0L
+    rows.foreach { r =>
+      if (n == 0 || r.getLong(0) != last) {
+        last = r.getLong(0)
+        srcs += last
+        from += n
+      }
+      dst += r.getLong(1)
+      w += r.getLong(2)
+      n += 1
+    }
+    from += n
+    SsspPartition(srcs.result(), from.result(), dst.result(), w.result())
   }
 }

@@ -212,6 +212,20 @@ object Similarity {
       .withColumn("q", transform(col("v"), x => floor(x * 1e6).cast("long")))
       .withColumn("nrm", norm(col("v")))
 
+  /** `body` over the cached [[fpQuantized]] frame of `embs` and its
+    * vector dimension; the frame is unpersisted when `body` returns or
+    * throws. The dimension is read off the first row (0 when empty)
+    * before the frame is cached: one job of one task, so a model past
+    * [[MaxDriverCentroidCells]] is refused before any pass over the
+    * corpus.
+    */
+  private def withQuantized[T](embs: DataFrame)(body: (DataFrame, Int) => T): T = {
+    val v = fpQuantized(embs)
+    val dim = v.select(size(col("q"))).take(1).headOption.map(_.getInt(0)).getOrElse(0)
+    v.cache()
+    try body(v, dim) finally v.unpersist(blocking = false)
+  }
+
   /** Integer assignment SCORE of col("q") against a literal centroid:
     * |c|² − 2·q·c, with the dot product a codegen'd primitive loop
     * (graft.functions.LongDotProduct) and |c|² folded on the driver.
@@ -249,13 +263,14 @@ object Similarity {
     * coarse quantizer: deterministic init (the `nlist` lowest vec_ids),
     * integer argmin assignment, floor-of-double-mean updates — order-free
     * and bit-identical on any engine/partitioning. `v` must be the
-    * (cached) [[fpQuantized]] frame. Models past
-    * [[MaxDriverCentroidCells]] are refused.
+    * (cached) [[fpQuantized]] frame of `dim`-long vectors. Models past
+    * [[MaxDriverCentroidCells]] are refused before the seed collect.
     */
-  private def fpTrainCentroids(v: DataFrame, nlist: Int, iters: Int): Array[Array[Long]] = {
+  private def fpTrainCentroids(v: DataFrame, nlist: Int, dim: Int,
+      iters: Int): Array[Array[Long]] = {
+    requireCentroidsFitDriver(nlist, dim)
     var cents: Array[Array[Long]] = v.orderBy("vec_id").limit(nlist)
       .select("q").collect().map(_.getSeq[Long](0).toArray)
-    requireCentroidsFitDriver(nlist, cents.headOption.map(_.length).getOrElse(0))
     for (_ <- 0 until iters) {
       val means = v.withColumn("cid", fpCellCol(cents))
         .select(col("cid"), posexplode(col("q")).as(Seq("pos", "x")))
@@ -272,19 +287,19 @@ object Similarity {
   }
 
   /** Train the m per-subspace PQ codebooks off a cached [[fpQuantized]]
-    * frame; returns (subDim, codebooks). Shared by [[pqError]] and
-    * [[pqCodeDups]] so the two queries train bit-identically.
+    * frame of `dim`-long vectors; returns (subDim, codebooks). Shared by
+    * [[pqError]] and [[pqCodeDups]] so the two queries train
+    * bit-identically.
     */
-  private def pqTrain(full: DataFrame, m: Int, ksub: Int,
+  private def pqTrain(full: DataFrame, dim: Int, m: Int, ksub: Int,
       iters: Int): (Int, Seq[Array[Array[Long]]]) = {
-    val dim = full.select(size(col("q")).as("d")).head().getAs[Int]("d")
     require(dim % m == 0, s"dim $dim must split into $m equal subspaces")
     requireCentroidsFitDriver(ksub, dim)
     val sub = dim / m
     (sub, (0 until m).map { s =>
       fpTrainCentroids(
         full.select(col("vec_id"), slice(col("q"), s * sub + 1, sub).as("q")),
-        ksub, iters)
+        ksub, sub, iters)
     })
   }
 
@@ -309,31 +324,31 @@ object Similarity {
     */
   def pqError(embs: DataFrame, m: Int = 4, ksub: Int = 8,
       iters: Int = 2): DataFrame = {
-    val full = fpQuantized(embs).cache()
-    val (sub, books) = pqTrain(full, m, ksub, iters)
-    val parts = (0 until m).map { s =>
-      val vs = full.select(col("vec_id"), slice(col("q"), s * sub + 1, sub).as("q"))
-      val cents = books(s)
-      val cArr = array(cents.toIndexedSeq.map(c =>
-        array(c.toIndexedSeq.map(lit): _*)): _*)
-      vs.withColumn("cid", fpCellCol(cents))
-        .withColumn("c", element_at(cArr, col("cid") + 1))
-        .select(lit(s.toLong).as("subspace"),
-          expr("aggregate(zip_with(q, c, (x, y) -> abs(x - y)), " +
-            "cast(0 as bigint), (a, e) -> a + e)").as("err"))
+    withQuantized(embs) { (full, dim) =>
+      val (sub, books) = pqTrain(full, dim, m, ksub, iters)
+      val parts = (0 until m).map { s =>
+        val vs = full.select(col("vec_id"), slice(col("q"), s * sub + 1, sub).as("q"))
+        val cents = books(s)
+        val cArr = array(cents.toIndexedSeq.map(c =>
+          array(c.toIndexedSeq.map(lit): _*)): _*)
+        vs.withColumn("cid", fpCellCol(cents))
+          .withColumn("c", element_at(cArr, col("cid") + 1))
+          .select(lit(s.toLong).as("subspace"),
+            expr("aggregate(zip_with(q, c, (x, y) -> abs(x - y)), " +
+              "cast(0 as bigint), (a, e) -> a + e)").as("err"))
+      }
+      val out = parts.reduce(_ unionByName _)
+        .groupBy("subspace")
+        .agg(count(lit(1)).as("n_vecs"),
+          expr(s"sum(err) div (count(*) * $sub)").as("mean_abs_err_x1e6"),
+          max("err").as("max_vec_err_x1e6"))
+        .orderBy("subspace")
+        .cache()
+      // materialize the m-row report, then release the per-vector cache
+      // (same lifetime discipline as ivfFixedPointTopK)
+      out.count()
+      out
     }
-    val out = parts.reduce(_ unionByName _)
-      .groupBy("subspace")
-      .agg(count(lit(1)).as("n_vecs"),
-        expr(s"sum(err) div (count(*) * $sub)").as("mean_abs_err_x1e6"),
-        max("err").as("max_vec_err_x1e6"))
-      .orderBy("subspace")
-      .cache()
-    // materialize the m-row report, then release the per-vector cache
-    // (same lifetime discipline as ivfFixedPointTopK)
-    out.count()
-    full.unpersist(blocking = false)
-    out
   }
 
   /** Embedding near-dup pairs by PQ-CODE COLLISION — the FAISS-style
@@ -354,31 +369,31 @@ object Similarity {
   def pqCodeDups(embs: DataFrame, m: Int = 4, ksub: Int = 8,
       iters: Int = 2, threshold: Double = 0.45,
       maxCellDf: Int = graft.ops.Dedup.DefaultBandCap): DataFrame = {
-    val full = fpQuantized(embs).cache()
-    val (sub, books) = pqTrain(full, m, ksub, iters)
-    val codeCols = (0 until m).map(s =>
-      fpCellColOn(slice(col("q"), s * sub + 1, sub), books(s)))
-    val coded0 = full.select(col("vec_id"), col("v"), col("nrm"),
-      array(codeCols: _*).as("code"))
-    val coded =
-      if (maxCellDf <= 0) coded0
-      else coded0
-        .withColumn("df", count(lit(1)).over(Window.partitionBy("code")))
-        .filter(col("df") <= maxCellDf)
-        .drop("df")
-    val l = coded.select(col("code"), col("vec_id").as("a"),
-      col("v").as("va"), col("nrm").as("na"))
-    val r = coded.select(col("code"), col("vec_id").as("b"),
-      col("v").as("vb"), col("nrm").as("nb"))
-    val out = l.join(r, "code")
-      .filter(col("a") < col("b"))
-      .withColumn("cos", round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6))
-      .filter(col("cos") >= threshold)
-      .select("a", "b", "cos")
-      .cache()
-    out.count()
-    full.unpersist(blocking = false)
-    out
+    withQuantized(embs) { (full, dim) =>
+      val (sub, books) = pqTrain(full, dim, m, ksub, iters)
+      val codeCols = (0 until m).map(s =>
+        fpCellColOn(slice(col("q"), s * sub + 1, sub), books(s)))
+      val coded0 = full.select(col("vec_id"), col("v"), col("nrm"),
+        array(codeCols: _*).as("code"))
+      val coded =
+        if (maxCellDf <= 0) coded0
+        else coded0
+          .withColumn("df", count(lit(1)).over(Window.partitionBy("code")))
+          .filter(col("df") <= maxCellDf)
+          .drop("df")
+      val l = coded.select(col("code"), col("vec_id").as("a"),
+        col("v").as("va"), col("nrm").as("na"))
+      val r = coded.select(col("code"), col("vec_id").as("b"),
+        col("v").as("vb"), col("nrm").as("nb"))
+      val out = l.join(r, "code")
+        .filter(col("a") < col("b"))
+        .withColumn("cos", round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6))
+        .filter(col("cos") >= threshold)
+        .select("a", "b", "cos")
+        .cache()
+      out.count()
+      out
+    }
   }
 
   /** IVFPQ ANN search (Jégou et al. TPAMI 2011, the FAISS IndexIVFPQ
@@ -407,49 +422,49 @@ object Similarity {
   def ivfPqTopK(embs: DataFrame, queryIds: Seq[Long], k: Int = 10,
       nlist: Int = 8, nprobe: Int = 2, m: Int = 4, ksub: Int = 8,
       iters: Int = 2): DataFrame = {
-    val full = fpQuantized(embs).cache()
-    val coarse = fpTrainCentroids(full, nlist, iters)
-    val (sub, books) = pqTrain(full, m, ksub, iters)
-    val codeCols = (0 until m).map(s =>
-      fpCellColOn(slice(col("q"), s * sub + 1, sub), books(s)))
-    val assigned = full
-      .withColumn("cid", fpCellCol(coarse))
-      .withColumn("code", array(codeCols: _*))
-      .cache()
-    val distStructs = array(coarse.zipWithIndex.map { case (c, i) =>
-      struct(fpScoreCol(c).as("d"), lit(i).as("cell"))
-    }.toIndexedSeq: _*)
-    // LUT[s][j] = score(q_s, cb_s[j]) = |cb|² − 2·q_s·cb; adding the
-    // per-query constant Σ_s |q_s|² = |q|² turns scores into TRUE
-    // squared distances, which the oracle computes directly
-    val lutCol = array((0 until m).map(s =>
-      array((0 until ksub).map(j =>
-        fpScoreColOn(slice(col("q"), s * sub + 1, sub), books(s)(j))): _*)): _*)
-    val probes = assigned.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), lutCol.as("lut"),
-        graft.functions.LongDotProduct(col("q"), col("q")).as("q2"),
-        explode(slice(array_sort(distStructs), 1, nprobe)).as("p"))
-      .select(col("query_id"), col("lut"), col("q2"), col("p.cell").as("cid"))
-    val adist = (0 until m).map(s =>
-        element_at(element_at(col("lut"), s + 1), element_at(col("code"), s + 1) + 1))
-      .reduce(_ + _) + col("q2")
-    val perQuery = assigned.join(broadcast(probes), Seq("cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adist", adist)
-      .select("query_id", "vec_id", "adist")
-    val w = Window.partitionBy("query_id").orderBy(asc("adist"), asc("vec_id"))
-    val topk = perQuery.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id"), col("adist"),
-        col("rnk").cast("int").as("rnk"))
-      .cache()
-    // materialize BEFORE releasing `full`: `assigned`'s lazy cache reads
-    // the fpQuantized projection, so unpersisting full earlier (as r8
-    // did) recomputed it uncached inside the timed action
-    topk.count()
-    full.unpersist(blocking = false)
-    assigned.unpersist(blocking = false)
-    topk
+    withQuantized(embs) { (full, dim) =>
+      val coarse = fpTrainCentroids(full, nlist, dim, iters)
+      val (sub, books) = pqTrain(full, dim, m, ksub, iters)
+      val codeCols = (0 until m).map(s =>
+        fpCellColOn(slice(col("q"), s * sub + 1, sub), books(s)))
+      val assigned = full
+        .withColumn("cid", fpCellCol(coarse))
+        .withColumn("code", array(codeCols: _*))
+        .cache()
+      val distStructs = array(coarse.zipWithIndex.map { case (c, i) =>
+        struct(fpScoreCol(c).as("d"), lit(i).as("cell"))
+      }.toIndexedSeq: _*)
+      // LUT[s][j] = score(q_s, cb_s[j]) = |cb|² − 2·q_s·cb; adding the
+      // per-query constant Σ_s |q_s|² = |q|² turns scores into TRUE
+      // squared distances, which the oracle computes directly
+      val lutCol = array((0 until m).map(s =>
+        array((0 until ksub).map(j =>
+          fpScoreColOn(slice(col("q"), s * sub + 1, sub), books(s)(j))): _*)): _*)
+      val probes = assigned.filter(col("vec_id").isin(queryIds: _*))
+        .select(col("vec_id").as("query_id"), lutCol.as("lut"),
+          graft.functions.LongDotProduct(col("q"), col("q")).as("q2"),
+          explode(slice(array_sort(distStructs), 1, nprobe)).as("p"))
+        .select(col("query_id"), col("lut"), col("q2"), col("p.cell").as("cid"))
+      val adist = (0 until m).map(s =>
+          element_at(element_at(col("lut"), s + 1), element_at(col("code"), s + 1) + 1))
+        .reduce(_ + _) + col("q2")
+      val perQuery = assigned.join(broadcast(probes), Seq("cid"))
+        .filter(col("vec_id") =!= col("query_id"))
+        .withColumn("adist", adist)
+        .select("query_id", "vec_id", "adist")
+      val w = Window.partitionBy("query_id").orderBy(asc("adist"), asc("vec_id"))
+      val topk = perQuery.withColumn("rnk", row_number().over(w))
+        .filter(col("rnk") <= k)
+        .select(col("query_id"), col("vec_id"), col("adist"),
+          col("rnk").cast("int").as("rnk"))
+        .cache()
+      // materialize BEFORE releasing `full`: `assigned`'s lazy cache reads
+      // the fpQuantized projection, so unpersisting full earlier (as r8
+      // did) recomputed it uncached inside the timed action
+      topk.count()
+      assigned.unpersist(blocking = false)
+      topk
+    }
   }
 
   /** The SemDeDup nlist schedule: hold the EXPECTED cluster size near
@@ -493,12 +508,10 @@ object Similarity {
     */
   def semanticDedup(embs: DataFrame, threshold: Double = 0.45,
       nlist: Int = 16, iters: Int = 2): DataFrame = {
-    val v = fpQuantized(embs).cache()
-    val cents = fpTrainCentroids(v, nlist, iters)
-    val assigned = v.withColumn("cid", fpCellCol(cents))
+    val cents = withQuantized(embs)((v, dim) => fpTrainCentroids(v, nlist, dim, iters))
+    val assigned = fpQuantized(embs).withColumn("cid", fpCellCol(cents))
       .select(col("cid").cast("long").as("cid"), col("vec_id"), col("v"), col("nrm"))
       .cache()
-    v.unpersist(blocking = false)
     // within-cluster pair scan (keyed on cid), greedy min-id drop,
     // per-cluster survivor accounting
     val l = assigned.select(col("cid"), col("vec_id").as("a"),
@@ -538,14 +551,12 @@ object Similarity {
     */
   def ivfFixedPointTopK(embs: DataFrame, queryIds: Seq[Long], k: Int,
       nlist: Int = 8, nprobe: Int = 2, iters: Int = 2): DataFrame = {
-    val v = fpQuantized(embs).cache()
     def distCol(c: Array[Long]): Column = fpScoreCol(c)
     def cellCol(cs: Array[Array[Long]]): Column = fpCellCol(cs)
 
-    val cents = fpTrainCentroids(v, nlist, iters)
+    val cents = withQuantized(embs)((v, dim) => fpTrainCentroids(v, nlist, dim, iters))
 
-    val assigned = v.withColumn("cid", cellCol(cents)).cache()
-    v.unpersist(blocking = false)
+    val assigned = fpQuantized(embs).withColumn("cid", cellCol(cents)).cache()
     // nprobe nearest cells per query as a pure column expression — sort
     // (dist, cell) structs and slice; ties break to the lowest cell,
     // mirroring the oracle's ORDER BY dist, cell. The query set stays a

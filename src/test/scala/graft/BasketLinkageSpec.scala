@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.ops.{Basket, Linkage, Selection}
 
@@ -100,6 +102,87 @@ class BasketLinkageSpec extends SparkSpecBase {
     val at5 = Basket.ssspWeighted(corpus, rounds = 5).collect().toSeq
     val at6 = Basket.ssspWeighted(corpus, rounds = 6).collect().toSeq
     assert(at5 == at6, "one more relaxation changed the top-20 distances")
+  }
+
+  /** The co-order edges of `li` as (pa, pb, 10⁶ div n_both). */
+  private def weightedEdges(li: DataFrame, minSupport: Int) =
+    Basket.coOrderEdges(li, minSupport).collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), 1000000L / r.getLong(2)))
+
+  test("weighted SSSP equals plain Bellman-Ford truncated at the round count on random graphs") {
+    // a hub (part 1000) with 20 spokes outranks every other node's
+    // degree, so it is the seed; a path 1000-2001-...-2008 hangs off it,
+    // so node 200j is j hops out; random orders over the spokes and
+    // parts 3000+ add weighted shortcuts, ties (costs 10⁶ div 1, 2, 3)
+    // and, over parts 4000+, a component the seed never reaches
+    for (seed <- 1 to 50) {
+      val rnd = new scala.util.Random(seed)
+      var order = 0L
+      def bought(parts: Seq[Long], times: Int): Seq[(Long, Long)] =
+        (1 to times).flatMap { _ => order += 1; parts.map(p => (order, p)) }
+      val spokes = (1001L to 1020L)
+      val star = spokes.flatMap(p => bought(Seq(1000L, p), 2 + rnd.nextInt(2)))
+      val path = (1000L +: (2001L to 2008L)).sliding(2)
+        .flatMap(p => bought(p, 2 + rnd.nextInt(2))).toSeq
+      val mesh = (1 to 6).flatMap { _ =>
+        val pool = spokes ++ (3000L until 3008L)
+        bought(Seq.fill(2 + rnd.nextInt(2))(pool(rnd.nextInt(pool.size))).distinct,
+          1 + rnd.nextInt(3))
+      }
+      val apart = (1 to 3).flatMap { _ =>
+        bought(Seq(4000L + rnd.nextInt(4), 4004L + rnd.nextInt(4)), 2)
+      }
+      val li = (star ++ path ++ mesh ++ apart).toDF("l_orderkey", "l_partkey")
+      val rounds = 1 + rnd.nextInt(6)
+      val minSupport = 1 + rnd.nextInt(2)
+      val ref = Reference.bellmanFord(weightedEdges(li, minSupport), rounds)
+      val got = Basket.ssspWeighted(li, rounds, minSupport, k = 1000)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == ref, s"graph $seed, $rounds rounds, support $minSupport")
+      // the path is reached exactly `rounds` hops deep, at the sum of its costs
+      val onPath = got.keySet.filter(v => v > 2000L && v < 3000L)
+      assert(onPath == (2001L to 2000L + math.min(rounds, 8)).toSet,
+        s"graph $seed, $rounds rounds: path nodes $onPath")
+      assert(!got.keySet.exists(_ >= 4000L), s"graph $seed reached the other component")
+      // top-k breaks ties on dist by node
+      val top = Basket.ssspWeighted(li, rounds, minSupport, k = 7)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(top == ref.toSeq.sortBy { case (v, d) => (d, v) }.take(7), s"graph $seed top-7")
+    }
+  }
+
+  test("weighted SSSP runs one job per executed round and stops at the fixpoint") {
+    val li = graft.api.Tables.lineitem(spark, "/root/testdata/sf0.001")
+    val edges = weightedEdges(li, 2)
+    // the last round that lowers a distance; the active-set loop runs one
+    // more to see nothing fall
+    val fix = (0 to 50).find(r =>
+      Reference.bellmanFord(edges, r) == Reference.bellmanFord(edges, r + 1)).get
+    var laid: org.apache.spark.rdd.RDD[graft.ops.SsspPartition] = null
+    val build = jobsRunBy { laid = Basket.ssspEdges(Basket.coOrderEdges(li, 2)) }
+    laid.unpersist(blocking = true)
+    val jobs = Seq(1, 3, 5, 50).map(r => r -> jobsRunBy(Basket.ssspWeighted(li, rounds = r)))
+    // edge build + the seed + one per executed round
+    assert(jobs == Seq(1, 3, 5, 50).map(r => r -> (build + 1 + math.min(r, fix + 1))),
+      s"edge build $build jobs, fixpoint after round $fix: $jobs")
+    assert(fix + 1 < 50, s"corpus fixpoint after round $fix")
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    Basket.ssspWeighted(li, rounds = 2)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
+      "the edge layout stayed persisted")
+  }
+
+  test("weighted SSSP keeps its schema: node of the co-order node type, dist BIGINT not null") {
+    val li = graft.api.Tables.lineitem(spark, "/root/testdata/sf0.001")
+    val d = Basket.ssspWeighted(li)
+    val node = Basket.coOrderEdges(li).schema("pa")
+    assert(d.schema == StructType(Seq(node.copy(name = "node"),
+      StructField("dist", LongType, nullable = false))), d.schema.treeString)
+    val ints = li.select(col("l_orderkey"), col("l_partkey").cast("int").as("l_partkey"))
+    val di = Basket.ssspWeighted(ints)
+    assert(di.schema("node").dataType == IntegerType)
+    assert(di.collect().map(r => (r.getInt(0).toLong, r.getLong(1))).toSeq ==
+      d.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
   }
 
   test("chi-square statistic matches a hand-computed 2x2 table") {

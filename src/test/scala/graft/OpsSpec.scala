@@ -381,6 +381,23 @@ class OpsSpec extends SparkSpecBase {
     guarded(Similarity.ivfPqTopK(embs, Seq(0L), nlist = 70000))
   }
 
+  test("a past-cap fixed-point IVF call is refused after one one-task job and persists nothing") {
+    // the vector dimension is a property of the rows (an array column), so
+    // the refusal reads one row; no seed sort, collect or Lloyd round runs
+    val e0 = embs
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    var err: IllegalArgumentException = null
+    val jobs = jobsStartedBy {
+      err = intercept[IllegalArgumentException](
+        Similarity.ivfFixedPointTopK(e0, Seq(0L), k = 5, nlist = 70000))
+    }
+    assert(err.getMessage.contains(s"exceeds the driver cap of ${Similarity.MaxDriverCentroidCells}"),
+      err.getMessage)
+    assert(jobs.map(_.stageInfos.map(_.numTasks).sum) == Seq(1),
+      s"tasks per job: ${jobs.map(_.stageInfos.map(_.numTasks))}")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
+  }
+
   test("fixed-point IVF recall is substantial and reruns are bit-identical") {
     val qids = Seq(0L, 1L, 2L, 3L, 4L)
     val exact = Similarity.bruteForceTopK(embs, qids, k = 5).collect()

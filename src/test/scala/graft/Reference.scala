@@ -36,4 +36,25 @@ object Reference {
       .filter(col("cos") >= threshold)
       .select("a", "b", "cos")
   }
+
+  /** Plain Bellman-Ford on the undirected weighted `edges` (a, b, w):
+    * the seed is the highest-degree node (ties → smallest), and every
+    * reached node re-offers its distance in each of the `rounds` rounds —
+    * no active set, no early stop. The truncation semantics
+    * `Basket.ssspWeighted` must reproduce: node → shortest distance over
+    * paths of ≤ rounds hops.
+    */
+  def bellmanFord(edges: Seq[(Long, Long, Long)], rounds: Int): Map[Long, Long] = {
+    val both = edges.flatMap { case (a, b, w) => Seq((a, b, w), (b, a, w)) }
+    if (both.isEmpty) Map.empty
+    else {
+      val seed = both.groupBy(_._1).toSeq
+        .map { case (v, es) => (es.size, v) }
+        .minBy { case (deg, v) => (-deg, v) }._2
+      (1 to rounds).foldLeft(Map(seed -> 0L)) { (d, _) =>
+        val offers = both.collect { case (a, b, w) if d.contains(a) => (b, d(a) + w) }
+        (d.toSeq ++ offers).groupBy(_._1).map { case (v, ds) => v -> ds.map(_._2).min }
+      }
+    }
+  }
 }

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,6 +14,38 @@ trait SparkSpecBase extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Spark jobs that `body` starts on this thread. A marker job in its own
+    * group runs afterwards: listener events arrive in order, so once the
+    * marker's start is seen every job of `body` has been counted.
+    */
+  def jobsStartedBy(body: => Unit): Seq[SparkListenerJobStart] = {
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID}"
+    val marker = s"$group-marker"
+    val counted = new ConcurrentLinkedQueue[SparkListenerJobStart]
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => counted.add(e)
+          case `marker` => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job never reached the listener")
+      counted.asScala.toSeq
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The number of [[jobsStartedBy]] `body`. */
+  def jobsRunBy(body: => Unit): Int = jobsStartedBy(body).size
 }
 
 object SparkSpecBase {

@@ -1,11 +1,10 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.lit
 
 import graft.engine.Engine
@@ -433,35 +432,6 @@ class TripleStoreSpec extends SparkSpecBase {
   }
 
   // ---- relation reuse: freshness, coherence, concurrency, zero jobs ----
-
-  /** Spark jobs that `body` starts on this thread. A marker job in its own
-    * group runs afterwards: listener events arrive in order, so once the
-    * marker's start is seen every job of `body` has been counted.
-    */
-  def jobsRunBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"counted-${java.util.UUID.randomUUID}"
-    val marker = s"$group-marker"
-    val counted = new AtomicInteger
-    val markerSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => counted.incrementAndGet()
-          case `marker` => markerSeen.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job never reached the listener")
-      counted.get
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("the fixed store schema equals the schema parquet infers for a written store") {
     val st = loaded()
